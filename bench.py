@@ -4,24 +4,17 @@ and prints ONE JSON line:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 Methodology (stated explicitly so deltas are attributable — see
-BENCH_NOTES.md):
-- WARM_PYTHON queries run once untimed first. They cover every Python
-  execution shape (mapInPandas, applyInPandas, scalar/grouped-agg
-  pandas_udf, Python UDTF, applyInPandasWithState) because the Python
-  worker pool forks + imports numpy/pandas lazily per shape on first
-  use — round 2's driver bench showed that cold-start (measured 40 s
-  for a 64-task Arrow stage on a contended VM) landing inside the timed
-  pass of whichever Python query ran first.
-- STAGED_READS queries stage their own on-disk input once per process
-  (scratch.py); the warm-up performs the stage so the timed pass
-  measures the read path. Their timings are therefore read-side only —
-  the JSON carries them under "staged_reads" so nobody mistakes a
-  staging change for an engine speedup.
-- SHARED_INTERMEDIATE queries reuse a session-memoized persisted
-  intermediate (cache.py: packed GEMM grid, shingle hashes, IVF
-  centroids). The warm-up populates the memo; their timed numbers
-  measure the downstream compute, and the JSON carries them under
-  "shared_intermediate".
+BENCH_NOTES.md): before the timed pass, every query carrying a warm-up
+tag (``@query(..., tags=...)``, defined at ``registry.WARM_TAGS``) runs
+once untimed, one phase per tag: ``python`` (Python worker pool, forked
+lazily per execution shape — round 2's driver bench showed a 40 s
+cold start landing inside the timed pass of whichever Python query ran
+first), ``stream`` (micro-batch engine), ``staged`` (scratch.py input
+staged once per process) and ``memo`` (cache.py session memos). The
+timings of staged and memo queries are therefore read-side and
+downstream-compute only; the JSON lists them under "staged_reads" and
+"shared_intermediate" so nobody mistakes a staging or memo change for
+an engine speedup.
 """
 
 from __future__ import annotations
@@ -31,150 +24,29 @@ import os
 import sys
 import time
 
-WARM_PYTHON = (
-    # (round 11: sim_ann_ivf and dedup_near_minhash left this list —
-    # their cross-engine rewrites are pure JVM; their memos warm via
-    # SHARED_INTERMEDIATE)
-    "sim_cosine_topk",  # mapInPandas + packed-grid memo
-    "udf_scalar_pandas",  # scalar pandas_udf
-    "udaf_grouped_agg",  # grouped-agg pandas_udf
-    "udtf_apply_in_pandas",  # applyInPandas
-    "udtf_python_lateral",  # Python UDTF
-    "multimodal_decode",  # mapInPandas over binary payloads
-    "stream_demo_stateful",  # applyInPandasWithState
-)
-
-# queries that run a REAL bounded micro-batch stream internally and
-# return a batch snapshot: the session's first stream pays micro-batch
-# engine + state-store + (for the stateful one) Arrow-state worker
-# init. Warm each untimed so driver rounds time plans, not first-use
-# machinery (VERDICT r5 item 5).
-WARM_STREAMING = (
-    "stream_demo_foreachbatch_merge",
-    "stream_demo_rate_source",
-    "stream_demo_stream_join",
-    "stream_demo_session",
-)
-
-STAGED_READS = (
-    "source_csv",
-    "source_json",
-    "source_orc",
-    "source_text",
-    "source_schema_evolution",
-    "sink_parquet",
-    "sink_partitioned",
-    "etl_incremental",
-    "etl_partition_overwrite",
-    "scan_corrupt_records",
-    "pipeline_daily_etl",
-    "join_bucketed",
-    # stages the analyzed catalog star once (saveAsTable + ANALYZE);
-    # the timed pass then measures the CBO-planned query, not the ETL
-    "plan_cbo_multiway",
-    # stage the month-partitioned fact / Z-clustered layout once; the
-    # timed pass measures the DPP join / bucket rollup, not the sink
-    "join_dpp_partitioned",
-    "etl_zorder_clustering",
-    "etl_incremental_rollup_merge",
-    "etl_compact_small_files",
-    # stages the per-shard sketch parquet once; the timed pass measures
-    # the rollup read+merge — the pass a 100 TB consumer actually runs
-    "sketch_kll_partitioned_rollup",
-)
-
-SHARED_INTERMEDIATE = (
-    "sim_cosine_topk",
-    "sim_knn_per_query",
-    "dedup_embedding_cosine",
-    "dedup_embedding_ann",
-    "dedup_near_minhash",
-    "dedup_simhash",
-    "dedup_ngram_jaccard",
-    "text_contamination_check",
-    "sim_ann_ivf",
-    "dedup_cluster_keeper",
-    "basket_brand_pairs_lift",
-    # round 8: memoized k-means fit + BM25 scored frame (cache.py)
-    "cluster_kmeans_lloyd",
-    "dedup_semantic_cluster",
-    "cluster_silhouette",
-    "text_bm25_rank",
-    "ml_ndcg_retrieval",
-    "sim_rrf_fusion",
-    # round 10: memoized detector RESULT frames (ngram pairs, fuzzy
-    # pairs — VERDICT r9 item 2) and the cross-engine shingle-key /
-    # pair frames the recall queries share
-    "dedup_fuzzy_levenshtein",
-    "dedup_consensus",
-    "dedup_minhash_recall",
-    "dedup_simhash_recall",
-    "sim_ann_recall",
-    # round 10b: the PQ distance frame (codes + query LUTs) is a
-    # cached_df memo shared by the exhaustive and IVF-bounded scans —
-    # timed numbers measure each scan's own ranking pass
-    "sim_pq_adc",
-    "sim_pq_ivf_adc",
-    # round 10b: the 4-round BPE training pipeline (cached_value) is
-    # shared by the merge-table and encoder queries
-    "text_bpe_train_merges",
-    "text_bpe_encode",
-    # round 10c: the banding sweep folds all four geometries from the
-    # memoized 32-min signature frame (shared with dedup_minhash_recall)
-    "dedup_minhash_param_sweep",
-    # round 10d: the funnel's near-dup stage reads the memoized
-    # cross-engine shingle/pair frames (its truth set)
-    "pipeline_dedup_funnel",
-    # round 10e: the nprobe sweep reads the memoized PQ distance frame
-    # and Lloyd fit (its exhaustive ground truth + quantizer)
-    "sim_ivf_nprobe_sweep",
-    # round 11: the histogram reads the memoized cross-engine pair
-    # frame; the radius sweep reads the packed-GEMM exact top-5; the
-    # compression readout reads the memoized BPE pipeline
-    "dedup_jaccard_histogram",
-    "sim_lsh_radius_sweep",
-    "text_bpe_compression_by_lang",
-    "corpus_dedup_survivorship",
-    # round 12: the truth-pair catch-flag frame (round10_ops) is a
-    # cached_df memo shared by sim_ann_recall and the churn split; the
-    # SemDeDup sweep and the IVF load report read the memoized Lloyd fit
-    "ann_recall_under_churn",
-    "dedup_semdedup_eps",
-    "ann_ivf_imbalance",
-)
-
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
     from python_etl_sample_spark.api import queries
+    from python_etl_sample_spark.registry import REGISTRY, WARM_TAGS
     from python_etl_sample_spark.session import get_spark
 
     spark = get_spark("python-etl-sample-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     qs = queries()
+    warm = {t: [n for n, s in REGISTRY.items() if t in s.tags] for t in WARM_TAGS}
     # JVM + parquet-footer warm-up
     qs["agg_groupby"](spark, sf_dir).collect()
-    # Python-worker-pool warm-up, one query per execution shape
-    for name in WARM_PYTHON:
-        df = qs[name](spark, sf_dir)
-        if not df.isStreaming:
-            df.count()
-    # micro-batch engine warm-up (bounded real streams, batch results)
-    for name in WARM_STREAMING:
-        df = qs[name](spark, sf_dir)
-        if not df.isStreaming:
-            df.count()
-    # scratch staging (stage-once per process) for round-trip queries
-    for name in STAGED_READS:
-        qs[name](spark, sf_dir).count()
-    # session-memo warm-up: build every shared persisted intermediate
-    # (cache.py) outside the timed pass — these queries' timings measure
-    # their downstream compute and are labeled in the JSON
-    for name in SHARED_INTERMEDIATE:
-        qs[name](spark, sf_dir).count()
+    # untimed warm-up phases in WARM_TAGS order: Python worker pool,
+    # micro-batch engine, scratch staging, session memos (cache.py)
+    for tag in WARM_TAGS:
+        for name in warm[tag]:
+            df = qs[name](spark, sf_dir)
+            if not df.isStreaming:
+                df.count()
 
     # ambient-load sentinel (VERDICT r10 item 4): time one fixed
     # trivial query immediately before and after the timed pass. A
@@ -218,8 +90,8 @@ def main() -> int:
                 "queries": timings,
                 "sf": sf_val,
                 "skipped_streaming": skipped,
-                "staged_reads": sorted(set(STAGED_READS) & set(timings)),
-                "shared_intermediate": sorted(set(SHARED_INTERMEDIATE) & set(timings)),
+                "staged_reads": sorted(set(warm["staged"]) & set(timings)),
+                "shared_intermediate": sorted(set(warm["memo"]) & set(timings)),
                 "sentinel_query": "scan_projected",
                 "sentinel_start_sec": sentinel_start,
                 "sentinel_end_sec": sentinel_end,

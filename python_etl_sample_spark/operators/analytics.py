@@ -217,6 +217,7 @@ def join_skew_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE o.o_orderstatus = 'F'
     GROUP BY l.l_orderkey, o.o_totalprice
     """,
+    tags=("staged",),
 )
 def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shuffle-free co-located join: lineitem and orders both bucketed

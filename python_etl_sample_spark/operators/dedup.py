@@ -129,6 +129,7 @@ _MH_BAND_LONG_SQL = "\n      UNION ALL ".join(
     JOIN xsizes sb ON sb.doc_id = c.doc_b
     WHERE n_inter / (sa.n + sb.n - n_inter) >= 0.8
     """,
+    tags=("memo",),
 )
 def dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """#59 near-dup candidates via MinHash + LSH banding — **fully
@@ -234,6 +235,7 @@ _SH_HAM_AB_SQL = " + ".join(
     )
     SELECT doc_a, doc_b, hamming FROM cand WHERE hamming <= 8
     """,
+    tags=("memo",),
 )
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup detection — **fully hash-checked since round
@@ -334,6 +336,7 @@ _NGRAM_CTES = """
     JOIN sizes sb ON sb.doc_id = doc_b
     WHERE n_inter / (sa.n + sb.n - n_inter) >= 0.8
     """,
+    tags=("memo",),
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT n-gram (word 3-gram) Jaccard near-dup detection — the
@@ -420,6 +423,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT c.doc_id, c.keeper_doc_id, s.cluster_size
     FROM comp c JOIN csize s USING (keeper_doc_id)
     """,
+    tags=("memo",),
 )
 def dedup_cluster_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-CLUSTER resolution — the step every dedup pipeline

@@ -205,6 +205,7 @@ def etl_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT n_nationkey, n_name, region_name FROM unioned
     """,
+    tags=("staged",),
 )
 def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Schema evolution on read: two parquet batches written at
@@ -253,6 +254,7 @@ def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
            {dsum_sql('o_totalprice')} AS total_price
     FROM final GROUP BY o_orderstatus
     """,
+    tags=("staged",),
 )
 def etl_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dynamic partition overwrite — the backfill primitive: rewrite
@@ -303,6 +305,7 @@ def etl_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
                          THEN n_nationkey END) AS BIGINT) AS good_key_sum
     FROM nation
     """,
+    tags=("staged",),
 )
 def scan_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Malformed-record tolerance: a JSONL batch where every 5th record

@@ -33,6 +33,7 @@ from python_etl_sample_spark.sources import table
            {dsum_sql('revenue')} AS revenue
     FROM slice GROUP BY o_orderstatus, c_mktsegment
     """,
+    tags=("staged",),
 )
 def pipeline_daily_etl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A complete ETL job as one query — the reference repo's core

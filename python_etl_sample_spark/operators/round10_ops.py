@@ -143,6 +143,7 @@ _JBAND_SQL = """CASE
     FROM fl
     GROUP BY 1
     """,
+    tags=("memo",),
 )
 def dedup_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Candidate recall of MinHash LSH banding against the exact n-gram
@@ -266,6 +267,7 @@ _SH_CAUGHT_SQL = " OR ".join(f"a.c{c} = b.c{c}" for c in range(_SH_CHUNKS))
     FROM ham
     GROUP BY 1
     """,
+    tags=("memo",),
 )
 def dedup_simhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Candidate recall of SimHash chunk banding against exact low-
@@ -434,6 +436,7 @@ _ANN_FLAGS_CTES = f"""{_km_ctes()},
     FROM unioned
     GROUP BY family, rn
     """,
+    tags=("memo",),
 )
 def sim_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hit-rate of the two ANN families against the exact per-query
@@ -457,7 +460,10 @@ def sim_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: ground truth is |label-0 queries| × 5 rows; every join in
     the flag frame is keyed on vec_id against linear frames (buckets,
     probes, home cells) — the recall layer adds nothing quadratic on
-    top of the exact-kNN baseline it measures."""
+    top of the exact-kNN baseline it measures.
+
+    Warm-up tag ``memo``: the catch-flag frame (``_ann_flag_frame``) is
+    a session memo shared with ``ann_recall_under_churn``."""
     flags = _ann_flag_frame(spark, sf_dir)
     return flags.groupBy("family", "rn").agg(
         F.count(F.lit(1)).alias("n_pairs"),

@@ -535,6 +535,7 @@ def _xengine_truth(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(COALESCE(s.n_candidates, 0) AS BIGINT) AS n_candidates
     FROM meta m LEFT JOIN stats s ON s.cfg = m.cfg
     """,
+    tags=("memo",),
 )
 def dedup_minhash_param_sweep(
     spark: SparkSession, sf_dir: str

@@ -110,6 +110,7 @@ _KEEP_SQL = (
       SELECT '3_quality_gate', n3, ch3, n2 - n3, n0, ch0 FROM w
     )
     """,
+    tags=("memo",),
 )
 def pipeline_dedup_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The corpus retention funnel, stage by stage: raw → exact dedup

@@ -125,6 +125,7 @@ _ROWS_SQL = "\n      UNION ALL ".join(
     )
     {_ROWS_SQL}
     """,
+    tags=("memo",),
 )
 def sim_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The IVF nprobe sweep: for nprobe ∈ 1/2/4/8 over the 8-cell Lloyd

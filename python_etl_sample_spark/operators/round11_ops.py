@@ -390,6 +390,7 @@ def events_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM j
     GROUP BY 1, 2
     """,
+    tags=("memo",),
 )
 def dedup_jaccard_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Histogram of pairwise shingle-Jaccard over every document pair
@@ -761,6 +762,7 @@ def _sweep_knn_dot() -> str:
     FROM sweep
     GROUP BY radius, rn
     """,
+    tags=("memo",),
 )
 def sim_lsh_radius_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall-vs-radius curve for the deployed LSH emission rule
@@ -900,7 +902,7 @@ def _bpe_compression_oracle() -> str:
     """
 
 
-@query("text_bpe_compression_by_lang", oracle=_bpe_compression_oracle())
+@query("text_bpe_compression_by_lang", oracle=_bpe_compression_oracle(), tags=("memo",))
 def text_bpe_compression_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer-equity readout: characters per BPE token and tokens
     per word, per language, under the merge table the corpus-global BPE
@@ -1212,6 +1214,7 @@ def events_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM keep
     GROUP BY is_keeper
     """,
+    tags=("memo",),
 )
 def corpus_dedup_survivorship(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Survivorship audit of near-dedup: do the documents the

@@ -93,6 +93,7 @@ _SEMDEDUP_TS_SQL = ", ".join(repr(t) for t in _SEMDEDUP_TS)
            round((nv.n - st.n_dropped) * 1.0 / nv.n, 6) AS retention
     FROM st CROSS JOIN nv
     """,
+    tags=("memo",),
 )
 def dedup_semdedup_eps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup ε-sweep: for each within-cluster cosine threshold
@@ -210,6 +211,7 @@ _CHURN_MOD = 10  # every vec_id ≡ 0 (mod 10): the deterministic 10%
     FROM unioned
     GROUP BY family, pair_class
     """,
+    tags=("memo",),
 )
 def ann_recall_under_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN recall under deterministic index churn: every vec_id ≡ 0
@@ -491,6 +493,7 @@ def corpus_mix_alpha_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(p.n_vecs * 1.0 / (t.n * 1.0 / t.k), 6) AS load_factor
     FROM per p CROSS JOIN tot t
     """,
+    tags=("memo",),
 )
 def ann_ivf_imbalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inverted-list load report for the deployed IVF quantizer

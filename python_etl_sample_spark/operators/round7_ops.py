@@ -185,6 +185,7 @@ def _bm25_scored_build(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM scored
     ) WHERE rn <= {_BM25_TOPK}
     """,
+    tags=("memo",),
 )
 def text_bm25_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 ranked retrieval: top-10 documents per probe term set under
@@ -362,7 +363,7 @@ def _km_assign(vecs: DataFrame, cents: list[tuple[int, list[float]]]) -> DataFra
     )
 
 
-@query("cluster_kmeans_lloyd", oracle=_km_oracle())
+@query("cluster_kmeans_lloyd", oracle=_km_oracle(), tags=("memo",))
 def cluster_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-scale distributed Lloyd k-means over the full embeddings
     table: k=8, 3 fixed rounds, deterministic seeding (the k smallest
@@ -388,7 +389,10 @@ def cluster_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     Lloyd implementation has); the update is one (cid, dim) groupBy —
     combiner-reduced to k·64 rows per task before the shuffle. Nothing
     quadratic, nothing data-sized on the driver, no cartesian: at
-    100 TB each round is one scan + one k·64-row shuffle."""
+    100 TB each round is one scan + one k·64-row shuffle.
+
+    Warm-up tag ``memo``: the Lloyd fit (``_km_fit``) is a session memo
+    shared with the semantic-dedup, silhouette and IVF queries."""
     final, cents = _km_fit(spark, sf_dir)
     norms = spark.createDataFrame(
         [(cid, emb) for cid, emb in cents],
@@ -549,6 +553,7 @@ def _km_fit(
     LEFT JOIN g ON g.doc_a = u.doc_a AND g.doc_b = u.doc_b
     LEFT JOIN f ON f.doc_a = u.doc_a AND f.doc_b = u.doc_b
     """,
+    tags=("memo",),
 )
 def dedup_consensus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semantic consensus dedup report: one row per candidate duplicate

@@ -62,6 +62,7 @@ _DOT = "list_dot_product({a}::DOUBLE[], {b}::DOUBLE[])"
     WHERE round({_DOT.format(a='a.emb', b='b.emb')} / (a.nrm * b.nrm), 9)
           >= {_COS_T}
     """,
+    tags=("memo",),
 )
 def dedup_semantic_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster-pruned semantic dedup: cosine near-dup pairs (sim ≥
@@ -82,7 +83,9 @@ def dedup_semantic_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     cartesian); per-cluster pair fan-out is the skew risk — AQE
     skew-split handles moderate cases, and at 100 TB k is raised so
     clusters stay task-sized. Cosine = the similarity.py dot/norm
-    formulation (float32 products are exact in double), rounded 9 dp."""
+    formulation (float32 products are exact in double), rounded 9 dp.
+
+    Warm-up tag ``memo``: reads the memoized Lloyd fit."""
     assigned, _ = _km_fit(spark, sf_dir)
     nrm = F.sqrt(
         F.aggregate(

@@ -85,7 +85,7 @@ def _sil_oracle() -> str:
     FROM s GROUP BY cid"""
 
 
-@query("cluster_silhouette", oracle=_sil_oracle())
+@query("cluster_silhouette", oracle=_sil_oracle(), tags=("memo",))
 def cluster_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Simplified silhouette of the deterministic k-means clustering:
     per vector, a = distance to its own (nearest) centroid and b =

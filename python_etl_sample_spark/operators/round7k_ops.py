@@ -99,6 +99,7 @@ _PRIOR_TOPK = 10
       FROM fused
     ) WHERE rn <= {_RRF_TOPK}
     """,
+    tags=("memo",),
 )
 def sim_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reciprocal-rank fusion of two retrieval rankings per probe:

@@ -178,6 +178,7 @@ _NDCG_K = 10
            CASE WHEN i.idcg > 0 THEN round(d.dcg / i.idcg, 6) END AS ndcg
     FROM dcg d JOIN idcg i ON i.probe_id = d.probe_id
     """,
+    tags=("memo",),
 )
 def ml_ndcg_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NDCG@10 of the BM25 ranking per probe, with graded relevance =
@@ -198,7 +199,10 @@ def ml_ndcg_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     final ratio is one division rounded at 6 dp (ties in either
     ranking are value-identical, so the top-10 gain multiset — and
     both sums — are tie-order-independent only where tied ranks share
-    a relevance; the doc_id tie-break pins the rest)."""
+    a relevance; the doc_id tie-break pins the rest).
+
+    Warm-up tag ``memo``: ``_bm25_scored`` is a session memo shared with
+    ``text_bm25_rank``."""
     scored = _bm25_scored(spark, sf_dir)
     gain = F.pow(F.lit(2.0), F.col("n_terms")) - 1.0
     wr = Window.partitionBy("probe_id").orderBy(

@@ -35,6 +35,7 @@ def scan_projected(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "source_csv",
     oracle="SELECT r_regionkey, r_name FROM region",
+    tags=("staged",),
 )
 def source_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """#3 CSV ingest with explicit schema (classic ETL extract).
@@ -56,6 +57,7 @@ def source_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "source_json",
     oracle="SELECT n_nationkey, n_name, n_regionkey FROM nation",
+    tags=("staged",),
 )
 def source_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """#4 JSON-lines ingest with explicit schema."""
@@ -73,6 +75,7 @@ def source_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice, l_returnflag
     FROM lineitem WHERE l_returnflag = 'R'
     """,
+    tags=("staged",),
 )
 def sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     """#5 parquet sink + read-back round trip (ETL load)."""
@@ -93,6 +96,7 @@ def sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT l_orderkey, l_linenumber, l_extendedprice, l_returnflag
     FROM lineitem WHERE l_returnflag IN ('A', 'N')
     """,
+    tags=("staged",),
 )
 def sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """#6 hive-partitioned write + partition-pruned read-back.
@@ -116,6 +120,7 @@ def sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "source_orc",
     oracle="SELECT n_nationkey, n_name, n_regionkey FROM nation",
+    tags=("staged",),
 )
 def source_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """#3b ORC ingest round-trip — the third columnar connector format
@@ -136,6 +141,7 @@ def source_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE CAST(ts AS DATE) = DATE '2024-01-30'
     GROUP BY 1, 2
     """,
+    tags=("staged",),
 )
 def etl_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental (daily-batch) ETL pattern: land events hive-
@@ -162,6 +168,7 @@ def etl_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "source_text",
     oracle="SELECT n_name AS value FROM nation",
+    tags=("staged",),
 )
 def source_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """#3c line-oriented text ingest round-trip — the fifth connector

@@ -167,6 +167,7 @@ def _unpack(cell):
     ORDER BY sim DESC, vec_a, vec_b
     LIMIT 20
     """,
+    tags=("python", "memo"),
 )
 def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """#60 exact top-20 cosine-similar pairs via block-partitioned GEMM
@@ -180,6 +181,9 @@ def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same total order makes merging local top-k exact, including
     boundary ties. The global top-20 is a TakeOrdered over the grid
     output. No driver-side materialization anywhere.
+
+    Warm-up tags: ``python`` (the first mapInPandas shape) and ``memo``
+    (the packed block grid is a session memo, cache.py).
     """
     import numpy as np
     import pandas as pd
@@ -228,6 +232,7 @@ def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT query_id, neighbor_id, sim, rn FROM ranked WHERE rn <= 5
     """,
+    tags=("memo",),
 )
 def sim_knn_per_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """#61 exact 5-NN for every label-0 query vector, on the same
@@ -452,6 +457,7 @@ _IVF_DOT_SQL = (
       FROM cand
     ) WHERE rn <= {_IVF_K}
     """,
+    tags=("memo",),
 )
 def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-style approximate NN — **fully hash-checked since round
@@ -566,7 +572,7 @@ _DEDUP_COS_ORACLE = f"""
     """
 
 
-@query("dedup_embedding_cosine", oracle=_DEDUP_COS_ORACLE)
+@query("dedup_embedding_cosine", oracle=_DEDUP_COS_ORACLE, tags=("memo",))
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup detection: all pairs with cosine ≥
     0.45 (the semantic-dedup family — threshold sits in the fixture
@@ -607,7 +613,7 @@ def _hyperplane_cells(nplanes: int = 4, dim: int = 64):
     return rng.standard_normal((nplanes, dim))
 
 
-@query("dedup_embedding_ann", oracle=_DEDUP_COS_ORACLE)
+@query("dedup_embedding_ann", oracle=_DEDUP_COS_ORACLE, tags=("memo",))
 def dedup_embedding_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup via **bound-pruned cell-grid pre-bucketing**
     with *provable* 100% recall — the deterministic at-scale route for

@@ -360,6 +360,7 @@ def text_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1, 2
     HAVING COUNT(*) >= 8
     """,
+    tags=("memo",),
 )
 def text_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark-decontamination sweep — the training-data hygiene step

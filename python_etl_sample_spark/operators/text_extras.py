@@ -34,6 +34,7 @@ from python_etl_sample_spark.sources import table
      AND abs(a.n_chars - b.n_chars) <= 5
     WHERE levenshtein(substr(a.text, 1, 60), substr(b.text, 1, 60)) <= 20
     """,
+    tags=("memo",),
 )
 def dedup_fuzzy_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fuzzy near-dup candidates by edit distance: within each

@@ -30,6 +30,7 @@ from python_etl_sample_spark.sources import table
                 ELSE 'high' END AS band
     FROM orders
     """,
+    tags=("python",),
 )
 def udf_scalar_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     """#67 vectorized scalar pandas UDF (price banding). Exact string
@@ -60,6 +61,7 @@ def udf_scalar_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem
     GROUP BY l_returnflag
     """,
+    tags=("python",),
 )
 def udaf_grouped_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """#68 grouped-agg pandas UDF: quantity-weighted mean price.
@@ -85,6 +87,7 @@ def udaf_grouped_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM customer
     WINDOW seg AS (PARTITION BY c_mktsegment)
     """,
+    tags=("python",),
 )
 def udtf_apply_in_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     """#69 grouped-map applyInPandas (UDTF-shaped surface): per-segment
@@ -119,6 +122,7 @@ def udtf_apply_in_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(o_totalprice - o_totalprice / 1.05, 6) AS amount
     FROM orders WHERE o_orderstatus = 'P'
     """,
+    tags=("python",),
 )
 def udtf_python_lateral(spark: SparkSession, sf_dir: str) -> DataFrame:
     """#69b true Python UDTF (Spark 4 table function): each order row

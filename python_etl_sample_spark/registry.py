@@ -24,24 +24,47 @@ from pyspark.sql import DataFrame, SparkSession
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 
+#: Bench warm-up tags. ``bench.py`` runs every tagged query once,
+#: untimed, before its timed pass: one phase per tag, in this order.
+#:
+#: - ``python``: first use of a Python execution shape (pandas UDFs,
+#:   applyInPandas, mapInPandas, Python UDTF, applyInPandasWithState);
+#:   the worker pool forks and imports numpy/pandas lazily per shape.
+#: - ``stream``: runs a real bounded micro-batch stream; the session's
+#:   first stream pays engine, state-store and WAL start-up.
+#: - ``staged``: stages its own on-disk input once per process
+#:   (scratch.py), so its timed number is read-side only.
+#: - ``memo``: reads a session memo (cache.py) shared with other
+#:   queries, so its timed number is the downstream compute only.
+WARM_TAGS: tuple[str, ...] = ("python", "stream", "staged", "memo")
+
+
 @dataclass(frozen=True)
 class QuerySpec:
     name: str
     fn: QueryFn
     oracle: str | None  # DuckDB SQL; None → driver does rows-only check
     doc: str = ""
+    tags: tuple[str, ...] = ()  # WARM_TAGS members
 
 
 REGISTRY: dict[str, QuerySpec] = {}
 
 
-def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
+def query(
+    name: str, oracle: str | None = None, tags: tuple[str, ...] = ()
+) -> Callable[[QueryFn], QueryFn]:
     """Register an operator implementation under ``name``."""
+    unknown = sorted(set(tags) - set(WARM_TAGS))
+    if unknown:
+        raise ValueError(f"{name}: unknown tags {unknown}; known: {WARM_TAGS}")
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
-        REGISTRY[name] = QuerySpec(name=name, fn=fn, oracle=oracle, doc=fn.__doc__ or "")
+        REGISTRY[name] = QuerySpec(
+            name=name, fn=fn, oracle=oracle, doc=fn.__doc__ or "", tags=tuple(tags)
+        )
         return fn
 
     return deco
@@ -51,8 +74,8 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 #: order ``queries()`` yields them and round 1 showed it may truncate the
 #: artifact (CORRECTNESS_r01.json stopped at the 50th registration-order
 #: entry), so the 69 SURVEY.md §2 operators — the graded inventory — come
-#: first, in §2 numeric order; extensions follow, hash-checked ones before
-#: rows-only ones so a truncated run drops the weakest evidence last.
+#: first, in §2 numeric order; extensions follow in registration order
+#: (``canonical_names()``).
 SURVEY_ORDER: tuple[str, ...] = (
     # §2.1 scans / sources / sinks (#1-6)
     "scan_parquet",
@@ -134,348 +157,6 @@ SURVEY_ORDER: tuple[str, ...] = (
     "udf_scalar_pandas",
     "udaf_grouped_agg",
     "udtf_apply_in_pandas",
-)
-
-EXTENSION_ORDER: tuple[str, ...] = (
-    # hash-checked extensions first
-    "source_orc",
-    "source_text",
-    "join_null_safe",
-    "win_percent_cume",
-    "fn_bitwise",
-    "fn_regex",
-    "text_lang_id",
-    "text_quality_score",
-    "text_fingerprint",
-    "text_token_bpe_count",
-    "dedup_embedding_cosine",
-    "dedup_embedding_ann",
-    "dedup_ngram_jaccard",
-    "agg_approx_quantile",
-    "text_pack_sequences",
-    "text_contamination_check",
-    "pipeline_corpus_clean",
-    "ts_gap_fill",
-    "udtf_python_lateral",
-    "q_shipping_priority",
-    "q_local_supplier_volume",
-    "q_returned_items",
-    "sample_split",
-    "join_skew_salted",
-    "join_bucketed",
-    "etl_incremental",
-    # rows-only extensions last
-    "sim_ann_ivf",
-    "dedup_simhash",
-    "multimodal_decode",
-    "multimodal_frame_sample",
-    "multimodal_audio_features",
-    "stream_demo_tumbling",
-    "stream_demo_stateful",
-    # round-3 additions (hash-checked)
-    "join_interval_overlap",
-    "text_unigram_lm_score",
-    "dedup_cluster_keeper",
-    "text_pii_scrub",
-    "text_repetition_filter",
-    "events_funnel",
-    "etl_scd2_history",
-    "attribution_last_touch",
-    "embeddings_centroid",
-    "win_streak_gaps_islands",
-    "data_profile",
-    "agg_histogram",
-    "stats_corr_matrix",
-    "events_retention_cohort",
-    "q_top_suppliers",
-    "corpus_mix_weights",
-    "subquery_exists",
-    "subquery_in_having",
-    "subquery_scalar_correlated",
-    "subquery_not_exists_inactive",
-    "join_lateral_topk",
-    "subquery_not_in_null_aware",
-    "agg_percentile_exact",
-    "agg_mode_deterministic",
-    "agg_skew_kurt",
-    "agg_listagg_ordered",
-    "stats_zscore_outliers",
-    "sample_stratified",
-    "text_bigram_topk",
-    "embeddings_class_separation",
-    "ts_mad_outliers",
-    # round-4 additions (hash-checked)
-    "agg_filter_clause",
-    "agg_minmax_by",
-    "agg_bool_bit",
-    "agg_count_distinct_multi",
-    "agg_regression_ols",
-    "unpivot_metrics",
-    "explode_token_positions",
-    "events_transition_matrix",
-    "events_cum_distinct_users",
-    "join_asof_forward",
-    "ts_ohlc_bars",
-    "graph_connected_components",
-    "skyline_pareto",
-    "embedding_int8_quantize",
-    "embedding_matryoshka_energy",
-    "dedup_fuzzy_levenshtein",
-    "text_zipf_slope",
-    "dq_expectations",
-    "etl_merge_upsert",
-    "source_schema_evolution",
-    "q_order_count_distribution",
-    "q_promo_share",
-    "q_small_quantity_revenue",
-    "win_qualify_latest",
-    "join_existence_flags",
-    "events_ab_lift",
-    "stats_chi2_independence",
-    "ts_ewma_halflife",
-    "text_vocab_coverage",
-    "fn_url_parse",
-    "fn_calendar_buckets",
-    "text_dedup_prefix",
-    "events_error_rate_anomaly",
-    "q_national_market_share",
-    "win_time_range_frame",
-    "etl_partition_overwrite",
-    "scan_corrupt_records",
-    "pipeline_daily_etl",
-    "pipeline_feature_store",
-    "set_intersect_except_all",
-    "fn_try_safe",
-    "agg_grouping_id",
-    "api_sql_frontend",
-    "join_asof_nearest",
-    "text_lang_overlap_jaccard",
-    "agg_approx_topk",
-    "stream_demo_session",
-    "stream_demo_static_join",
-    "multimodal_image_thumbnail",
-    "sketch_hll_mergeable",
-    # round-5 additions (hash-checked first, then rows-only)
-    "plan_cbo_multiway",
-    "sample_reservoir_per_key",
-    "agg_equi_depth_histogram",
-    "scan_metadata_columns",
-    "text_chunk_fixed_overlap",
-    "etl_snapshot_diff",
-    "agg_weighted_percentile",
-    "join_point_in_time_scd2",
-    "events_windowed_funnel",
-    "corpus_quality_gate_report",
-    "events_sessionize",
-    "events_max_concurrent",
-    "basket_brand_pairs_lift",
-    "join_bloom_runtime",
-    "etl_zorder_clustering",
-    "join_dpp_partitioned",
-    "etl_incremental_rollup_merge",
-    "etl_compact_small_files",
-    "api_sql_registered_udf",
-    "events_pattern_funnel_runs",
-    "join_hinted_strategies",
-    "sample_weighted_priority",
-    "agg_skew_salted_distinct",
-    "stats_winsorized_mean",
-    "stream_demo_rate_source",
-    "graph_triangle_count",
-    "graph_pagerank",
-    "stats_ttest_welch",
-    "stats_rank_sum_u",
-    "events_rfm_segmentation",
-    "attribution_position_weighted",
-    "ts_resample_interpolate",
-    "spatial_grid_join",
-    "stream_demo_stream_join",
-    "ts_seasonal_naive_eval",
-    "dq_skew_report",
-    "features_hashing_trick",
-    "customer_survival_km",
-    "graph_bfs_hops",
-    "win_rolling_distinct_users",
-    "stats_ols_multivariate",
-    "win_sliding_median",
-    "text_collocations_pmi",
-    "stats_gini_lorenz",
-    "stats_benford_first_digit",
-    "win_ratio_to_report",
-    "events_dau_wau_mau",
-    "fn_nested_struct_ops",
-    "events_cohort_ltv",
-    "stats_bootstrap_poisson_ci",
-    "graph_kcore_peel",
-    # round-6 additions (operators/round6_ops.py)
-    "agg_exact_quantiles_global",
-    "embedding_matryoshka_quality",
-    "dedup_url_canonicalize",
-    "text_ngram_novelty",
-    "join_asof_tolerance",
-    "events_bounce_rate",
-    "fn_intervals_overlap_merge",
-    "dq_referential_integrity",
-    "etl_gdpr_delete_propagation",
-    "stream_demo_foreachbatch_merge",
-    "api_sql_recursive_cte",
-    "anon_k_anonymity_report",
-    "graph_jaccard_link_prediction",
-    # round-6 additions (operators/tpch_extra6.py — the TPC-H completion set)
-    "q_forecast_revenue",
-    "q_volume_shipping",
-    "q_product_type_profit",
-    "q_parts_supplier_relationship",
-    "q_large_volume_customer",
-    "q_discounted_revenue",
-    "q_global_sales_opportunity",
-    # round-6 additions (operators/round6b_ops.py — sketches, drift, encoding)
-    "sketch_cms_frequency",
-    "sketch_kmv_distinct",
-    "stats_psi_drift",
-    "features_target_encoding",
-    # round-6 additions (operators/round6c_ops.py)
-    "anon_l_diversity",
-    "graph_label_propagation",
-    "stats_ks_two_sample",
-    "ts_cross_correlation",
-    # round-6 additions (operators/round6d_ops.py)
-    "sim_mmr_rerank",
-    "stats_mann_kendall_trend",
-    "agg_theil_index",
-    "events_user_lifecycle",
-    # round-6 additions (operators/round6e_ops.py)
-    "stats_cusum_changepoint",
-    "events_top_paths",
-    # round-6 additions (operators/round6f_ops.py — stats/structure completions)
-    "stats_spearman_corr",
-    "stats_anova_f",
-    "stats_mutual_information",
-    "graph_degree_assortativity",
-    "ts_seasonal_decompose",
-    "spatial_knn_grid",
-    # round-7 additions (operators/round7_ops.py)
-    "text_bm25_rank",
-    "cluster_kmeans_lloyd",
-    "dedup_consensus",
-    # round-7 additions (operators/round7b_ops.py)
-    "dedup_semantic_cluster",
-    "embedding_pca_power",
-    # round-7 additions (operators/round7c_ops.py)
-    "events_markov_kstep",
-    "anon_ldp_frequency",
-    "graph_harmonic_centrality",
-    # round-7 additions (operators/round7d_ops.py)
-    "ts_double_exponential_forecast",
-    "stats_theil_sen_trend",
-    "features_woe_iv",
-    "sketch_bloom_filter",
-    # round-7 additions (operators/round7e_ops.py)
-    "events_uplift_cuped",
-    "stats_permutation_test",
-    "text_rake_keywords",
-    "multimodal_shot_boundary",
-    # round-7 additions (operators/round7f_ops.py)
-    "ts_anomaly_esd",
-    "dedup_incremental_batch",
-    "anon_dp_geometric_histogram",
-    "sketch_theta_intersection",
-    # round-7 additions (operators/round7g_ops.py)
-    "events_funnel_latency",
-    "text_containment_dedup",
-    "graph_community_modularity",
-    # round-7 additions (operators/round7h_ops.py)
-    "text_bigram_lm_perplexity",
-    "dedup_substring_spans",
-    "anon_t_closeness",
-    "ts_autocorrelation",
-    # round-7 additions (operators/round7i_ops.py)
-    "cluster_silhouette",
-    "ts_periodogram",
-    "features_target_encoding_loo",
-    "stats_kendall_tau",
-    # round-7 additions (operators/round7j_ops.py — ML-evaluation tier)
-    "ml_roc_auc",
-    "ml_calibration_bins",
-    "ml_gains_deciles",
-    "stats_kruskal_wallis",
-    # round-7 additions (operators/round7k_ops.py)
-    "sim_rrf_fusion",
-    "agg_percentile_cont",
-    "text_char_entropy",
-    "stats_levene_bf",
-    # round-7 additions (operators/round7l_ops.py)
-    "ml_conformal_interval",
-    "embedding_knn_outlier",
-    "events_burstiness",
-    "ts_rolling_regression",
-    # round-7 additions (operators/round7m_ops.py)
-    "ml_pr_auc",
-    "ml_ndcg_retrieval",
-    "ml_threshold_sweep",
-    "text_textrank_keywords",
-    # round-7 additions (operators/round7n_ops.py)
-    "spatial_hotspot_clusters",
-    "embedding_binary_hamming",
-    "stats_wilcoxon_signed_rank",
-    "sim_more_like_this",
-    # round-7 additions (operators/round7o_ops.py)
-    "stats_friedman",
-    "sample_balanced_downsample",
-    # round-8 additions (operators/round8_ops.py)
-    "sketch_kll_quantiles",
-    "sketch_kll_merge",
-    "dedup_semantic_recall",
-    # round-9 additions (operators/round9_ops.py)
-    "sketch_kll_partitioned_rollup",
-    # round-10 additions (operators/round10_ops.py)
-    "dedup_minhash_recall",
-    "dedup_simhash_recall",
-    "sim_ann_recall",
-    # round-10b additions (operators/round10b_ops.py)
-    "graph_hits_scores",
-    "sim_pq_adc",
-    "sim_pq_ivf_adc",
-    "text_bpe_train_merges",
-    "text_bpe_encode",
-    # round-10c additions (operators/round10c_ops.py)
-    "graph_personalized_pagerank",
-    "corpus_temperature_mix",
-    "text_boilerplate_ngrams",
-    "dedup_minhash_param_sweep",
-    # round-10d additions (operators/round10d_ops.py)
-    "pipeline_dedup_funnel",
-    "ml_brier_decomposition",
-    "ts_holt_winters_forecast",
-    # round-10e additions (operators/round10e_ops.py)
-    "sim_ivf_nprobe_sweep",
-    # round-10f additions (operators/round10f_ops.py)
-    "corpus_apportion_budget",
-    "ml_auc_delong_ci",
-    # --- round 11 additions ---
-    "ml_cohens_kappa",
-    "stats_fleiss_kappa",
-    "ml_mcnemar_paired",
-    "events_power_mde",
-    "dedup_jaccard_histogram",
-    "text_heaps_law_fit",
-    "text_log_odds_domain_terms",
-    "sim_lsh_radius_sweep",
-    "text_bpe_compression_by_lang",
-    "stats_krippendorff_alpha",
-    "stats_cochran_q",
-    "events_srm_check",
-    "corpus_dedup_survivorship",
-    # --- round 12 additions ---
-    "dedup_semdedup_eps",
-    "ann_recall_under_churn",
-    "text_quality_threshold_sweep",
-    "corpus_mix_alpha_sweep",
-    "ann_ivf_imbalance",
-    # --- round 13 additions ---
-    "stream_demo_sliding",
-    "stream_demo_watermark_late",
-    "stream_demo_dedup",
 )
 
 
@@ -901,27 +582,24 @@ DRIVER_ORDER: tuple[str, ...] = (
 
 
 def canonical_names() -> tuple[str, ...]:
-    return SURVEY_ORDER + EXTENSION_ORDER
+    """SURVEY_ORDER, then every other registered query in registration order."""
+    load_all_operators()
+    return SURVEY_ORDER + tuple(n for n in REGISTRY if n not in SURVEY_ORDER)
 
 
 def ordered_registry() -> dict[str, QuerySpec]:
-    """REGISTRY re-keyed into the driver-facing order (DRIVER_ORDER —
-    the never-driver-recorded queries first; see that constant's note).
-
-    Every canonical name must be registered; names registered but not in
-    the canonical lists are appended at the end rather than dropped, so a
-    forgotten list entry degrades ordering, never coverage.
+    """REGISTRY re-keyed into the driver-facing order: DRIVER_ORDER (see
+    that constant's note), then any registered name it lacks, in
+    canonical order — a forgotten DRIVER_ORDER entry degrades ordering,
+    never coverage. An unregistered SURVEY_ORDER or DRIVER_ORDER name
+    raises ``KeyError``.
     """
-    missing = [n for n in canonical_names() if n not in REGISTRY]
+    missing = [n for n in SURVEY_ORDER + DRIVER_ORDER if n not in REGISTRY]
     if missing:
-        raise KeyError(f"canonical queries not registered: {missing}")
-    out = {n: REGISTRY[n] for n in DRIVER_ORDER if n in REGISTRY}
+        raise KeyError(f"ordered queries not registered: {missing}")
+    out = {n: REGISTRY[n] for n in DRIVER_ORDER}
     for n in canonical_names():
-        if n not in out:
-            out[n] = REGISTRY[n]
-    for n, spec in REGISTRY.items():
-        if n not in out:
-            out[n] = spec
+        out.setdefault(n, REGISTRY[n])
     return out
 
 

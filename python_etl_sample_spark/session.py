@@ -19,6 +19,38 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: Validated environment overrides: name -> (default, check, expected).
+#: A mistyped value fails fast instead of reaching Spark (or the
+#: ``local[...]`` master string) as an opaque error or a silent default.
+_ENV = {
+    "SPARK_GRAFT_CPUS": (
+        "*",
+        lambda v: v == "*" or (v.isascii() and v.isdigit() and int(v) > 0),
+        "'*' or a positive integer",
+    ),
+    "SPARK_GRAFT_PREFER_SORT_MERGE_JOIN": (
+        "false",
+        lambda v: v.lower() in ("true", "false"),
+        "true or false",
+    ),
+    "SPARK_GRAFT_SHJ_LOCAL_MAP_THRESHOLD": (
+        str(64 * 1024 * 1024),
+        lambda v: v.isascii() and v.isdigit(),
+        "a non-negative integer (bytes)",
+    ),
+}
+
+
+def env_setting(name: str) -> str:
+    """``name`` from the environment, or its default; a malformed value
+    raises ``ValueError`` naming the variable."""
+    default, ok, expected = _ENV[name]
+    value = os.environ.get(name, default)
+    if not ok(value):
+        raise ValueError(f"{name}={value!r}: expected {expected}")
+    return value
+
+
 #: r14 join posture (guide §3.1 / §9): allow the planner to pick a
 #: shuffled hash join when its size conditions hold instead of always
 #: preferring sort-merge, and let AQE rewrite a sort-merge to a
@@ -31,23 +63,19 @@ from pyspark.sql import SparkSession
 #: threshold is the memory-safety knob at scale (a build side above it
 #: keeps sort-merge's graceful spill); override via env for clusters
 #: with tighter executor memory.
-_SHJ_LOCAL_MAP_THRESHOLD = os.environ.get(
-    "SPARK_GRAFT_SHJ_LOCAL_MAP_THRESHOLD", str(64 * 1024 * 1024)
-)
+_SHJ_LOCAL_MAP_THRESHOLD = env_setting("SPARK_GRAFT_SHJ_LOCAL_MAP_THRESHOLD")
 
 #: The static-planner half of the same posture, env-overridable for the
 #: same reason (ADVICE r14): shuffled-hash builds lack sort-merge's
 #: graceful spill when static size estimates are badly wrong, so a
 #: memory-tight cluster can restore sort-merge without editing source
 #: (SPARK_GRAFT_PREFER_SORT_MERGE_JOIN=true).
-_PREFER_SORT_MERGE_JOIN = os.environ.get(
-    "SPARK_GRAFT_PREFER_SORT_MERGE_JOIN", "false"
-)
+_PREFER_SORT_MERGE_JOIN = env_setting("SPARK_GRAFT_PREFER_SORT_MERGE_JOIN")
 
 
 def get_spark(app_name: str = "python-etl-sample-spark") -> SparkSession:
     """Build (or get) a SparkSession configured for this engine."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    cpus = env_setting("SPARK_GRAFT_CPUS")
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")

@@ -317,6 +317,7 @@ def stream_demo_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
            COUNT(*) AS n_events
     FROM numbered GROUP BY user_id, sid
     """,
+    tags=("stream",),
 )
 def stream_demo_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     """#54-demo, HASH-CHECKED: native ``session_window`` with a
@@ -467,6 +468,7 @@ def demo_rate_source(spark: SparkSession) -> DataFrame:
            event_type, COUNT(*) AS n_events
     FROM ev GROUP BY 1, 2, 3
     """,
+    tags=("stream",),
 )
 def stream_demo_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """#52-demo on a message-bus-shaped source — HASH-CHECKED, because
@@ -496,6 +498,7 @@ def stream_demo_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
      AND c.event_type = 'click' AND p.event_type = 'purchase'
      AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 1 HOUR
     """,
+    tags=("stream",),
 )
 def stream_demo_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAM-STREAM inner join under two real ``readStream`` sources —
@@ -559,6 +562,7 @@ def stream_demo_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                  / 100.0, 6) AS value_total
     FROM events GROUP BY user_id
     """,
+    tags=("python",),
 )
 def stream_demo_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     """#57-demo, HASH-CHECKED: the applyInPandasWithState custom
@@ -596,6 +600,7 @@ __all__ = [
            event_type AS last_event_type
     FROM ranked WHERE rn = 1
     """,
+    tags=("stream",),
 )
 def stream_demo_foreachbatch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """foreachBatch incremental MERGE under a real multi-batch stream —

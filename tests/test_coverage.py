@@ -6,6 +6,8 @@ from __future__ import annotations
 import re
 from pathlib import Path
 
+import pytest
+
 from python_etl_sample_spark.registry import REGISTRY, load_all_operators
 
 load_all_operators()
@@ -53,6 +55,31 @@ def test_driver_order_is_permutation_of_canonical():
 
     assert sorted(DRIVER_ORDER) == sorted(canonical_names())
     assert len(set(DRIVER_ORDER)) == len(DRIVER_ORDER)
+
+
+@pytest.mark.parametrize("case", ["dropped", "unregistered"])
+def test_ordered_registry_keeps_coverage(case, monkeypatch):
+    """``queries()`` order is DRIVER_ORDER then any registered name it
+    lacks: a name dropped from DRIVER_ORDER is appended, never lost,
+    and an unregistered DRIVER_ORDER name raises."""
+    from python_etl_sample_spark import registry
+
+    order = registry.DRIVER_ORDER
+    if case == "dropped":
+        monkeypatch.setattr(registry, "DRIVER_ORDER", order[1:])
+        assert list(registry.ordered_registry()) == [*order[1:], order[0]]
+    else:
+        monkeypatch.setattr(registry, "DRIVER_ORDER", (*order, "no_such_query"))
+        with pytest.raises(KeyError, match="no_such_query"):
+            registry.ordered_registry()
+
+
+def test_unknown_warm_tag_raises_at_registration():
+    from python_etl_sample_spark.registry import query
+
+    with pytest.raises(ValueError, match="memoo"):
+        query("no_such_query", tags=("memoo",))
+    assert "no_such_query" not in REGISTRY
 
 
 def test_driver_order_front_loads_unrecorded_queries():

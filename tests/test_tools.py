@@ -141,3 +141,35 @@ def test_fingerprint_snapshot_since_carry(tmp_path, monkeypatch):
     # every name absent from the old snapshot is new -> frozen round
     other = next(k for k in out if k not in (kept, drifted))
     assert out[other]["since"] == frozen
+
+
+def test_fingerprint_ignores_decorators_docstrings_and_position(tmp_path):
+    """Query fingerprints hash the function's AST without its
+    decorators and docstring: registration metadata (``tags=``),
+    docstrings, comments and line numbers never flag a query; a body
+    or oracle edit does."""
+    mod = _load_gen_module()
+    deco = "def query(*a, **k):\n    return lambda fn: fn\n\n\n"
+    variants = {
+        "base": '@query("q")\ndef q(spark, sf_dir):\n    """one"""\n'
+        "    return spark.range(1)\n",
+        "meta": '\n\n# moved\n@query("q", tags=("memo",))\n'
+        'def q(spark, sf_dir):\n    """two"""\n'
+        "    return spark.range(1)  # comment\n",
+        "edit": '@query("q")\ndef q(spark, sf_dir):\n    """one"""\n'
+        "    return spark.range(2)\n",
+    }
+    fps = {}
+    for key, src in variants.items():
+        path = tmp_path / f"fp_{key}.py"
+        path.write_text(deco + src)
+        spec = importlib.util.spec_from_file_location(f"fp_{key}", path)
+        m = importlib.util.module_from_spec(spec)
+        spec.loader.exec_module(m)
+        for oracle in ("SELECT 1", "SELECT 2"):
+            fps[key, oracle] = mod.query_fingerprint(
+                type("Spec", (), {"fn": m.q, "oracle": oracle})
+            )
+    assert fps["base", "SELECT 1"] == fps["meta", "SELECT 1"]
+    assert fps["base", "SELECT 1"] != fps["edit", "SELECT 1"]
+    assert fps["base", "SELECT 1"] != fps["base", "SELECT 2"]

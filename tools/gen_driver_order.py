@@ -90,24 +90,30 @@ FINGERPRINTS = os.path.join(REPO, "tools", "query_fingerprints.json")
 
 
 def query_fingerprint(spec) -> str:
-    """sha1 over the query's decorated source text + its EXPANDED
-    oracle SQL. The expanded oracle (not the f-string source) is what
-    catches helper-driven changes (dsum_sql & co. are interpolated at
-    import time); a Spark-side-only helper change that alters VALUES
-    necessarily changes the oracle too (the pairing rule in
-    functions/determinism.py) or fails drive_contract at freeze — so
-    the pair (source, oracle) is a sound change signal for
-    evidence-staleness purposes. Perf-only refactors that move neither
-    text don't flag, which is correct: the driver's hash evidence is
-    about values."""
-    import hashlib
+    """sha1 over the query function's AST + its EXPANDED oracle SQL.
 
-    try:
-        src = inspect.getsource(spec.fn)
-    except (OSError, TypeError):
-        src = repr(spec.fn)
+    The AST is ``ast.dump`` of the function with its decorators and
+    leading docstring removed, so registration metadata (``tags=``),
+    docstrings, comments, formatting and line numbers — a move to
+    another module included — never flag a query. The expanded oracle
+    (not the f-string source) is what catches helper-driven changes
+    (dsum_sql & co. are interpolated at import time); a Spark-side-only
+    helper change that alters VALUES necessarily changes the oracle too
+    (the pairing rule in functions/determinism.py) or fails
+    drive_contract at freeze — so the pair (code, oracle) is a sound
+    change signal for evidence-staleness purposes. Perf-only refactors
+    that move neither don't flag, which is correct: the driver's hash
+    evidence is about values."""
+    import ast
+    import hashlib
+    import textwrap
+
+    node = ast.parse(textwrap.dedent(inspect.getsource(spec.fn))).body[0]
+    node.decorator_list = []
+    if ast.get_docstring(node, clean=False) is not None:
+        node.body = node.body[1:]
     return hashlib.sha1(
-        (src + "\x00" + (spec.oracle or "")).encode()
+        (ast.dump(node) + "\x00" + (spec.oracle or "")).encode()
     ).hexdigest()
 
 
