@@ -15,6 +15,11 @@ timings of staged and memo queries are therefore read-side and
 downstream-compute only; the JSON lists them under "staged_reads" and
 "shared_intermediate" so nobody mistakes a staging or memo change for
 an engine speedup.
+
+A query that raises does not stop the run: its exception class and the
+first line of its message go under "failed", every other query is still
+timed, all three JSON lines are printed (the last one with "n_failed")
+and the exit status is 1.
 """
 
 from __future__ import annotations
@@ -23,6 +28,20 @@ import json
 import os
 import sys
 import time
+from collections.abc import Callable
+from typing import TypeVar
+
+T = TypeVar("T")
+
+
+def _attempt(failed: dict[str, str], name: str, run: Callable[[], T]) -> T | None:
+    """``run()``, or None after recording its exception under ``name``."""
+    try:
+        return run()
+    except Exception as exc:  # one failing query must not lose the other timings
+        first = (str(exc).strip().splitlines() or [""])[0]
+        failed.setdefault(name, f"{type(exc).__name__}: {first[:300]}")
+        return None
 
 
 def main() -> int:
@@ -38,15 +57,21 @@ def main() -> int:
 
     qs = queries()
     warm = {t: [n for n, s in REGISTRY.items() if t in s.tags] for t in WARM_TAGS}
+    failed: dict[str, str] = {}
+
+    def _count(name: str) -> int:
+        """Build ``name`` and count it; -1 for a streaming frame, which
+        has no finite count."""
+        df = qs[name](spark, sf_dir)
+        return -1 if df.isStreaming else df.count()
+
     # JVM + parquet-footer warm-up
-    qs["agg_groupby"](spark, sf_dir).collect()
+    _attempt(failed, "agg_groupby", lambda: qs["agg_groupby"](spark, sf_dir).collect())
     # untimed warm-up phases in WARM_TAGS order: Python worker pool,
     # micro-batch engine, scratch staging, session memos (cache.py)
     for tag in WARM_TAGS:
         for name in warm[tag]:
-            df = qs[name](spark, sf_dir)
-            if not df.isStreaming:
-                df.count()
+            _attempt(failed, name, lambda: _count(name))
 
     # ambient-load sentinel (VERDICT r10 item 4): time one fixed
     # trivial query immediately before and after the timed pass. A
@@ -55,9 +80,10 @@ def main() -> int:
     # queries), so a slow run is machine-attributable from inside the
     # artifact: sentinel ≫ its historical floor (~0.05-0.15 s warm)
     # means ambient load, not code regression.
-    def _sentinel() -> float:
+    def _sentinel() -> float | None:
         t0 = time.perf_counter()
-        qs["scan_projected"](spark, sf_dir).count()
+        if _attempt(failed, "scan_projected", lambda: _count("scan_projected")) is None:
+            return None
         return round(time.perf_counter() - t0, 4)
 
     sentinel_start = _sentinel()
@@ -66,15 +92,15 @@ def main() -> int:
     skipped: list[str] = []
     for name in sorted(qs):
         t0 = time.perf_counter()
-        df = qs[name](spark, sf_dir)
-        if df.isStreaming:
+        n = _attempt(failed, name, lambda: _count(name))
+        if n is None:
+            continue
+        if n < 0:
             # a true streaming frame has no finite count; never crash the
             # bench over it — record it as skipped instead
             skipped.append(name)
             continue
-        n = df.count()
         timings[name] = round(time.perf_counter() - t0, 4)
-        assert n >= 0, name
 
     sentinel_end = _sentinel()
 
@@ -90,6 +116,7 @@ def main() -> int:
                 "queries": timings,
                 "sf": sf_val,
                 "skipped_streaming": skipped,
+                "failed": failed,
                 "staged_reads": sorted(set(warm["staged"]) & set(timings)),
                 "shared_intermediate": sorted(set(warm["memo"]) & set(timings)),
                 "sentinel_query": "scan_projected",
@@ -126,6 +153,7 @@ def main() -> int:
                 "value": total,
                 "unit": "sec",
                 "n_queries": len(timings),
+                "n_failed": len(failed),
                 "sf": sf_val,
                 "sentinel_start_sec": sentinel_start,
                 "sentinel_end_sec": sentinel_end,
@@ -133,7 +161,7 @@ def main() -> int:
         )
     )
     spark.stop()
-    return 0
+    return 1 if failed else 0
 
 
 if __name__ == "__main__":

@@ -9,29 +9,17 @@ upfront round bound; dedup.py: plain hash-min with a per-round
 ``changed`` count action, 20-round cap). This module unifies them and
 removes every per-round driver action.
 
-Two formulations are implemented because the judge-suggested
-large-star/small-star (Kiveris et al., "Connected Components in
-MapReduce and Beyond", SoCC 2014) and the PRAM-style pointer-jumped
-hash-min have the same asymptotic round bound (O(log n)) but different
-constants on Spark:
+Pointer-jumped hash-min, per round: one edges⋈labels neighbor-min
+aggregate, then one labels⋈labels shortcut join (labels chase 2^k hops
+after k rounds). The edge set is static (checkpointed once); per-round
+shuffle is |edges| + 2|nodes|. The large-star/small-star contraction
+(Kiveris et al., "Connected Components in MapReduce and Beyond", SoCC
+2014) has the same O(log n) round bound but measured slower at sf0.1
+(BENCH_NOTES.md round-5 section): its shrinking edge set does not pay
+for the extra contraction join and the per-round edge checkpoint at
+near-dup-graph shapes (shallow components, edge list ≪ corpus).
 
-- ``pointer_jump_components`` — per round: one edges⋈labels neighbor-min
-  aggregate, then one labels⋈labels shortcut join (labels chase 2^k
-  hops after k rounds). Edge set is static (checkpointed once);
-  per-round shuffle is |edges| + 2|nodes|.
-- ``star_contract_components`` — per round: a large-star then a
-  small-star contraction, each a groupBy-min + join on the CURRENT
-  edge set. Edges mutate each round (they shrink toward stars), so
-  every round re-checkpoints the edge list.
-
-Measured at sf0.1 (local[32], warm session, doc candidate-pair graph —
-see BENCH_NOTES.md round-5 section): pointer jumping wins; the star
-rounds' shrinking-edge advantage doesn't pay for the extra contraction
-join + per-round edge checkpoint at near-dup-graph shapes (shallow
-components, edge list ≪ corpus). Star-contract stays available and
-property-tested for parity on randomized graphs.
-
-Termination (fixed round 8): the convergence poll is the TERMINATOR,
+Termination: the convergence poll is the TERMINATOR,
 not an optimization. The ⌈log₂ n_bound⌉ + 1 budget the kernel
 originally stopped at is only the FRIENDLY-layout round count — the
 shortcut doubles the min-id chase distance per round only when each
@@ -53,22 +41,17 @@ never move.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: rounds between eager label checkpoints (and convergence polls).
+#: Measured ~25% off wall time vs every round (r4); LONGER lineages
+#: measured slower, not faster (round 5) — the re-planned multi-round
+#: lineage grows superlinearly.
+_CHECKPOINT_EVERY = 2
 
-def _rounds_for(n_bound: int) -> int:
-    return max(1, math.ceil(math.log2(max(2, int(n_bound)))) + 1)
 
-
-def pointer_jump_components(
-    edges: DataFrame,
-    n_bound: int,
-    checkpoint_every: int = 2,
-    poll_convergence: bool = True,
-) -> DataFrame:
+def pointer_jump_components(edges: DataFrame, n_bound: int) -> DataFrame:
     """Min-label propagation with pointer jumping over an undirected
     edge list. ``edges`` must have columns (src, dst) — one direction
     is enough, symmetrization happens here. Returns (node, lab) where
@@ -79,16 +62,13 @@ def pointer_jump_components(
     (callers pass a block-size max or a distinct-node count — one
     scalar action total). The loop runs until the label frame is
     STABLE across a checkpoint window (one tiny count action per
-    ``checkpoint_every`` rounds, NOT per round) — a stable window of
+    ``_CHECKPOINT_EVERY`` rounds, NOT per round) — a stable window of
     this monotone min-update is the fixpoint, and the fixpoint equals
     the per-component minimum. ``n_bound + 1`` rounds is the safety
     cap (plain hash-min converges in diameter+1 ≤ n_bound rounds and
     the shortcut never slows it); the ⌈log₂ n_bound⌉+1 figure is only
     the friendly-id-layout round count, NOT a guarantee — see the
     module docstring for the grid-graph counterexample.
-    ``poll_convergence=False`` is a legacy benchmark mode that stops
-    at the log₂ budget and may under-converge on adversarial id
-    layouts; no production query uses it.
 
     Round-loop shuffle partitions are sized from the (already
     checkpointed, so cheap-to-count) edge list rather than the session
@@ -115,27 +95,18 @@ def pointer_jump_components(
     # ~1M pair rows per task, floor 4 so skew has room, capped at the
     # session setting (a 100 TB pair list keeps the full width)
     loop_parts = max(4, min(int(old_parts), n_edges // 1_000_000 + 4))
-    # poll mode: run to the convergence poll's fixpoint, capped by the
-    # sound hash-min bound (diameter+1 ≤ n_bound); legacy no-poll mode
-    # keeps the log₂ budget (approximate on adversarial id layouts)
-    rounds = int(n_bound) + 1 if poll_convergence else _rounds_for(n_bound)
+    # run to the convergence poll's fixpoint, capped by the sound
+    # hash-min bound (diameter+1 ≤ n_bound)
+    rounds = int(n_bound) + 1
     spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
     try:
-        labels = _pointer_jump_rounds(
-            edges, labels, rounds, checkpoint_every, poll_convergence
-        )
+        labels = _pointer_jump_rounds(edges, labels, rounds)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_parts)
     return labels
 
 
-def _pointer_jump_rounds(
-    edges: DataFrame,
-    labels: DataFrame,
-    rounds: int,
-    checkpoint_every: int,
-    poll_convergence: bool,
-) -> DataFrame:
+def _pointer_jump_rounds(edges: DataFrame, labels: DataFrame, rounds: int) -> DataFrame:
     prev_ckpt = labels
     for i in range(rounds):
         neighbor_min = (
@@ -163,14 +134,12 @@ def _pointer_jump_rounds(
             ).alias("lab"),
         )
         # an eager localCheckpoint is a full job; checkpoint every
-        # checkpoint_every rounds (lineage stays trivially small) and
+        # _CHECKPOINT_EVERY rounds (lineage stays trivially small) and
         # always on the last round so the closing aggregate reads a
-        # flat plan. Measured ~25% off wall time vs every-round (r4);
-        # LONGER lineages measured slower, not faster (round 5) — the
-        # re-planned multi-round lineage grows superlinearly.
-        if i % checkpoint_every == checkpoint_every - 1 or i == rounds - 1:
+        # flat plan
+        if i % _CHECKPOINT_EVERY == _CHECKPOINT_EVERY - 1 or i == rounds - 1:
             labels = labels.localCheckpoint(eager=True)
-            if poll_convergence and i < rounds - 1:
+            if i < rounds - 1:
                 changed = (
                     labels.alias("n")
                     .join(prev_ckpt.alias("o"), "node")
@@ -182,82 +151,3 @@ def _pointer_jump_rounds(
                 prev_ckpt = labels
     return labels
 
-
-def star_contract_components(edges: DataFrame, n_bound: int) -> DataFrame:
-    """Alternating large-star/small-star contraction (Kiveris et al.
-    2014). Same contract as ``pointer_jump_components``; kept as the
-    measured alternative (see module docstring) and exercised by the
-    randomized parity test in tests/test_properties.py.
-
-    Termination (fixed round 8, same class as the pointer-jump fix):
-    the loop runs to a STABLE edge set (one fused symmetric-difference
-    action every two rounds — at the fixpoint every component is a
-    star on its minimum and both contractions reproduce it verbatim;
-    adjacent-round equality is exactly f(E)=E since each round is a
-    pure function of the edge set), capped at
-    ``n_bound + 1`` rounds; the previous ⌈log₂ n_bound⌉+1 stop is a
-    friendly-layout round count, not Kiveris' bound (their proof gives
-    O(log² n) rounds), and under-converges on scrambled-id chains."""
-    cur = (
-        edges.select("src", "dst")
-        .filter(F.col("src") != F.col("dst"))
-        .localCheckpoint(eager=True)
-    )
-    all_nodes = (
-        cur.select(F.col("src").alias("node"))
-        .union(cur.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-
-    def _sym(e: DataFrame) -> DataFrame:
-        return e.union(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-
-    poll_every = 2
-    for i in range(int(n_bound) + 1):
-        if i == 0 and cur.isEmpty():
-            break
-        sym = _sym(cur)
-        # large-star: every neighbor LARGER than u links to u's min
-        mins = sym.groupBy("src").agg(
-            F.least(F.min("dst"), F.first("src")).alias("m")
-        )
-        large = (
-            sym.join(mins, "src")
-            .filter(F.col("dst") > F.col("src"))
-            .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-        )
-        sym2 = _sym(large).distinct()
-        # small-star: every neighbor ≤ u (and u itself) links to the
-        # min of that closed neighborhood
-        small_nbr = sym2.filter(F.col("dst") <= F.col("src"))
-        smins = small_nbr.groupBy("src").agg(
-            F.least(F.min("dst"), F.first("src")).alias("m")
-        )
-        small = (
-            small_nbr.join(smins, "src")
-            .select(F.col("dst").alias("u"), F.col("m"))
-            .union(smins.select(F.col("src").alias("u"), F.col("m")))
-            .filter(F.col("u") != F.col("m"))
-            .select(F.col("u").alias("src"), F.col("m").alias("dst"))
-            .distinct()
-        )
-        prev, cur = cur, small.localCheckpoint(eager=True)
-        # stable ADJACENT-round edge set ⇒ fixpoint (both contractions
-        # are pure functions of the edge set alone, so f(E)=E). One
-        # driver action per poll_every rounds (ADVICE r8): both
-        # exceptAll directions fused into a single symmetric-difference
-        # job instead of two isEmpty actions every round. An extra
-        # round past the fixpoint is a no-op contraction, strictly
-        # cheaper than the per-round poll it replaces.
-        if i % poll_every == poll_every - 1 and (
-            cur.exceptAll(prev).union(prev.exceptAll(cur)).isEmpty()
-        ):
-            break
-    # at the fixpoint edges form stars centered on component minima
-    lab = cur.groupBy(F.col("src").alias("node")).agg(F.min("dst").alias("lab"))
-    return all_nodes.join(lab, "node", "left").select(
-        "node", F.coalesce(F.col("lab"), F.col("node")).alias("lab")
-    )

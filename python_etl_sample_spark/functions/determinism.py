@@ -14,7 +14,7 @@ strings so both engines compute literally the same thing.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # Scale 6: the fixture money columns are exact 2-decimal values, so every
@@ -137,3 +137,24 @@ def r6(col: Column) -> Column:
     whose textual formatting may differ (e.g. products of doubles are
     bit-deterministic; this is only for display-stability of ratios)."""
     return F.round(col, 6)
+
+
+def _pearson_from_int_sums(m: DataFrame, out: str) -> DataFrame:
+    """Pearson r from exact integer moment sums (n, sx, sy, sxy, sxx,
+    syy already columns of ``m``): the numerator/denominator products
+    are formed on exact int64s, cast to double once, and the ratio is
+    NULL (not NaN/error) when either variable is constant."""
+    num = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
+    vx = (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")).cast("double")
+    vy = (F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")).cast("double")
+    den = F.sqrt(vx * vy)
+    return m.withColumn(out, F.round(F.when(den != 0.0, num / den), 6))
+
+
+# Exact-integer SQL fragments shared by operator modules: money as
+# integer cents (exact in both engines, so moment sums over them are
+# exact int64/decimal arithmetic) and the 38-digit decimal those sums
+# are carried in.
+_CENTS = "CAST(round(o_totalprice * 100) AS BIGINT)"
+_VCENTS = "CAST(round(value * 100) AS BIGINT)"
+_DEC38 = "decimal(38,0)"

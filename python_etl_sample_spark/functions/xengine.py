@@ -1,15 +1,14 @@
 """Cross-engine hash families for the approximate-detector tier.
 
-Extracted from operators/round10_ops.py (round 11) so the DETECTORS
-(``dedup_near_minhash``, ``dedup_simhash`` in operators/dedup.py;
-``sim_ann_lsh``, ``sim_ann_ivf`` in operators/similarity.py) and their
-RECALL queries (operators/round10_ops.py) consume the identical
-families, frames, and session memos — which is what lets round 11
-retire the rows-only evidence class: every banding decision these
-detectors make now replays in DuckDB SQL, so the detectors themselves
-are hash-checked (VERDICT r10 item 1).
+Shared so the DETECTORS (``dedup_near_minhash``, ``dedup_simhash`` in
+operators/dedup.py; ``sim_ann_lsh``, ``sim_ann_ivf`` in
+operators/similarity.py) and their RECALL queries
+(``dedup_minhash_recall``, ``dedup_simhash_recall``, ``sim_ann_recall``)
+consume the identical families, frames, and session memos. Every
+banding decision these detectors make therefore replays in DuckDB SQL,
+so the detectors themselves are hash-checked.
 
-The families (full rationale in round10_ops' module docstring):
+The families (full rationale in operators/dedup.py's module docstring):
 
 - shingle identity: char-polynomial ``(acc·31 + code) mod (2³¹−1)`` —
   both engines fold the identical integer recurrence map-side;
@@ -22,8 +21,7 @@ The families (full rationale in round10_ops' module docstring):
   consumes an identical 9-dp-rounded double in both engines.
 
 Import direction: this module sits in functions/ and imports only
-cache/sources — operators/dedup.py, operators/similarity.py and
-operators/round10*.py all import it without cycles.
+cache/sources, so every operator module can import it without cycles.
 """
 
 from __future__ import annotations
@@ -39,7 +37,7 @@ from python_etl_sample_spark.cache import cached_df
 from python_etl_sample_spark.sources import table
 
 # --------------------------------------------------------------------------
-# constants (moved verbatim from round10_ops)
+# constants
 # --------------------------------------------------------------------------
 
 #: char-polynomial modulus (2³¹−1): keys stay < 2³¹ so every

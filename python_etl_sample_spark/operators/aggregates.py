@@ -10,6 +10,11 @@ Determinism: all double sums go through exact decimal accumulation
 (functions/determinism.dsum) so parallel accumulation order cannot
 change the hash; variance/correlation are computed from those exact
 moment sums with the same closed formula in both engines.
+
+- ``agg_percentile_cont``: SQL-standard PERCENTILE_CONT linear
+  interpolation at q ∈ {25, 50, 75, 90, 99}% over the total-order
+  kernel — the interpolated complement to the rank-exact
+  agg_percentile_exact (the two standard quantile definitions).
 """
 
 from __future__ import annotations
@@ -27,6 +32,7 @@ from python_etl_sample_spark.functions.determinism import (
     dsum_big_sql,
     dsum_sql,
 )
+from python_etl_sample_spark.functions.total_order import attach_global_order
 from python_etl_sample_spark.registry import query
 from python_etl_sample_spark.sources import table
 
@@ -394,4 +400,311 @@ def agg_approx_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.abs(F.col("ap50") - F.col("p50")) <= 0.10 * F.abs(F.col("p50"))).alias(
             "approx_ok"
         ),
+    )
+
+
+#: (numerator, denominator) quantile fractions — integer arithmetic so
+#: rank = ceil(q·n) is exact in both engines (0.9·n in doubles rounds
+#: unpredictably at ulp boundaries; (n·qn + qd − 1) div qd never does)
+_QUANTILES = ((25, 100), (50, 100), (75, 100), (90, 100), (99, 100))
+
+
+@query(
+    "agg_exact_quantiles_global",
+    oracle=f"""
+    WITH r AS (
+      SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
+             ROW_NUMBER() OVER (
+               ORDER BY round(o_totalprice * 100), o_orderkey) AS rn
+      FROM orders
+    ),
+    n AS (SELECT COUNT(*) AS c FROM orders),
+    q AS (
+      SELECT UNNEST([{','.join(str(qn) for qn, _ in _QUANTILES)}]) AS qn
+    ),
+    t AS (
+      SELECT qn, (c * qn + 99) // 100 AS target, c
+      FROM q CROSS JOIN n
+    )
+    SELECT t.qn / 100.0 AS quantile,
+           CAST(t.target AS BIGINT) AS rank,
+           CAST(t.c AS BIGINT) AS n_rows,
+           round(r.cents / 100.0, 2) AS value
+    FROM t JOIN r ON r.rn = t.target
+    """,
+)
+def agg_exact_quantiles_global(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """EXACT global quantiles (P25/P50/P75/P90/P99) of order value by
+    the inverse-CDF (type-1) definition — value at rank ⌈q·n⌉ under the
+    (cents, orderkey) total order. approx_percentile trades error
+    bounds for one pass; this is the exact tier, and unlike a
+    partitionless window it runs on the range-partitioned total-order
+    kernel (functions/total_order.py): one range shuffle, a broadcast
+    of 5 target ranks, no single-task stage anywhere.
+
+    The target rank is pure integer arithmetic ((n·qn + 99) div 100),
+    never ceil of a float — 0.9·n in binary floats rounds
+    unpredictably at ulp boundaries and would shift the selected rank
+    by one on exact multiples."""
+    o = table(spark, sf_dir, "orders")
+    cents = F.expr("CAST(round(o_totalprice * 100) AS BIGINT)")
+    ranked = attach_global_order(
+        o.select(cents.alias("cents"), "o_orderkey"),
+        [F.asc("cents"), F.asc("o_orderkey")],
+        rn="rn",
+        # total row count from the kernel's partition-totals frame —
+        # a separate count() here costs a full extra pass over the
+        # cached frame plus its own broadcast (plan audit r14)
+        total_count="c",
+    )
+    qs = spark.createDataFrame([(qn,) for qn, _ in _QUANTILES], "qn int")
+    return (
+        ranked.crossJoin(F.broadcast(qs))
+        .filter(F.col("rn") == F.expr("(c * qn + 99) div 100"))
+        .select(
+            (F.col("qn") / 100.0).alias("quantile"),
+            F.col("rn").cast("bigint").alias("rank"),
+            F.col("c").cast("bigint").alias("n_rows"),
+            F.round(F.col("cents") / 100.0, 2).alias("value"),
+        )
+    )
+
+
+@query(
+    "agg_skew_salted_distinct",
+    oracle=f"""
+    SELECT event_type,
+           COUNT(DISTINCT user_id) AS n_users,
+           COUNT(*) AS n_events,
+           {dsum_sql('value')} AS total_value
+    FROM events GROUP BY event_type
+    """,
+)
+def agg_skew_salted_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact COUNT(DISTINCT) over hot keys via salted two-phase
+    aggregation: events has only 5 event_type values, so a naive
+    distinct-aggregate funnels every row of a hot key through one
+    reducer. Salting by user_id % 16 splits each hot key into 16
+    sub-aggregations; because the salt is a pure function of the
+    DISTINCT column, every user lands in exactly one bucket and the
+    per-bucket distinct counts SUM to the exact global distinct — no
+    overlap, no approximation. The decimal partial sums re-aggregate
+    exactly (decimal addition is associative), so the result is
+    bit-identical to the direct single-phase oracle.
+
+    Scale: phase 1 shuffles on (event_type, salt) — 16× the reduce
+    parallelism on the hottest key; phase 2 merges 16 rows per key.
+    This is THE rewrite for exact-distinct over skewed keys at 100 TB;
+    for unbounded cardinality swap phase 1's countDistinct for an HLL
+    sketch (sketch_hll_mergeable) and the shape is unchanged."""
+    ev = table(spark, sf_dir, "events")
+    phase1 = ev.groupBy(
+        "event_type", (F.col("user_id") % 16).alias("salt")
+    ).agg(
+        F.countDistinct("user_id").alias("d"),
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.col("value").cast("decimal(28,6)")).alias("s"),
+    )
+    return phase1.groupBy("event_type").agg(
+        F.sum("d").alias("n_users"),
+        F.sum("n").alias("n_events"),
+        F.sum("s").cast("double").alias("total_value"),
+    )
+
+
+@query(
+    "agg_theil_index",
+    oracle=f"""
+    WITH cust AS (
+      SELECT c.c_nationkey AS nation, o.o_custkey AS k,
+             {dsum_sql('o.o_totalprice')} AS x
+      FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
+      GROUP BY 1, 2
+    ),
+    g AS (
+      SELECT nation, COUNT(*) AS ng, {dsum_sql('x')} AS xg
+      FROM cust GROUP BY nation
+    ),
+    tot AS (SELECT CAST(SUM(ng) AS BIGINT) AS n, {dsum_sql('xg')} AS xt FROM g)
+    SELECT c.nation,
+           MAX(g.ng) AS n_customers,
+           ROUND(SUM((c.x / g.xg) * ln((c.x / g.xg) * g.ng)), 6)
+             AS theil_within,
+           ROUND(MAX((g.xg / t.xt) * ln((g.xg / t.xt) * (t.n / g.ng))), 6)
+             AS between_term,
+           ROUND(MAX(g.xg / t.xt), 6) AS revenue_share
+    FROM cust c
+    JOIN g ON g.nation = c.nation
+    CROSS JOIN tot t
+    GROUP BY c.nation
+    """,
+)
+def agg_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Theil T inequality index of customer revenue, decomposed by
+    nation: within-nation T_g = Σ (x/X_g)·ln((x/X_g)·n_g) plus each
+    nation's between-group term (X_g/X)·ln((X_g/X)·(n/n_g)) — total
+    inequality = Σ share·T_g + Σ between, the additive decomposition
+    Gini (stats_gini_lorenz) famously lacks, which is why Theil is the
+    concentration diagnostic for partitioned data.
+
+    Customer revenues are decimal-exact; every ln argument is a ratio
+    of exact sums times an exact count (PMI/PSI ln-parity surface);
+    the per-nation rollup sums ≤customers terms, rounded at 6 dp.
+    Scale: one custkey aggregate (co-partitioned with the orders
+    scan), one nation aggregate, two broadcast scalar attaches."""
+    o = table(spark, sf_dir, "orders")
+    c = table(spark, sf_dir, "customer")
+    cust = (
+        o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
+        .groupBy(
+            F.col("c_nationkey").alias("nation"), F.col("o_custkey").alias("k")
+        )
+        .agg(dsum("o_totalprice").alias("x"))
+    )
+    g = cust.groupBy("nation").agg(
+        F.count(F.lit(1)).alias("ng"), dsum("x").alias("xg")
+    )
+    tot = g.agg(
+        F.sum("ng").cast("bigint").alias("n"), dsum("xg").alias("xt")
+    )
+    return (
+        cust.join(F.broadcast(g), "nation")
+        .crossJoin(F.broadcast(tot))
+        .groupBy("nation")
+        .agg(
+            F.max("ng").alias("n_customers"),
+            F.round(
+                F.sum(
+                    (F.col("x") / F.col("xg"))
+                    * F.log((F.col("x") / F.col("xg")) * F.col("ng"))
+                ),
+                6,
+            ).alias("theil_within"),
+            F.round(
+                F.max(
+                    (F.col("xg") / F.col("xt"))
+                    * F.log(
+                        (F.col("xg") / F.col("xt"))
+                        * (F.col("n") / F.col("ng"))
+                    )
+                ),
+                6,
+            ).alias("between_term"),
+            F.round(F.max(F.col("xg") / F.col("xt")), 6).alias("revenue_share"),
+        )
+    )
+
+
+_LCENTS = "CAST(round(l_extendedprice * 100) AS BIGINT)"
+
+
+# ---------------------------------------------------------------------------
+# agg_percentile_cont
+# ---------------------------------------------------------------------------
+
+_PCTS = ((25, "0.25"), (50, "0.5"), (75, "0.75"), (90, "0.9"), (99, "0.99"))
+
+
+@query(
+    "agg_percentile_cont",
+    oracle=f"""
+    WITH v AS (
+      SELECT {_LCENTS} AS cents, l_orderkey, l_linenumber FROM lineitem
+    ),
+    r AS (
+      SELECT cents,
+             ROW_NUMBER() OVER (ORDER BY cents, l_orderkey, l_linenumber)
+               AS rn,
+             COUNT(*) OVER () AS n
+      FROM v
+    ),
+    qs AS (SELECT UNNEST([{", ".join(p for _, p in _PCTS)}]) AS q,
+                  UNNEST([{", ".join(str(t) for t, _ in _PCTS)}]) AS pct),
+    hit AS (
+      SELECT qs.pct, qs.q, r.n,
+             1.0 + (r.n - 1) * qs.q AS pos,
+             MAX(CASE WHEN r.rn = CAST(floor(1.0 + (r.n - 1) * qs.q)
+                                       AS BIGINT)
+                      THEN r.cents END) AS v_lo,
+             MAX(CASE WHEN r.rn = CAST(ceil(1.0 + (r.n - 1) * qs.q)
+                                       AS BIGINT)
+                      THEN r.cents END) AS v_hi
+      FROM r CROSS JOIN qs
+      GROUP BY qs.pct, qs.q, r.n
+    )
+    SELECT pct, CAST(n AS BIGINT) AS n_rows,
+           round((CAST(v_lo AS DOUBLE)
+                  + (pos - floor(pos)) * (v_hi - v_lo)) / 100.0, 6)
+             AS percentile_cont
+    FROM hit
+    """,
+)
+def agg_percentile_cont(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SQL-standard PERCENTILE_CONT: linear interpolation at position
+    1 + (n−1)·q between the two bracketing order statistics of
+    extended price, at the 25/50/75/90/99th percentiles — the
+    interpolated quantile definition (the one NumPy, DuckDB
+    quantile_cont, and warehouse PERCENTILE_CONT implement), closing
+    the family next to the rank-exact agg_percentile_exact and the
+    approximate agg_approx_quantile.
+
+    Scale: the total order comes from the range-partitioned kernel
+    (no single-task sort); each quantile needs exactly the rows whose
+    global rank equals ⌊pos⌋ or ⌈pos⌉ — a broadcast join of the
+    5-row quantile frame against rank-filtered rows, so nothing
+    beyond the kernel's range shuffle is data-sized.
+
+    Determinism: ranks are exact under the (cents, orderkey,
+    linenumber) total order; pos = 1+(n−1)·q is the same IEEE double
+    in both engines (identical operands, identical ops), so the
+    bracketing ranks agree; the interpolation is one mirrored float
+    expression of two exact integers, rounded at 6 dp."""
+    li = table(spark, sf_dir, "lineitem")
+    v = li.select(
+        F.expr(_LCENTS).alias("cents"), "l_orderkey", "l_linenumber"
+    )
+    r = attach_global_order(
+        v,
+        [F.asc("cents"), F.asc("l_orderkey"), F.asc("l_linenumber")],
+        rn="rn",
+        total_count="n",
+    )
+    qs = spark.createDataFrame(
+        [(pct, float(q)) for pct, q in _PCTS], "pct int, q double"
+    )
+    pos = 1.0 + (F.col("n") - 1) * F.col("q")
+    hit = (
+        r.crossJoin(F.broadcast(qs))
+        .filter(
+            (F.col("rn") == F.floor(pos).cast("bigint"))
+            | (F.col("rn") == F.ceil(pos).cast("bigint"))
+        )
+        .groupBy("pct", "q", "n")
+        .agg(
+            F.max(
+                F.when(
+                    F.col("rn") == F.floor(pos).cast("bigint"),
+                    F.col("cents"),
+                )
+            ).alias("v_lo"),
+            F.max(
+                F.when(
+                    F.col("rn") == F.ceil(pos).cast("bigint"),
+                    F.col("cents"),
+                )
+            ).alias("v_hi"),
+        )
+    )
+    ppos = 1.0 + (F.col("n") - 1) * F.col("q")
+    return hit.select(
+        "pct",
+        F.col("n").cast("long").alias("n_rows"),
+        F.round(
+            (
+                F.col("v_lo").cast("double")
+                + (ppos - F.floor(ppos)) * (F.col("v_hi") - F.col("v_lo"))
+            )
+            / 100.0,
+            6,
+        ).alias("percentile_cont"),
     )

@@ -11,6 +11,98 @@ Scale posture:
   verified with an exact Jaccard only within buckets. This is the
   standard web-scale near-dup pipeline (Broder; used by every large
   LLM-corpus cleanup).
+
+- ``dedup_consensus``: per-pair evidence report joining the
+  hash-checkable duplicate detectors (exact content hash, n-gram
+  Jaccard, fuzzy Levenshtein) — which detectors fired, how many agree.
+
+Embedding-space curation operators on top of the
+deterministic k-means fit (similarity.py ``_km_fit``):
+
+- ``dedup_semantic_cluster``: cluster-pruned semantic dedup — the
+  100 TB route for embedding near-dup detection: cosine pairs are only
+  computed WITHIN a k-means cluster, shrinking the pair space from
+  O(n²) to Σ|cluster|² while the deterministic fit keeps the result
+  exactly replayable (full DuckDB oracle — unlike the LSH tiers, this
+  prune is hash-checkable because the clustering itself is).
+
+Determinism: cosine similarities are the block-proven dot/norm
+formulation of operators/similarity.py rounded at 9 dp.
+
+- ``dedup_incremental_batch``: the PRODUCTION dedup mode — a new
+  ingest batch checked against the existing corpus by content hash
+  (hash-join of 32-byte digests, not documents).
+
+- ``dedup_substring_spans``: exact duplicated word-8-gram spans
+  appearing in ≥ 2 distinct documents — the exact-substring layer of
+  training-data dedup (the Lee et al. 2022 "Deduplicating Training
+  Data" shape re-expressed relationally), which catches shared
+  boilerplate/quotes that whole-document and near-dup detectors miss.
+
+- ``dedup_semantic_recall``: measures the cluster-pruned semantic
+  dedup's recall against the exact cosine pair set per similarity
+  band — turning ``dedup_semantic_cluster``'s docstring honesty ("a cross-cluster
+  near-dup pair is invisible here") into a hash-checked number.
+
+Driver-visible recall evidence for the approximate tiers.
+
+Four queries (``dedup_near_minhash``, ``dedup_simhash``,
+``sim_ann_lsh``, ``sim_ann_ivf``) had rows-only driver evidence: their
+xxhash64 / NumPy internals aren't DuckDB-expressible, so "the banding
+actually finds the planted near-dups" was asserted only in pytest. The
+recall queries make that quality claim a **fully hash-checked driver row**, the
+way ``dedup_semantic_recall`` did for the embedding-ANN
+tier: recall is an exact join of two deterministic sets, so the whole
+measurement — ground truth, catch flags, recall ratios — replays in SQL.
+
+The one substitution that makes this possible: the engine-specific hash
+families (xxhash64 seeds; NumPy's 512-sample quantizer) are swapped for
+the repo's audited cross-engine families —
+
+- shingle identity: char-polynomial ``(acc·31 + code) mod (2³¹−1)``
+  (map-side, both engines fold the identical integer recurrence);
+- minhash permutations / simhash bit-hashes: the overflow-audited
+  multiplicative family ``(k · A_i) mod P`` with ``A_i < 2³²`` and
+  ``k < 2³¹`` so every product stays inside int64 in BOTH engines
+  (same audit as operators/inference.py:525);
+- the IVF quantizer: the full-corpus deterministic Lloyd fit
+  (similarity._km_fit) whose SQL replay (``_km_ctes``) already
+  hash-passes, instead of sim_ann_ivf's private NumPy 512-sample fit.
+
+What is measured is therefore the deployed **banding geometry** — the
+same shingle sets, the same b=4×r=8 minhash banding, the same 4-chunk
+simhash banding and radius, the same LSH tables/bucket width and the
+same nprobe=2 IVF probing — under an exchangeable hash family. The
+recall of the *scheme* is the quality claim; the hash family is an
+implementation detail the scheme's analysis (Broder; Charikar) is
+agnostic to. The pytest tier separately pins that the xxhash64
+pipelines find the planted near-dups (tests/test_round10_ops.py pins
+the cross-engine truth set equal to ``dedup_ngram_jaccard``'s).
+
+Float determinism notes: every discontinuous step (floor-bucketing,
+argmin, radius test) consumes a 9-dp-rounded double — the established
+guard that makes index-ordered Spark folds and DuckDB range-SUMs agree
+bit-for-bit at the comparison (similarity.py module docstring).
+
+- ``dedup_minhash_param_sweep`` — the LSH S-curve made driver-visible:
+  candidate recall AND candidate volume for four (bands × rows) splits
+  of the same 32-permutation signature, the measurement that picks the
+  banding geometry before a 100 TB dedup run.
+
+- ``dedup_jaccard_histogram``: the pairwise-similarity temperature of
+  the corpus — how many shared-shingle pairs sit in each Jaccard band.
+  Rides the session-memoized cross-engine inverted-index frames
+  (functions/xengine.py), so it adds one aggregation to machinery the
+  dedup tier already runs.
+
+- ``dedup_semdedup_eps``: the SemDeDup decision curve (Abbas et al.
+  2023, "SemDeDup: Data-efficient learning at web-scale through
+  semantic deduplication" — public arXiv paper): for a grid of
+  within-cluster cosine thresholds 1−ε, how many pairs qualify, how
+  many documents the keep-lowest rule drops, and the corpus retention
+  that remains. The per-threshold retention curve is THE artifact a
+  curation team reads before picking ε — one number per candidate
+  policy, all from one pair scan.
 """
 
 from __future__ import annotations
@@ -23,6 +115,27 @@ from pyspark.sql import functions as F
 from python_etl_sample_spark.cache import cached_df
 from python_etl_sample_spark.functions import xengine as xe
 from python_etl_sample_spark.functions.components import pointer_jump_components
+from python_etl_sample_spark.functions.determinism import DEC9, dsum9_sql
+from python_etl_sample_spark.functions.kmeans import _km_ctes, _km_fit
+from python_etl_sample_spark.functions.xengine import (
+    _BANDS,
+    _MH_BK_COLS_SQL,
+    _MH_SIG_COLS_SQL,
+    _SH_CHUNK_COLS_SQL,
+    _SH_CHUNKS,
+    _SH_SUM_COLS_SQL,
+    _X_CTES,
+    _xengine_minhash_sig,
+    _xengine_pairs,
+    _xengine_shingle_keys,
+    xengine_minhash_bands,
+    xengine_simhash_chunks,
+)
+from python_etl_sample_spark.operators.similarity import (
+    _DEDUP_COS_ORACLE,
+    dedup_embedding_cosine,
+)
+from python_etl_sample_spark.operators.text_extras import dedup_fuzzy_levenshtein
 from python_etl_sample_spark.registry import query
 from python_etl_sample_spark.sources import table
 
@@ -482,4 +595,1228 @@ def dedup_cluster_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("label").alias("keeper_doc_id"),
             "cluster_size",
         )
+    )
+
+
+#: raw-URL synthesis — {idiv} is the integer-division token ('//' in
+#: DuckDB, 'div' in Spark SQL) and {str_t} the unsized string type
+#: ('VARCHAR' / 'STRING'); everything else is dialect-shared
+_RAW_URL_TMPL = """
+      'http' || CASE WHEN doc_id % 2 = 0 THEN 's' ELSE 'S' END || '://'
+      || CASE doc_id % 3 WHEN 0 THEN 'WWW.corpus.example'
+                         WHEN 1 THEN 'www.Corpus.Example'
+                         ELSE 'corpus.example' END
+      || '/docs/' || CAST(doc_id {idiv} 8 AS {str_t})
+      || CASE doc_id % 4 WHEN 0 THEN ''
+                         WHEN 1 THEN '/'
+                         WHEN 2 THEN '?utm_source=feed'
+                         ELSE '#ref' END
+"""
+_RAW_URL_SQL = _RAW_URL_TMPL.format(idiv="//", str_t="VARCHAR")
+
+
+@query(
+    "dedup_url_canonicalize",
+    oracle=f"""
+    WITH raw AS (
+      SELECT doc_id, {_RAW_URL_SQL} AS url
+      FROM documents
+    ),
+    canon AS (
+      SELECT doc_id, url,
+             regexp_replace(
+               replace(
+                 split_part(split_part(lower(url), '?', 1), '#', 1),
+                 '://www.', '://'),
+               '/$', '') AS curl
+      FROM raw
+    )
+    SELECT curl AS canonical_url,
+           COUNT(*) AS n_docs,
+           COUNT(DISTINCT url) AS n_raw_variants,
+           MIN(doc_id) AS keeper_doc_id
+    FROM canon GROUP BY curl
+    """,
+)
+def dedup_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """URL-canonicalization dedup — the first dedup stage of every
+    web-scale corpus pipeline: scheme/host case-folding, www-stripping,
+    tracking-query and fragment removal, trailing-slash normalization,
+    then exact grouping on the canonical form with a min-id keeper.
+
+    The synthetic raw URLs vary scheme case, host case, www prefix,
+    and suffix per doc while every 8 consecutive doc_ids share one
+    canonical page, so the groups genuinely exercise each rule (the
+    raw-variant count per group proves the inputs differed). The
+    canonicalizer runs on the URL STRING in both engines — lower +
+    split at ?/# + www-strip + trailing-slash regex — not re-derived
+    from doc features, so a rule regression breaks the hash. Scale:
+    map-side string ops + one groupBy(canonical) shuffle; 32-byte-ish
+    keys, never documents."""
+    d = table(spark, sf_dir, "documents")
+    raw = d.select(
+        "doc_id",
+        F.expr(_RAW_URL_TMPL.format(idiv="div", str_t="STRING")).alias("url"),
+    )
+    curl = F.regexp_replace(
+        F.expr(
+            "replace(split_part(split_part(lower(url), '?', 1), '#', 1),"
+            " '://www.', '://')"
+        ),
+        "/$",
+        "",
+    )
+    return (
+        raw.select("doc_id", "url", curl.alias("curl"))
+        .groupBy(F.col("curl").alias("canonical_url"))
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.countDistinct("url").alias("n_raw_variants"),
+            F.min("doc_id").alias("keeper_doc_id"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# dedup_consensus
+# ---------------------------------------------------------------------------
+
+@query(
+    "dedup_consensus",
+    oracle=f"""
+    WITH h AS (
+      SELECT doc_id, sha256(lower(trim(text))) AS ch FROM documents
+    ),
+    e AS (
+      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
+      FROM h a JOIN h b ON a.ch = b.ch AND a.doc_id < b.doc_id
+    ),
+    {_NGRAM_CTES},
+    g AS (
+      SELECT doc_a, doc_b
+      FROM inter
+      JOIN sizes sa ON sa.doc_id = doc_a
+      JOIN sizes sb ON sb.doc_id = doc_b
+      WHERE n_inter / (sa.n + sb.n - n_inter) >= 0.8
+    ),
+    f AS (
+      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
+      FROM documents a
+      JOIN documents b
+        ON a.lang = b.lang AND a.source = b.source
+       AND a.doc_id < b.doc_id
+       AND abs(a.n_chars - b.n_chars) <= 5
+      WHERE levenshtein(substr(a.text, 1, 60), substr(b.text, 1, 60)) <= 20
+    ),
+    u AS (
+      SELECT doc_a, doc_b FROM e
+      UNION
+      SELECT doc_a, doc_b FROM g
+      UNION
+      SELECT doc_a, doc_b FROM f
+    )
+    SELECT u.doc_a, u.doc_b,
+           CAST(e.doc_a IS NOT NULL AS INT) AS exact_dup,
+           CAST(g.doc_a IS NOT NULL AS INT) AS ngram_dup,
+           CAST(f.doc_a IS NOT NULL AS INT) AS fuzzy_dup,
+           CAST(CAST(e.doc_a IS NOT NULL AS INT)
+                + CAST(g.doc_a IS NOT NULL AS INT)
+                + CAST(f.doc_a IS NOT NULL AS INT) AS INT) AS n_detectors
+    FROM u
+    LEFT JOIN e ON e.doc_a = u.doc_a AND e.doc_b = u.doc_b
+    LEFT JOIN g ON g.doc_a = u.doc_a AND g.doc_b = u.doc_b
+    LEFT JOIN f ON f.doc_a = u.doc_a AND f.doc_b = u.doc_b
+    """,
+    tags=("memo",),
+)
+def dedup_consensus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Semantic consensus dedup report: one row per candidate duplicate
+    pair found by ANY of the hash-checkable detectors — exact content
+    hash, exact n-gram Jaccard (≥ 0.8), fuzzy Levenshtein (prefix edit
+    distance ≤ 20 within a (lang, source) block) — with per-detector
+    flags and the agreement count. The LSH tiers (MinHash / SimHash /
+    ANN) are deliberately excluded so the report keeps a full DuckDB
+    oracle; their candidates are approximations OF these exact sets.
+
+    Reuses the registered detector implementations verbatim
+    (operators/dedup.py, so the evidence here is definitionally
+    consistent with each detector's own hash-checked output) — and
+    since round 10 the ngram/fuzzy detectors memoize their RESULT
+    frames (cache.py, VERDICT r9 item 2), so in a session where the
+    standalone detectors already ran this query reads two persisted
+    candidate-bounded frames instead of re-running their pipelines —
+    derives exact-duplicate PAIRS by self-joining the 32-byte content
+    hash (shuffles hashes, not documents), and assembles the report as
+    ONE tagged union + groupBy(doc_a, doc_b) max-aggregate: each detector
+    pipeline is computed exactly once and the consensus costs a single
+    pair-keyed shuffle. (The previous distinct-union + three left
+    joins re-evaluated every detector's lineage twice — once for the
+    union, once for its flag join — which at sf0.1 doubled the whole
+    query; same rows, same hash, half the work.)
+
+    Scale: each detector is already bucketed/blocked (see their
+    docstrings); the consensus layer adds only one shuffle of the
+    (sparse) union of detector outputs — linear in candidates, never
+    in the corpus pair space."""
+    d = table(spark, sf_dir, "documents")
+    h = d.select("doc_id", F.sha2(F.lower(F.trim(F.col("text"))), 256).alias("ch"))
+    ha = h.select(F.col("doc_id").alias("doc_a"), "ch")
+    hb = h.select(F.col("doc_id").alias("doc_b"), "ch")
+    exact = (
+        ha.join(hb, "ch")
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .select("doc_a", "doc_b")
+    )
+    ngram = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
+    fuzzy = dedup_fuzzy_levenshtein(spark, sf_dir).select(
+        F.col("doc_id").alias("doc_a"), F.col("doc_id2").alias("doc_b")
+    )
+
+    def tag(cand: DataFrame, e: int, g: int, f: int) -> DataFrame:
+        return cand.select(
+            "doc_a",
+            "doc_b",
+            F.lit(e).alias("e"),
+            F.lit(g).alias("g"),
+            F.lit(f).alias("f"),
+        )
+
+    out = (
+        tag(exact, 1, 0, 0)
+        .union(tag(ngram, 0, 1, 0))
+        .union(tag(fuzzy, 0, 0, 1))
+        .groupBy("doc_a", "doc_b")
+        .agg(
+            F.max("e").alias("exact_dup"),
+            F.max("g").alias("ngram_dup"),
+            F.max("f").alias("fuzzy_dup"),
+        )
+    )
+    return out.withColumn(
+        "n_detectors",
+        (F.col("exact_dup") + F.col("ngram_dup") + F.col("fuzzy_dup")).cast("int"),
+    )
+
+
+_COS_T = "0.45"  # same semantic-dup threshold as dedup_embedding_cosine
+# bit-identical to the older SUM-over-range(64) form but per-row
+# vectorized — sf1 within-cluster all-pairs tractability
+# (similarity.py note)
+_DOT = "list_dot_product({a}::DOUBLE[], {b}::DOUBLE[])"
+
+
+# ---------------------------------------------------------------------------
+# dedup_semantic_cluster
+# ---------------------------------------------------------------------------
+
+@query(
+    "dedup_semantic_cluster",
+    oracle=f"""
+    WITH {_km_ctes()},
+    emb AS (
+      SELECT f.vec_id, f.cid, v.emb,
+             sqrt({_DOT.format(a='v.emb', b='v.emb')}) AS nrm
+      FROM fin f JOIN v ON v.vec_id = f.vec_id
+    )
+    SELECT a.cid, a.vec_id AS vec_a, b.vec_id AS vec_b,
+           round({_DOT.format(a='a.emb', b='b.emb')} / (a.nrm * b.nrm), 9) AS sim
+    FROM emb a JOIN emb b ON a.cid = b.cid AND a.vec_id < b.vec_id
+    WHERE round({_DOT.format(a='a.emb', b='b.emb')} / (a.nrm * b.nrm), 9)
+          >= {_COS_T}
+    """,
+    tags=("memo",),
+)
+def dedup_semantic_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cluster-pruned semantic dedup: cosine near-dup pairs (sim ≥
+    0.45, the dedup_embedding_cosine threshold) computed ONLY within a
+    k-means cluster of the deterministic Lloyd fit (similarity._km_fit)
+    — the semantic-dedup shape that survives 100 TB: candidate pairs
+    shrink from O(n²) to Σ|cluster|², and because the clustering is
+    exactly replayable the prune itself is hash-checked against the
+    oracle (the LSH/ANN tiers can't make that claim; this operator and
+    dedup_embedding_ann bracket them from both sides).
+
+    Recall note (honest by construction): a cross-cluster near-dup pair
+    is invisible here — that is the deliberate trade every clustered
+    semantic dedup makes; k scales with the corpus so cluster diameter,
+    not corpus size, bounds the miss rate.
+
+    Scale: the pair join is an equi-join on cid (shuffle, never
+    cartesian); per-cluster pair fan-out is the skew risk — AQE
+    skew-split handles moderate cases, and at 100 TB k is raised so
+    clusters stay task-sized. Cosine = the similarity.py dot/norm
+    formulation (float32 products are exact in double), rounded 9 dp.
+
+    Warm-up tag ``memo``: reads the memoized Lloyd fit."""
+    assigned, _ = _km_fit(spark, sf_dir)
+    nrm = F.sqrt(
+        F.aggregate(
+            F.zip_with(F.col("emb"), F.col("emb"), lambda x, y: x * y),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+    )
+    e = assigned.select("cid", "vec_id", "emb", nrm.alias("nrm"))
+    a = e.select(
+        "cid",
+        F.col("vec_id").alias("vec_a"),
+        F.col("emb").alias("emb_a"),
+        F.col("nrm").alias("nrm_a"),
+    )
+    b = e.select(
+        "cid",
+        F.col("vec_id").alias("vec_b"),
+        F.col("emb").alias("emb_b"),
+        F.col("nrm").alias("nrm_b"),
+    )
+    dot = F.aggregate(
+        F.zip_with(F.col("emb_a"), F.col("emb_b"), lambda x, y: x * y),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    sim = F.round(dot / (F.col("nrm_a") * F.col("nrm_b")), 9)
+    return (
+        a.join(b, "cid")
+        .filter(F.col("vec_a") < F.col("vec_b"))
+        .withColumn("sim", sim)
+        .filter(F.col("sim") >= float(_COS_T))
+        .select("cid", "vec_a", "vec_b", "sim")
+    )
+
+
+# ---------------------------------------------------------------------------
+# dedup_incremental_batch
+# ---------------------------------------------------------------------------
+
+@query(
+    "dedup_incremental_batch",
+    oracle="""
+    WITH corpus AS (
+      SELECT doc_id, sha256(lower(trim(text))) AS ch FROM documents
+      WHERE doc_id % 5 <> 0
+    ),
+    batch AS (
+      SELECT doc_id, lang, sha256(lower(trim(text))) AS ch FROM documents
+      WHERE doc_id % 5 = 0
+    ),
+    hit AS (
+      SELECT b.doc_id, MIN(c.doc_id) AS dup_of
+      FROM batch b JOIN corpus c ON c.ch = b.ch
+      GROUP BY b.doc_id
+    )
+    SELECT b.doc_id, b.lang,
+           CAST(h.doc_id IS NOT NULL AS INT) AS is_dup,
+           h.dup_of
+    FROM batch b LEFT JOIN hit h ON h.doc_id = b.doc_id
+    """,
+)
+def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Incremental-ingest dedup — the mode a production corpus actually
+    runs (dedup_exact is the full-corpus backfill): a new batch (docs
+    with doc_id % 5 = 0, standing in for today's crawl) is checked
+    against the EXISTING corpus by content hash; each batch doc gets an
+    is_dup flag and the smallest matching corpus doc id.
+
+    Scale: both sides reduce to 32-byte sha256 digests before the
+    equi-join — the join shuffles hashes, never documents, and the
+    corpus side of a real deployment is a pre-computed hash index read
+    from storage, so the daily cost is |batch| hashing + one hash
+    join. MIN(dup_of) makes the attribution deterministic under
+    many-to-many hash matches."""
+    d = table(spark, sf_dir, "documents")
+    hashed = d.select(
+        "doc_id", "lang", F.sha2(F.lower(F.trim(F.col("text"))), 256).alias("ch")
+    )
+    corpus = hashed.filter(F.col("doc_id") % 5 != 0).select(
+        F.col("doc_id").alias("cid"), "ch"
+    )
+    batch = hashed.filter(F.col("doc_id") % 5 == 0)
+    hit = (
+        batch.join(corpus, "ch")
+        .groupBy("doc_id")
+        .agg(F.min("cid").alias("dup_of"))
+    )
+    return (
+        batch.join(hit, "doc_id", "left")
+        .select(
+            "doc_id",
+            "lang",
+            F.col("dup_of").isNotNull().cast("int").alias("is_dup"),
+            "dup_of",
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# dedup_substring_spans
+# ---------------------------------------------------------------------------
+
+#: span width in words — long enough that natural re-use is rare and a
+#: hit means actual copied text (the substring-dedup literature uses
+#: 50 BPE tokens at web scale; 8 words is the fixture-scale analogue)
+_SPAN_K = 8
+
+
+@query(
+    "dedup_substring_spans",
+    oracle=rf"""
+    WITH w AS (
+      SELECT doc_id,
+             list_filter(string_split_regex(lower(text), '\s+'),
+                         x -> x <> '') AS t
+      FROM documents
+    ),
+    sp AS (
+      SELECT doc_id, array_to_string(t[i:i + {_SPAN_K - 1}], ' ') AS span
+      FROM w, UNNEST(generate_series(1, len(t) - {_SPAN_K - 1})) AS u(i)
+      WHERE len(t) >= {_SPAN_K}
+    )
+    SELECT span, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs,
+           CAST(COUNT(*) AS BIGINT) AS n_occurrences,
+           MIN(doc_id) AS first_doc
+    FROM sp GROUP BY span
+    HAVING COUNT(DISTINCT doc_id) >= 2
+    """,
+)
+def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact duplicated substrings: every word-8-gram span that
+    appears in ≥ 2 distinct documents, with document reach, total
+    occurrences, and the earliest exemplar. The exact-substring layer
+    of training-data dedup — whole-document hashing misses a shared
+    paragraph inside otherwise-distinct pages, near-dup detectors
+    score it below threshold, while span-level matching (the
+    "Deduplicating Training Data Makes Language Models Better" recipe)
+    finds precisely the copied run so a pipeline can cut it.
+
+    Plan: spans materialize per document with array built-ins
+    (filter/sequence/slice/concat_ws — map-only, whole-stage codegen,
+    zero Python), then ONE groupBy(span) with map-side combine. At
+    100 TB the grouping key would be the span's 8-byte xxhash64 with
+    min-by exemplar carrying the text — same plan shape, 8-byte
+    shuffle; the fixture-scale query groups on the span text itself so
+    the report (and the oracle hash) shows the actual strings.
+
+    Determinism: pure integer counting over exact string keys."""
+    d = table(spark, sf_dir, "documents")
+    arr = F.filter(
+        F.split(F.lower(F.col("text")), r"\s+"), lambda x: x != ""
+    )
+    docs = d.select("doc_id", arr.alias("t")).filter(
+        F.size("t") >= _SPAN_K
+    )
+    spans = docs.select(
+        "doc_id",
+        F.explode(
+            F.transform(
+                F.sequence(F.lit(1), F.size("t") - (_SPAN_K - 1)),
+                lambda i: F.concat_ws(" ", F.slice("t", i, _SPAN_K)),
+            )
+        ).alias("span"),
+    )
+    return (
+        spans.groupBy("span")
+        .agg(
+            F.countDistinct("doc_id").alias("n_docs"),
+            F.count(F.lit(1)).alias("n_occurrences"),
+            F.min("doc_id").alias("first_doc"),
+        )
+        .filter(F.col("n_docs") >= 2)
+    )
+
+
+# ---------------------------------------------------------------------------
+# dedup_semantic_recall
+# ---------------------------------------------------------------------------
+
+_RECALL_BANDS_SQL = """CASE
+      WHEN sim < 0.50 THEN '0.45-0.50'
+      WHEN sim < 0.55 THEN '0.50-0.55'
+      WHEN sim < 0.60 THEN '0.55-0.60'
+      ELSE '0.60+' END"""
+
+
+@query(
+    "dedup_semantic_recall",
+    oracle=f"""
+    WITH {_km_ctes()},
+    exact AS (
+      SELECT * FROM ({_DEDUP_COS_ORACLE}) x
+    ),
+    joined AS (
+      SELECT e.sim,
+             CASE WHEN fa.cid = fb.cid THEN 1 ELSE 0 END AS caught
+      FROM exact e
+      JOIN fin fa ON fa.vec_id = e.vec_a
+      JOIN fin fb ON fb.vec_id = e.vec_b
+    )
+    SELECT {_RECALL_BANDS_SQL} AS band,
+           CAST(COUNT(*) AS BIGINT) AS n_exact,
+           CAST(SUM(caught) AS BIGINT) AS n_caught,
+           round(SUM(caught) / CAST(COUNT(*) AS DOUBLE), 6) AS recall
+    FROM joined
+    GROUP BY 1
+    """,
+)
+def dedup_semantic_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Recall report for the cluster-pruned semantic dedup: join the
+    EXACT cosine near-dup pair set (dedup_embedding_cosine, the
+    block-partitioned GEMM pass) against the k-means assignment that
+    drives dedup_semantic_cluster's prune, and report, per similarity
+    band, how many exact pairs land in the same cluster (caught) vs
+    cross clusters (missed) — the measured number behind
+    dedup_semantic_cluster's docstring statement that cross-cluster pairs are invisible to the
+    prune. False positives are impossible by construction (the pruned
+    set is exactly {{same-cluster}} ∩ {{sim ≥ threshold}}, a subset of
+    the exact set — pinned by tests/test_round8_ops.py), so recall is
+    the only number that needs measuring.
+
+    Both inputs are deterministic and individually hash-checked
+    (similarity.py GEMM pairs and Lloyd fit), so the report
+    itself carries a full oracle — a recall measurement an LSH-based
+    dedup cannot give an exact oracle for.
+
+    Scale: the pair set is the bounded output of the threshold filter
+    (fixture: 7/14/144 pairs at sf0.001/0.01/0.1); the two assignment
+    joins are broadcast-sized in the pair count; the expensive inputs
+    (GEMM grid, Lloyd fit) are the session-memoized shared
+    intermediates their own queries are benched on."""
+    pairs = dedup_embedding_cosine(spark, sf_dir)
+    assigned, _ = _km_fit(spark, sf_dir)
+    cid = assigned.select("vec_id", "cid")
+    joined = (
+        pairs.join(
+            cid.select(
+                F.col("vec_id").alias("vec_a"), F.col("cid").alias("cid_a")
+            ),
+            "vec_a",
+        )
+        .join(
+            cid.select(
+                F.col("vec_id").alias("vec_b"), F.col("cid").alias("cid_b")
+            ),
+            "vec_b",
+        )
+        .select(
+            "sim",
+            F.when(F.col("cid_a") == F.col("cid_b"), 1)
+            .otherwise(0)
+            .alias("caught"),
+        )
+    )
+    band = (
+        F.when(F.col("sim") < 0.50, "0.45-0.50")
+        .when(F.col("sim") < 0.55, "0.50-0.55")
+        .when(F.col("sim") < 0.60, "0.55-0.60")
+        .otherwise("0.60+")
+    )
+    return joined.groupBy(band.alias("band")).agg(
+        F.count(F.lit(1)).alias("n_exact"),
+        F.sum("caught").cast("long").alias("n_caught"),
+        F.round(
+            F.sum("caught").cast("double") / F.count(F.lit(1)), 6
+        ).alias("recall"),
+    )
+
+
+# --------------------------------------------------------------------------
+# dedup_minhash_recall
+# --------------------------------------------------------------------------
+
+_MH_CAUGHT_SQL = " OR ".join(f"a.bk{b} = b.bk{b}" for b in range(_BANDS))
+_JBAND_SQL = """CASE
+      WHEN jac < 0.90 THEN '0.80-0.90'
+      WHEN jac < 0.95 THEN '0.90-0.95'
+      ELSE '0.95-1.00' END"""
+
+
+@query(
+    "dedup_minhash_recall",
+    oracle=f"""
+    WITH {_X_CTES},
+    sig AS (
+      SELECT doc_id,
+             {_MH_SIG_COLS_SQL}
+      FROM xk GROUP BY doc_id
+    ),
+    bnd AS (
+      SELECT doc_id,
+             {_MH_BK_COLS_SQL}
+      FROM sig
+    ),
+    truth AS (
+      SELECT doc_a, doc_b,
+             n_inter / (sa.n + sb.n - n_inter) AS jac
+      FROM xinter
+      JOIN xsizes sa ON sa.doc_id = doc_a
+      JOIN xsizes sb ON sb.doc_id = doc_b
+      WHERE n_inter / (sa.n + sb.n - n_inter) >= 0.8
+    ),
+    fl AS (
+      SELECT t.jac,
+             CASE WHEN {_MH_CAUGHT_SQL} THEN 1 ELSE 0 END AS caught
+      FROM truth t
+      JOIN bnd a ON a.doc_id = t.doc_a
+      JOIN bnd b ON b.doc_id = t.doc_b
+    )
+    SELECT {_JBAND_SQL} AS jband,
+           CAST(COUNT(*) AS BIGINT) AS n_exact,
+           CAST(SUM(caught) AS BIGINT) AS n_caught,
+           round(SUM(caught) / CAST(COUNT(*) AS DOUBLE), 6) AS recall
+    FROM fl
+    GROUP BY 1
+    """,
+    tags=("memo",),
+)
+def dedup_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Candidate recall of MinHash LSH banding against the exact n-gram
+    Jaccard ≥ 0.8 ground truth, per Jaccard band — the driver-visible
+    quality number behind ``dedup_near_minhash`` (ops/dedup.py:131),
+    whose own xxhash64 pipeline is rows-only by construction. Geometry
+    is identical to the deployed detector (3-word shingles, 32
+    permutations, 4 bands × 8 rows); the permutation family is the
+    cross-engine multiplicative one (module docstring) so every banding
+    decision replays in the oracle. Expected shape: the 0.95-1.00 band
+    (planted near-dups) catches ~all pairs — each has per-band collision
+    probability ≥ 0.95⁸ ≈ 0.66, so P(≥1 of 4 bands) ≈ 0.987.
+
+    Catch flags come from joining the ground-truth pairs to each side's
+    4 band keys — recall never needs the candidate self-join itself, so
+    this query is linear in |truth| + |docs| on top of the shared
+    inverted-index pass (the memoized ``_xengine_pairs``).
+
+    Scale: the signature agg is one combiner-reduced shuffle of 32
+    minima per doc; the truth set is the bounded output of the
+    J ≥ 0.8 filter (25 pairs at sf0.01, ~256 at sf0.1); the two band
+    joins are broadcast-sized in it."""
+    keys = _xengine_shingle_keys(spark, sf_dir)
+    pairs = _xengine_pairs(spark, sf_dir)
+
+    sizes = keys.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
+    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
+    jac = F.col("n_inter") / (F.col("na") + F.col("nb") - F.col("n_inter"))
+    truth = (
+        pairs.join(sa, "doc_a")
+        .join(sb, "doc_b")
+        .filter(jac >= 0.8)
+        .select("doc_a", "doc_b", jac.alias("jac"))
+    )
+
+    # both truth-join sides consume the shared memoized band frame
+    # (functions/xengine.py) — also read by the dedup_near_minhash
+    # detector itself since round 11
+    bnd = xengine_minhash_bands(spark, sf_dir)
+    ba = bnd.select(
+        F.col("doc_id").alias("doc_a"),
+        *[F.col(f"bk{b}").alias(f"abk{b}") for b in range(_BANDS)],
+    )
+    bb = bnd.select(
+        F.col("doc_id").alias("doc_b"),
+        *[F.col(f"bk{b}").alias(f"bbk{b}") for b in range(_BANDS)],
+    )
+    caught = None
+    for b in range(_BANDS):
+        term = F.col(f"abk{b}") == F.col(f"bbk{b}")
+        caught = term if caught is None else (caught | term)
+    fl = (
+        truth.join(ba, "doc_a")
+        .join(bb, "doc_b")
+        .select("jac", F.when(caught, 1).otherwise(0).alias("caught"))
+    )
+    jband = (
+        F.when(F.col("jac") < 0.90, "0.80-0.90")
+        .when(F.col("jac") < 0.95, "0.90-0.95")
+        .otherwise("0.95-1.00")
+    )
+    return fl.groupBy(jband.alias("jband")).agg(
+        F.count(F.lit(1)).alias("n_exact"),
+        F.sum("caught").cast("long").alias("n_caught"),
+        F.round(
+            F.sum("caught").cast("double") / F.count(F.lit(1)), 6
+        ).alias("recall"),
+    )
+
+
+# --------------------------------------------------------------------------
+# dedup_simhash_recall
+# --------------------------------------------------------------------------
+
+#: Hamming-universe prune: only pairs sharing ≥ 3 shingle keys enter
+#: the exact-Hamming pass. Theory: a pair sharing ≤ 2 of its ~26
+#: shingles has near-independent majority votes (expected hamming ≈ 30
+#: of 60; P(≤ 8) < 1e-8), so no hamming ≤ 8 pair can sit below the
+#: threshold. Measured: the minimum shared-shingle count among TRUE
+#: hamming ≤ 8 pairs is 8 / 21 / 8 at sf0.001/0.01/0.1 — 2.7× above
+#: this cut. At sf0.1 the cut shrinks the pair join 100× (1.13M →
+#: 10.3k pairs); it is applied identically in both engines, so parity
+#: holds by construction even where the probabilistic argument is
+#: doing the work.
+_SH_MIN_INTER = 3
+
+
+_SH_HAMMING_SQL = " + ".join(
+    f"bit_count(xor(a.c{c}, b.c{c}))" for c in range(_SH_CHUNKS)
+)
+_SH_CAUGHT_SQL = " OR ".join(f"a.c{c} = b.c{c}" for c in range(_SH_CHUNKS))
+
+
+@query(
+    "dedup_simhash_recall",
+    oracle=f"""
+    WITH {_X_CTES},
+    votes AS (
+      SELECT doc_id, COUNT(*) AS n_sh,
+             {_SH_SUM_COLS_SQL}
+      FROM xk GROUP BY doc_id
+    ),
+    chunks AS (
+      SELECT doc_id,
+             {_SH_CHUNK_COLS_SQL}
+      FROM votes
+    ),
+    ham AS (
+      SELECT {_SH_HAMMING_SQL} AS hamming,
+             CASE WHEN {_SH_CAUGHT_SQL} THEN 1 ELSE 0 END AS caught
+      FROM xinter p
+      JOIN chunks a ON a.doc_id = p.doc_a
+      JOIN chunks b ON b.doc_id = p.doc_b
+      WHERE p.n_inter >= {_SH_MIN_INTER} AND {_SH_HAMMING_SQL} <= 8
+    )
+    SELECT CASE WHEN hamming <= 3 THEN '0-3 (guaranteed)' ELSE '4-8' END AS hband,
+           CAST(COUNT(*) AS BIGINT) AS n_pairs,
+           CAST(SUM(caught) AS BIGINT) AS n_caught,
+           round(SUM(caught) / CAST(COUNT(*) AS DOUBLE), 6) AS recall
+    FROM ham
+    GROUP BY 1
+    """,
+    tags=("memo",),
+)
+def dedup_simhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Candidate recall of SimHash chunk banding against exact low-
+    Hamming pairs — the driver-visible quality number behind
+    ``dedup_simhash`` (ops/dedup.py:199). Same banding structure as the
+    deployed detector (bit-majority signature, 4 disjoint chunks,
+    radius ≤ 8) over a 60-bit cross-engine signature (4 × 15-bit
+    chunks; bit j is a distinct multiplicative hash of the shingle key,
+    the textbook Charikar construction the packed-lane xxhash64 form
+    optimizes). The '0-3' band recall is EXACTLY 1.0 by pigeonhole —
+    ≤ 3 flipped bits cannot touch all 4 chunks — which the oracle
+    proves as data, upgrading dedup.py's docstring claim to a driver
+    hash row; the '4-8' band is the honest heuristic tail.
+
+    Ground-truth universe: pairs sharing ≥ 3 shingle keys (the
+    memoized inverted-index frame, cut at ``_SH_MIN_INTER`` — see that
+    constant's theory + measurement note). A low-overlap pair's
+    signatures are near-independent 60-bit hashes (P(hamming ≤ 8) <
+    1e-8), so the restriction loses nothing at radius 8, and it is
+    applied IDENTICALLY in both engines, so parity is exact regardless.
+
+    Scale: one combiner-reduced vote shuffle (60 bigint sums per doc);
+    the Hamming test runs only on the shared-shingle pair set — never
+    the O(n²) pair space."""
+    pairs = _xengine_pairs(spark, sf_dir)
+
+    # both pair-join sides consume the shared memoized chunk frame
+    # (functions/xengine.py) — also read by the dedup_simhash detector
+    # itself since round 11 (the 60-sum vote agg costs ~1.3 s per
+    # evaluation at sf0.1)
+    chunks = xengine_simhash_chunks(spark, sf_dir)
+    ca = chunks.select(
+        F.col("doc_id").alias("doc_a"),
+        *[F.col(f"c{c}").alias(f"ac{c}") for c in range(_SH_CHUNKS)],
+    )
+    cb = chunks.select(
+        F.col("doc_id").alias("doc_b"),
+        *[F.col(f"c{c}").alias(f"bc{c}") for c in range(_SH_CHUNKS)],
+    )
+    hamming = None
+    caught = None
+    for c in range(_SH_CHUNKS):
+        h = F.bit_count(F.col(f"ac{c}").bitwiseXOR(F.col(f"bc{c}")))
+        e = F.col(f"ac{c}") == F.col(f"bc{c}")
+        hamming = h if hamming is None else (hamming + h)
+        caught = e if caught is None else (caught | e)
+    ham = (
+        pairs.filter(F.col("n_inter") >= _SH_MIN_INTER)
+        .select("doc_a", "doc_b")
+        .join(ca, "doc_a")
+        .join(cb, "doc_b")
+        .select(
+            hamming.alias("hamming"),
+            F.when(caught, 1).otherwise(0).alias("caught"),
+        )
+        .filter(F.col("hamming") <= 8)
+    )
+    hband = F.when(F.col("hamming") <= 3, "0-3 (guaranteed)").otherwise("4-8")
+    return ham.groupBy(hband.alias("hband")).agg(
+        F.count(F.lit(1)).alias("n_pairs"),
+        F.sum("caught").cast("long").alias("n_caught"),
+        F.round(
+            F.sum("caught").cast("double") / F.count(F.lit(1)), 6
+        ).alias("recall"),
+    )
+
+
+# --------------------------------------------------------------------------
+# dedup_minhash_param_sweep
+# --------------------------------------------------------------------------
+
+#: the four (bands × rows-per-band) splits of the 32-permutation
+#: signature: from strict/low-recall (2×16) to loose/high-recall (16×2).
+_SWEEP = ((2, 16), (4, 8), (8, 4), (16, 2))
+
+
+def _band_key_idx_sql(prefix: str, idxs: range) -> str:
+    """Fold an arbitrary run of per-row minima into one band key — the
+    generalization of xengine._band_key_sql to any rows-per-band.
+    Same overflow audit: acc < 2³¹ keeps acc·1048573 < 2.3e15."""
+    expr = "CAST(0 AS BIGINT)"
+    for i in idxs:
+        expr = f"(({expr}) * 1048573 + {prefix}{i}) % 2147483647"
+    return expr
+
+
+#: one stacked long frame over ALL configs: (cfg, band, key) rows folded
+#: map-side from the signature columns — 30 branches, one self-join.
+_SWEEP_LNG_SQL = "\n      UNION ALL ".join(
+    f"SELECT doc_id, '{bands}x{rows}' AS cfg, {b} AS band,"
+    f" {_band_key_idx_sql('h', range(b * rows, (b + 1) * rows))} AS bk"
+    f" FROM sig"
+    for bands, rows in _SWEEP
+    for b in range(bands)
+)
+_SWEEP_META_SQL = "\n      UNION ALL ".join(
+    f"SELECT '{bands}x{rows}' AS cfg, {bands} AS bands,"
+    f" {rows} AS rows_per_band"
+    for bands, rows in _SWEEP
+)
+
+
+def _xengine_truth(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact Jaccard ≥ 0.8 ground-truth pairs over the cross-engine
+    shingle keys (the numerator/denominator frames are the xengine.py
+    session memos, so this is two broadcast-sized joins plus a filter)."""
+    keys = _xengine_shingle_keys(spark, sf_dir)
+    pairs = _xengine_pairs(spark, sf_dir)
+    sizes = keys.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
+    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
+    jac = F.col("n_inter") / (F.col("na") + F.col("nb") - F.col("n_inter"))
+    return (
+        pairs.join(sa, "doc_a")
+        .join(sb, "doc_b")
+        .filter(jac >= 0.8)
+        .select("doc_a", "doc_b")
+    )
+
+
+@query(
+    "dedup_minhash_param_sweep",
+    oracle=f"""
+    WITH {_X_CTES},
+    sig AS MATERIALIZED (
+      SELECT doc_id,
+             {_MH_SIG_COLS_SQL}
+      FROM xk GROUP BY doc_id
+    ),
+    truth AS MATERIALIZED (
+      -- MATERIALIZED (r14): truth is consumed by the stats join AND
+      -- two scalar COUNT(*) subqueries — inlined, the whole inverted-
+      -- index chain would re-evaluate three times (sf1 memory)
+      SELECT doc_a, doc_b
+      FROM xinter
+      JOIN xsizes sa ON sa.doc_id = doc_a
+      JOIN xsizes sb ON sb.doc_id = doc_b
+      WHERE n_inter / (sa.n + sb.n - n_inter) >= 0.8
+    ),
+    lng AS MATERIALIZED (
+      {_SWEEP_LNG_SQL}
+    ),
+    cand AS (
+      SELECT DISTINCT a.cfg, a.doc_id AS doc_a, b.doc_id AS doc_b
+      FROM lng a JOIN lng b
+        ON a.cfg = b.cfg AND a.band = b.band AND a.bk = b.bk
+       AND a.doc_id < b.doc_id
+    ),
+    stats AS (
+      SELECT c.cfg,
+             COUNT(*) AS n_candidates,
+             CAST(SUM(CASE WHEN t.doc_a IS NOT NULL THEN 1 ELSE 0 END)
+                  AS BIGINT) AS n_caught
+      FROM cand c
+      LEFT JOIN truth t ON t.doc_a = c.doc_a AND t.doc_b = c.doc_b
+      GROUP BY c.cfg
+    ),
+    meta AS (
+      {_SWEEP_META_SQL}
+    )
+    SELECT m.cfg, m.bands, m.rows_per_band,
+           (SELECT COUNT(*) FROM truth) AS n_truth,
+           CAST(COALESCE(s.n_caught, 0) AS BIGINT) AS n_caught,
+           round(COALESCE(s.n_caught, 0)
+                 / CAST((SELECT COUNT(*) FROM truth) AS DOUBLE), 6) AS recall,
+           CAST(COALESCE(s.n_candidates, 0) AS BIGINT) AS n_candidates
+    FROM meta m LEFT JOIN stats s ON s.cfg = m.cfg
+    """,
+    tags=("memo",),
+)
+def dedup_minhash_param_sweep(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """The LSH banding S-curve as data: for four splits of the same
+    32-permutation minhash signature — 2×16, 4×8, 8×4, 16×2 — the
+    candidate recall against exact Jaccard ≥ 0.8 ground truth AND the
+    candidate-pair volume the verifier must then score. This is the
+    measurement that tunes a 100 TB dedup: recall rises monotonically
+    with more/shorter bands (collision prob 1−(1−J^r)^b) while candidate
+    volume — the run's actual cost — rises with it; the operator choice
+    is the knee. The deployed 4×8 geometry (dedup_near_minhash) sits
+    inside the sweep, so its recall is now bracketed by driver-visible
+    alternatives, not asserted in isolation.
+
+    All four geometries fold band keys from ONE session-memoized
+    signature frame (xengine._xengine_minhash_sig — the agg runs
+    once, the folds are map-side column expressions) into ONE stacked
+    (cfg, band, key) long frame; candidates come from ONE bucket
+    aggregation of that frame (pairs expand locally inside each
+    bucket — fan-out is bucket occupancy, never an all-pairs product),
+    then one distinct, one truth-flag left join, and one
+    combiner-reduced groupBy(cfg). The first cut ran each config as
+    its own candidate frame + three aggregates (12 jobs of barrier
+    overhead, every candidate frame evaluated twice); stacking
+    collapsed that to one chain, and round 12 replaced the stacked
+    self-join (which shuffled the long frame twice) with the bucket
+    pre-aggregation — see the inline probe note. Ground
+    truth reuses the memoized inverted-index pair frame. Every count
+    is exact; recall is the one mirrored 6-dp division.
+
+    Expected shape (Broder's analysis at J = 0.95): per-band collision
+    prob 0.95^16 ≈ 0.44 (2×16) → P(caught) ≈ 0.69; 0.95⁸ ≈ 0.66 (4×8)
+    → ≈ 0.987; ≈ 1.0 by 8×4 — while 16×2's bucket keys are weak enough
+    to start admitting non-dup candidates: the S-curve's two tails."""
+    sig = _xengine_minhash_sig(spark, sf_dir)
+    truth = _xengine_truth(spark, sf_dir)
+    n_truth = truth.agg(F.count(F.lit(1)).alias("n_truth"))
+
+    # ONE stacked long frame over all 4 geometries: 30 (cfg, band, key)
+    # rows per doc, folded map-side from the persisted signature columns
+    entries = [
+        F.struct(
+            F.lit(f"{bands}x{rows}").alias("cfg"),
+            F.lit(b).alias("band"),
+            F.expr(
+                _band_key_idx_sql("h", range(b * rows, (b + 1) * rows))
+            ).alias("bk"),
+        )
+        for bands, rows in _SWEEP
+        for b in range(bands)
+    ]
+    lng = sig.select(
+        "doc_id", F.explode(F.array(*entries)).alias("e")
+    ).select(
+        "doc_id",
+        F.col("e.cfg").alias("cfg"),
+        F.col("e.band").alias("band"),
+        F.col("e.bk").alias("bk"),
+    )
+    # bucket pre-aggregation (round-12 probe, VERDICT r11 item 4): one
+    # shuffle of the stacked frame into (cfg, band, bk) buckets, then
+    # LOCAL pair expansion over each bucket's sorted doc list — the
+    # former self-join shuffled the long frame TWICE (both join sides)
+    # to land the same bucket's rows in the same task anyway.
+    # Interleaved sf0.1 probe: join 3.70 s vs bucketed 2.68 s warm-min,
+    # values identical. Memory/skew posture unchanged at 100 TB: a
+    # bucket's pairs were already co-resident in the join form (hash
+    # by bucket key), and occupancy is banding-geometry/df-bounded;
+    # sort_array gives doc_a < doc_b by construction. The HOF pair
+    # expansion runs interpreted (the round-11 lesson), but over
+    # candidate-bounded bucket lists, not per-corpus-row data.
+    buckets = (
+        lng.groupBy("cfg", "band", "bk")
+        .agg(F.sort_array(F.collect_list("doc_id")).alias("ds"))
+        .filter(F.size("ds") >= 2)
+    )
+    cand = (
+        buckets.select(
+            "cfg",
+            F.explode(
+                F.expr(
+                    "flatten(transform(ds, (a, i) -> "
+                    "transform(slice(ds, i + 2, size(ds) - i - 1), "
+                    "b -> struct(a AS doc_a, b AS doc_b))))"
+                )
+            ).alias("p"),
+        )
+        .select(
+            "cfg",
+            F.col("p.doc_a").alias("doc_a"),
+            F.col("p.doc_b").alias("doc_b"),
+        )
+        .distinct()
+    )
+    # one pass computes both counts: tag each candidate with its truth
+    # membership, then a single combiner-reduced groupBy(cfg)
+    stats = (
+        cand.join(
+            truth.select("doc_a", "doc_b", F.lit(1).alias("is_truth")),
+            ["doc_a", "doc_b"],
+            "left",
+        )
+        .groupBy("cfg")
+        .agg(
+            F.count(F.lit(1)).alias("n_candidates"),
+            F.sum(F.coalesce(F.col("is_truth"), F.lit(0)))
+            .cast("long")
+            .alias("n_caught"),
+        )
+    )
+    # literal 4-row frame built relationally (no createDataFrame: keeps
+    # the whole query a pure plan over registered sources) — via ONE
+    # explode over the n_truth scalar, not a 4-branch unionAll. The
+    # union form embedded the n_truth aggregate subtree once per branch,
+    # and `truth` ends in broadcast joins (no Exchange), so runtime
+    # exchange reuse could not dedupe it: the truth chain re-executed
+    # ~5x (4 meta branches + the stats join). r15 interleaved A/B:
+    # 3.14 -> 1.23 s floor (0.39x), values identical; persisting truth
+    # instead measured no better than the explode (guide §5's "persist
+    # only when recomputation exceeds the cache cost").
+    metas = F.array(
+        *[
+            F.struct(
+                F.lit(f"{bands}x{rows}").alias("cfg"),
+                F.lit(bands).alias("bands"),
+                F.lit(rows).alias("rows_per_band"),
+            )
+            for bands, rows in _SWEEP
+        ]
+    )
+    meta = n_truth.select(F.explode(metas).alias("m"), "n_truth").select(
+        F.col("m.cfg").alias("cfg"),
+        F.col("m.bands").alias("bands"),
+        F.col("m.rows_per_band").alias("rows_per_band"),
+        "n_truth",
+    )
+    return meta.join(stats, "cfg", "left").select(
+        "cfg",
+        "bands",
+        "rows_per_band",
+        "n_truth",
+        F.coalesce(F.col("n_caught"), F.lit(0)).cast("long").alias("n_caught"),
+        F.round(
+            F.coalesce(F.col("n_caught"), F.lit(0)).cast("double")
+            / F.col("n_truth").cast("double"),
+            6,
+        ).alias("recall"),
+        F.coalesce(F.col("n_candidates"), F.lit(0))
+        .cast("long")
+        .alias("n_candidates"),
+    )
+
+
+# --------------------------------------------------------------------------
+# dedup_jaccard_histogram
+# --------------------------------------------------------------------------
+
+
+@query(
+    "dedup_jaccard_histogram",
+    oracle=f"""
+    WITH {xe._X_CTES},
+    j AS (
+      SELECT round(n_inter / (sa.n + sb.n - n_inter), 9) AS jac
+      FROM xinter
+      JOIN xsizes sa ON sa.doc_id = doc_a
+      JOIN xsizes sb ON sb.doc_id = doc_b
+    )
+    SELECT CAST(floor(jac * 20) AS BIGINT) AS bin20,
+           round(CAST(floor(jac * 20) AS BIGINT) / 20.0, 2) AS bin_lo,
+           CAST(COUNT(*) AS BIGINT) AS n_pairs,
+           round({dsum9_sql('jac')} / COUNT(*), 6) AS mean_jac
+    FROM j
+    GROUP BY 1, 2
+    """,
+    tags=("memo",),
+)
+def dedup_jaccard_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Histogram of pairwise shingle-Jaccard over every document pair
+    sharing ≥ 1 word-3-gram, in 0.05-wide bins — the corpus's
+    near-duplication "temperature curve": a healthy crawl puts nearly
+    all mass in the lowest bins with a thin planted-duplicate tail; a
+    templated or over-crawled corpus shows a fat middle. This is the
+    distribution the dedup thresholds (0.8 for minhash, radius 8 for
+    simhash) were chosen against, now a driver-visible artifact.
+
+    Rides the session-memoized cross-engine inverted-index frames
+    (functions/xengine.py) — the histogram adds ONE aggregation to
+    machinery the recall/detector queries already run; at 100 TB the
+    pair frame is the inverted-index join's output, bounded by shingle
+    document frequency, never O(n²).
+
+    Determinism: Jaccard is an exact-int division rounded 9 dp; the
+    bin is floor(jac·20) on that identical double; mean_jac sums at
+    decimal scale 9 (DEC9), where the cast recovers each 9-dp value
+    EXACTLY in both engines — no re-round, no tie semantics in play
+    (a scale-6 cast would re-round 9-dp inputs with engine-specific
+    tie handling; see functions/determinism.py)."""
+    keys = xe._xengine_shingle_keys(spark, sf_dir)
+    pairs = xe._xengine_pairs(spark, sf_dir)
+    sizes = keys.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
+    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
+    jac = F.round(
+        F.col("n_inter") / (F.col("na") + F.col("nb") - F.col("n_inter")), 9
+    )
+    j = pairs.join(sa, "doc_a").join(sb, "doc_b").select(jac.alias("jac"))
+    bin20 = F.floor(F.col("jac") * 20).cast("long")
+    return (
+        j.groupBy(bin20.alias("bin20"))
+        .agg(
+            F.count(F.lit(1)).alias("n_pairs"),
+            F.round(
+                F.sum(F.col("jac").cast(DEC9)).cast("double")
+                / F.count(F.lit(1)),
+                6,
+            ).alias("mean_jac"),
+        )
+        .select(
+            "bin20",
+            F.round(F.col("bin20") / F.lit(20.0), 2).alias("bin_lo"),
+            "n_pairs",
+            "mean_jac",
+        )
+    )
+
+
+# --------------------------------------------------------------------------
+# dedup_semdedup_eps
+# --------------------------------------------------------------------------
+
+#: within-cluster cosine thresholds (1 − ε): the deployed 0.45 policy
+#: (dedup_semantic_cluster / dedup_embedding_cosine) bracketed from
+#: both sides, so the shipped threshold's retention sits inside a
+#: driver-visible curve instead of being asserted in isolation.
+_SEMDEDUP_TS = (0.35, 0.45, 0.55, 0.65)
+_SEMDEDUP_TS_SQL = ", ".join(repr(t) for t in _SEMDEDUP_TS)
+
+
+@query(
+    "dedup_semdedup_eps",
+    oracle=f"""
+    WITH {_km_ctes()},
+    emb AS (
+      SELECT f.vec_id, f.cid, v.emb,
+             sqrt({_DOT.format(a='v.emb', b='v.emb')}) AS nrm
+      FROM fin f JOIN v ON v.vec_id = f.vec_id
+    ),
+    prs AS (
+      SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
+             round({_DOT.format(a='a.emb', b='b.emb')} / (a.nrm * b.nrm), 9)
+               AS sim
+      FROM emb a JOIN emb b ON a.cid = b.cid AND a.vec_id < b.vec_id
+      WHERE round({_DOT.format(a='a.emb', b='b.emb')} / (a.nrm * b.nrm), 9)
+            >= {min(_SEMDEDUP_TS)!r}
+    ),
+    ts AS (SELECT UNNEST([{_SEMDEDUP_TS_SQL}]) AS sim_threshold),
+    nv AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM embeddings),
+    st AS (
+      SELECT t.sim_threshold,
+             COUNT(p.vec_b) AS n_pairs,
+             COUNT(DISTINCT p.vec_b) AS n_dropped
+      FROM ts t LEFT JOIN prs p ON p.sim >= t.sim_threshold
+      GROUP BY t.sim_threshold
+    )
+    SELECT round(1 - st.sim_threshold, 2) AS eps,
+           st.sim_threshold,
+           CAST(st.n_pairs AS BIGINT) AS n_pairs,
+           CAST(st.n_dropped AS BIGINT) AS n_dropped,
+           CAST(nv.n - st.n_dropped AS BIGINT) AS n_kept,
+           round((nv.n - st.n_dropped) * 1.0 / nv.n, 6) AS retention
+    FROM st CROSS JOIN nv
+    """,
+    tags=("memo",),
+)
+def dedup_semdedup_eps(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SemDeDup ε-sweep: for each within-cluster cosine threshold
+    1−ε in {0.35, 0.45, 0.55, 0.65}, the qualifying pair count, the
+    documents dropped under keep-lowest (a vector is dropped when it is
+    the higher id of ANY qualifying same-cluster pair — the
+    survivorship convention of corpus_dedup_survivorship), and the
+    resulting corpus retention. The deployed 0.45 policy sits inside
+    the sweep, bracketed by looser and tighter alternatives.
+
+    One pair scan serves all thresholds: the same-cluster cosine pairs
+    of the deterministic Lloyd fit (similarity._km_fit — memoized, the
+    frame dedup_semantic_cluster/cluster_silhouette already share) are
+    computed ONCE at the loosest threshold, then a 4-row broadcast
+    threshold grid tags and aggregates them — the minhash param-sweep's
+    stacking move applied to the semantic tier. Scale (100 TB):
+    identical posture to dedup_semantic_cluster — the pair space is
+    Σ|cluster|², an equi-join on cid, never O(n²); the sweep adds one
+    broadcast nested loop over a CONSTANT 4-row grid (the legitimate
+    scalar-subquery shape) plus one combiner-reduced aggregate.
+
+    Determinism: cosine is the block-proven dot/norm form rounded 9 dp;
+    thresholds are shared literals, so every >= lands on identical
+    doubles in both engines; counts are exact ints; retention is one
+    mirrored division rounded 6 dp."""
+    assigned, _ = _km_fit(spark, sf_dir)
+    nrm = F.sqrt(
+        F.aggregate(
+            F.zip_with(F.col("emb"), F.col("emb"), lambda x, y: x * y),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+    )
+    e = assigned.select("cid", "vec_id", "emb", nrm.alias("nrm"))
+    a = e.select(
+        "cid",
+        F.col("vec_id").alias("vec_a"),
+        F.col("emb").alias("emb_a"),
+        F.col("nrm").alias("nrm_a"),
+    )
+    b = e.select(
+        "cid",
+        F.col("vec_id").alias("vec_b"),
+        F.col("emb").alias("emb_b"),
+        F.col("nrm").alias("nrm_b"),
+    )
+    dot = F.aggregate(
+        F.zip_with(F.col("emb_a"), F.col("emb_b"), lambda x, y: x * y),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    pairs = (
+        a.join(b, "cid")
+        .filter(F.col("vec_a") < F.col("vec_b"))
+        .select(
+            "vec_a",
+            "vec_b",
+            F.round(dot / (F.col("nrm_a") * F.col("nrm_b")), 9).alias("sim"),
+        )
+        .filter(F.col("sim") >= min(_SEMDEDUP_TS))
+    )
+    grid = spark.createDataFrame(
+        [(t,) for t in _SEMDEDUP_TS], "sim_threshold double"
+    )
+    nv = table(spark, sf_dir, "embeddings").agg(
+        F.count(F.lit(1)).alias("n")
+    )
+    st = (
+        F.broadcast(grid)
+        .join(pairs, pairs.sim >= grid.sim_threshold, "left")
+        .groupBy("sim_threshold")
+        .agg(
+            F.count("vec_b").alias("n_pairs"),
+            F.count_distinct("vec_b").alias("n_dropped"),
+        )
+    )
+    return st.crossJoin(F.broadcast(nv)).select(
+        F.round(1 - F.col("sim_threshold"), 2).alias("eps"),
+        "sim_threshold",
+        F.col("n_pairs").cast("long").alias("n_pairs"),
+        F.col("n_dropped").cast("long").alias("n_dropped"),
+        (F.col("n") - F.col("n_dropped")).cast("long").alias("n_kept"),
+        F.round(
+            (F.col("n") - F.col("n_dropped")) * 1.0 / F.col("n"), 6
+        ).alias("retention"),
     )

@@ -12,6 +12,12 @@ Scale notes (the 100 TB posture of each shape):
 - The as-of join is the union+window emulation: one shuffle on
   (user_id) + an ordered window scan — the scalable pattern (no
   per-row subquery, no driver loop).
+
+The runtime Bloom-filter join (``join_bloom_runtime``) is the
+shuffle-join analogue of partition pruning: the dimension's filtered
+keys prune fact rows *before* the fact side shuffles — at 100 TB that
+is the difference between shuffling 100 TB and shuffling the 2% that
+survives.
 """
 
 from __future__ import annotations
@@ -26,6 +32,7 @@ from python_etl_sample_spark.functions.determinism import (
     dsum_sql,
 )
 from python_etl_sample_spark.registry import query
+from python_etl_sample_spark.scratch import stage_once
 from python_etl_sample_spark.sources import table
 
 
@@ -501,4 +508,280 @@ def join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         dsum_big("overlap_s").alias("sum_overlap_s"),
         F.max("overlap_s").alias("max_overlap_s"),
         F.min("event_a").cast("long").alias("first_event_a"),
+    )
+
+
+#: as-of staleness tolerance: a click older than this is too stale to
+#: credit (the point-in-time feature-join contract — serving a feature
+#: computed too long before the request is a correctness bug)
+_ASOF_TOL_S = 24 * 3600
+
+
+@query(
+    "join_asof_tolerance",
+    oracle=f"""
+    SELECT p.event_id, p.user_id, p.ts AS purchase_ts,
+           CASE WHEN c.ts IS NOT NULL
+                 AND date_diff('second', c.ts, p.ts) <= {_ASOF_TOL_S}
+                THEN c.ts END AS click_ts_within,
+           CASE WHEN c.ts IS NOT NULL
+                 AND date_diff('second', c.ts, p.ts) <= {_ASOF_TOL_S}
+                THEN 1 ELSE 0 END AS matched
+    FROM (SELECT * FROM events WHERE event_type = 'purchase') p
+    ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
+      ON p.user_id = c.user_id AND p.ts >= c.ts
+    """,
+)
+def join_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """As-of join WITH STALENESS TOLERANCE: each purchase matched to
+    the user's latest click at-or-before it, but only credited when
+    that click is at most 24 h old — the point-in-time feature-join
+    contract (a feature computed long before the request must not be
+    served as fresh). Purchases whose nearest click is older keep a
+    NULL match and matched = 0, so the tolerance actually filters.
+
+    The oracle is DuckDB's NATIVE ASOF JOIN plus the tolerance CASE —
+    the strongest available cross-check for Spark's emulation (union
+    the streams, last(click_ts, ignorenulls) over a user-partitioned
+    (ts, side) window, then the same tolerance gate). One shuffle on
+    user_id; no per-row subquery; a user's history sorts within one
+    task — the standard as-of contract."""
+    ev = table(spark, sf_dir, "events")
+    clicks = ev.filter(F.col("event_type") == "click").select(
+        "user_id",
+        "ts",
+        F.lit(0).alias("side"),
+        F.lit(None).cast("bigint").alias("event_id"),
+        F.col("ts").alias("click_ts"),
+    )
+    purchases = ev.filter(F.col("event_type") == "purchase").select(
+        "user_id",
+        "ts",
+        F.lit(1).alias("side"),
+        "event_id",
+        F.lit(None).cast("timestamp_ntz").alias("click_ts"),
+    )
+    w = (
+        Window.partitionBy("user_id")
+        .orderBy("ts", "side")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    merged = clicks.unionByName(purchases).withColumn(
+        "last_click_ts", F.last("click_ts", ignorenulls=True).over(w)
+    )
+    fresh = (
+        F.col("last_click_ts").isNotNull()
+        & (
+            F.unix_timestamp("ts") - F.unix_timestamp("last_click_ts")
+            <= _ASOF_TOL_S
+        )
+    )
+    return merged.filter(F.col("side") == 1).select(
+        "event_id",
+        "user_id",
+        F.col("ts").alias("purchase_ts"),
+        F.when(fresh, F.col("last_click_ts")).alias("click_ts_within"),
+        F.when(fresh, F.lit(1)).otherwise(F.lit(0)).alias("matched"),
+    )
+
+
+#: Conf keys toggled (and restored) around the Bloom-join execution.
+_BLOOM_CONFS = {
+    # fact side must take the shuffle path for a runtime filter to matter
+    "spark.sql.autoBroadcastJoinThreshold": "-1",
+    # at sf0.1 the fact scan is far below the 10 GiB default that gates
+    # injection on real clusters; 0 makes the tiny fixture eligible
+    "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
+    "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
+}
+
+
+def bloom_join_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The lazy plan: urgent-orders revenue by return flag, shuffle-join
+    shaped so InjectRuntimeFilter puts a Bloom filter on the fact scan."""
+    li = table(spark, sf_dir, "lineitem")
+    o = table(spark, sf_dir, "orders").filter(
+        F.col("o_orderpriority") == "1-URGENT"
+    )
+    return (
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .groupBy("l_returnflag")
+        .agg(
+            F.count(F.lit(1)).alias("n_items"),
+            dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
+                "revenue"
+            ),
+        )
+    )
+
+
+@query(
+    "join_bloom_runtime",
+    oracle=f"""
+    SELECT l.l_returnflag, COUNT(*) AS n_items,
+           {dsum_sql('l.l_extendedprice * (1 - l.l_discount)')} AS revenue
+    FROM lineitem l
+    JOIN orders o ON l.l_orderkey = o.o_orderkey
+    WHERE o.o_orderpriority = '1-URGENT'
+    GROUP BY l.l_returnflag
+    """,
+)
+def join_bloom_runtime(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Shuffle join with a runtime row-level Bloom filter: the selective
+    dimension (urgent orders, ~20%) builds a Bloom filter over its join
+    keys (`bloom_filter_agg` in the plan), and Catalyst injects a
+    `might_contain` predicate into the FACT side — fact rows that
+    cannot match are dropped before the
+    shuffle, which at 100 TB is the difference between shuffling the
+    whole fact table and shuffling the surviving fraction. This is the
+    shuffle-join analogue of dynamic partition pruning (which needs a
+    partitioned layout; the Bloom filter needs nothing).
+
+    The injection gate (`applicationSideScanSizeThreshold`, 10 GiB on
+    real clusters) is lowered for the fixture and restored after an
+    eager execution, so the toggles never leak into other queries'
+    plans; tests/test_plans.py pins `bloom_filter_agg` + `might_contain`
+    in the optimized plan."""
+    old = {k: spark.conf.get(k, None) for k in _BLOOM_CONFS}
+    for k, v in _BLOOM_CONFS.items():
+        spark.conf.set(k, v)
+    try:
+        # eager: the plan must optimize (and so inject the filter) while
+        # the confs are in force
+        return bloom_join_frame(spark, sf_dir).localCheckpoint(eager=True)
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+@query(
+    "join_hinted_strategies",
+    oracle=f"""
+    WITH agg AS (
+      SELECT s.s_nationkey, COUNT(*) AS n_items,
+             {dsum_sql('l.l_extendedprice * (1 - l.l_discount)')} AS revenue
+      FROM lineitem l JOIN supplier s ON l.l_suppkey = s.s_suppkey
+      GROUP BY s.s_nationkey
+    )
+    SELECT strat.strategy, a.s_nationkey, a.n_items, a.revenue
+    FROM agg a
+    CROSS JOIN (VALUES ('broadcast'), ('merge'), ('shuffle_hash'))
+      AS strat(strategy)
+    """,
+)
+def join_hinted_strategies(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Explicit physical-join-strategy control: the same
+    revenue-per-supplier-nation join planned three ways — BROADCAST,
+    MERGE (sort-merge), and SHUFFLE_HASH — via join hints, unioned with
+    a strategy label. All three branches MUST produce identical values
+    (the oracle is one aggregate × three labels); what differs is the
+    plan, and tests/test_plans.py pins that all three operators appear
+    simultaneously — proof the hints survive optimization rather than
+    collapsing to whatever AQE would pick.
+
+    Why it's a first-class operator: at 100 TB the optimizer's
+    size-based choice is sometimes wrong in ways only the user can know
+    (a dimension that fits memory AFTER pruned columns, a fact pair
+    where sort order will be reused downstream) — hint pass-through is
+    the escape hatch every warehouse engine must expose.
+
+    Scale note: the three-way union here is a demonstration; a real
+    query picks one. Each branch shuffles/broadcasts independently —
+    Spark does not share the scan across union branches without
+    explicit caching, which is the correct trade for a plan demo."""
+    li = table(spark, sf_dir, "lineitem")
+    sup = table(spark, sf_dir, "supplier")
+
+    def branch(hint: str) -> DataFrame:
+        return (
+            li.join(sup.hint(hint), li.l_suppkey == sup.s_suppkey)
+            .groupBy("s_nationkey")
+            .agg(
+                F.count(F.lit(1)).alias("n_items"),
+                dsum(
+                    F.col("l_extendedprice") * (1 - F.col("l_discount"))
+                ).alias("revenue"),
+            )
+            .select(F.lit(hint).alias("strategy"), "*")
+        )
+
+    return (
+        branch("broadcast")
+        .unionAll(branch("merge"))
+        .unionAll(branch("shuffle_hash"))
+    )
+
+
+@query(
+    "join_dpp_partitioned",
+    oracle=f"""
+    SELECT strftime(l_shipdate, '%Y-%m') AS ship_month,
+           COUNT(*) AS n_items,
+           {dsum_sql('l_extendedprice * (1 - l_discount)')} AS revenue
+    FROM lineitem
+    WHERE month(l_shipdate) BETWEEN 4 AND 6
+    GROUP BY strftime(l_shipdate, '%Y-%m')
+    """,
+    tags=("staged",),
+)
+def join_dpp_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Dynamic partition pruning: Q2 revenue by ship month, computed as
+    a join between a hive-partitioned fact (lineitem laid out by
+    ship_month — the staged sink) and a filtered month dimension. At
+    plan time the pruning predicate is unknown (it depends on the dim's
+    surviving rows); at runtime Spark evaluates the dim subquery first
+    (`dynamicpruning#...` / SubqueryAdaptiveBroadcast in the plan,
+    reusing the join's own broadcast) and prunes fact DIRECTORIES
+    before the scan — only ~1/4 of the partitions are read.
+
+    This is the layout-based twin of join_bloom_runtime: DPP prunes
+    whole partitions when the join key IS the partition key; the Bloom
+    filter prunes rows when there is no helpful layout. A 100 TB
+    warehouse wants both: date-partitioned facts make every
+    date-dim-filtered join scan only the matching directories.
+    tests/test_plans.py pins the dynamicpruning subquery on the fact
+    scan and that the pruned scan reads fewer partitions than exist.
+
+    Warm-up tag ``staged``: the month-partitioned fact is staged once
+    per process, so bench's timed pass measures the DPP join, not the
+    sink."""
+    li = table(spark, sf_dir, "lineitem")
+
+    def _write(path: str) -> None:
+        (
+            li.withColumn(
+                "ship_month", F.date_format("l_shipdate", "yyyy-MM")
+            )
+            # cluster rows by partition key first: one file per month
+            # directory instead of (input tasks × months) small files —
+            # the write discipline any partitioned 100 TB sink needs
+            .repartition("ship_month")
+            .write.mode("overwrite")
+            .partitionBy("ship_month")
+            .parquet(path)
+        )
+
+    path = stage_once("dpp/lineitem_by_month", sf_dir, _write)
+    fact = spark.read.parquet(path)
+    # month dimension: distinct months with a derived quarter attribute,
+    # filtered to Q2 — the selective dim whose survivors drive the prune
+    dim = (
+        li.select(
+            F.date_format("l_shipdate", "yyyy-MM").alias("ship_month")
+        )
+        .distinct()
+        .filter(F.expr("int(substr(ship_month, 6, 2))").between(4, 6))
+    )
+    return (
+        fact.join(dim, "ship_month")
+        .groupBy("ship_month")
+        .agg(
+            F.count(F.lit(1)).alias("n_items"),
+            dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
+                "revenue"
+            ),
+        )
     )

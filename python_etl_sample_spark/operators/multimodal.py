@@ -8,6 +8,10 @@ production Spark plumbing: binary column + typed metadata, Arrow-batched
 mapInPandas with an explicit output schema, partition-preserving batch
 shape. Swapping in PIL/libjpeg for richer formats changes one function
 body, not the plan.
+
+- ``multimodal_shot_boundary``: consecutive-frame delta over the real
+  concatenated-PPM streams of multimodal_frame_sample, flagging cuts —
+  the shot-segmentation step of a video curation pipeline.
 """
 
 from __future__ import annotations
@@ -16,7 +20,6 @@ import struct
 from collections.abc import Iterator
 
 import pandas as pd
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -510,4 +513,114 @@ def multimodal_image_thumbnail(spark: SparkSession, sf_dir: str) -> DataFrame:
         resize,
         "doc_id bigint, thumb_width int, thumb_height int,"
         " thumb_bytes bigint",
+    )
+
+
+# ---------------------------------------------------------------------------
+# multimodal_shot_boundary
+# ---------------------------------------------------------------------------
+
+_SB_CUT = 40.0  # mean |Δred| per pixel above this = shot cut
+
+
+@query(
+    "multimodal_shot_boundary",
+    oracle=f"""
+    WITH f AS (
+      SELECT doc_id, text,
+             2 + doc_id % 7 AS n_frames,
+             4 + doc_id % 5 AS w,
+             3 + doc_id % 4 AS h,
+             greatest(length(text), 1) AS L
+      FROM documents
+    ), pairs AS (
+      SELECT doc_id, text, w, h, L,
+             UNNEST(range(1, n_frames)) AS fno
+      FROM f WHERE n_frames >= 2
+    )
+    SELECT doc_id,
+           CAST(fno AS INT) AS frame_no,
+           round(
+             list_aggregate(
+               list_transform(range(0, w*h),
+                 j -> CASE WHEN length(text) = 0 THEN 0
+                      ELSE abs(unicode(text[CAST((3*j + fno) % L AS INT) + 1])
+                               % 256
+                               - unicode(text[CAST((3*j + fno - 1) % L AS INT)
+                                              + 1]) % 256) END),
+               'sum') / CAST(w*h AS DOUBLE), 6) AS delta_r,
+           CAST(list_aggregate(
+               list_transform(range(0, w*h),
+                 j -> CASE WHEN length(text) = 0 THEN 0
+                      ELSE abs(unicode(text[CAST((3*j + fno) % L AS INT) + 1])
+                               % 256
+                               - unicode(text[CAST((3*j + fno - 1) % L AS INT)
+                                              + 1]) % 256) END),
+               'sum') / CAST(w*h AS DOUBLE) > {_SB_CUT} AS INT) AS is_cut
+    FROM pairs
+    """,
+)
+def multimodal_shot_boundary(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Shot-boundary detection over the same real concatenated-PPM
+    streams multimodal_frame_sample decodes: for every consecutive
+    frame pair, the mean absolute red-channel delta per pixel, flagged
+    as a cut above {_SB_CUT} — the shot-segmentation step a video
+    curation pipeline runs before per-shot sampling.
+
+    The mapInPandas worker decodes the REAL container (walks P6
+    headers, diffs decoded pixel buffers); the oracle recomputes the
+    expected deltas from the generative definition of the frames
+    (text char codes rolled by frame index) with list arithmetic — a
+    header slip, off-by-one frame index, or wrong channel stride
+    breaks the hash. Deltas are integer sums divided once (no 6-dp tie
+    is reachable: w·h has only {{2,3,5,7}} factors — the frame_sample
+    note).
+
+    Scale: map-only, no shuffle; payloads stay columnar binary; one
+    output row per frame PAIR (n_frames−1 per doc)."""
+    import pandas as pd  # noqa: F401 (worker-side import)
+
+
+    d = table(spark, sf_dir, "documents").select("doc_id", "text")
+
+    def diff_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        import pandas as pd
+
+        out = {k: [] for k in ("doc_id", "frame_no", "delta_r", "is_cut")}
+        for pdf in batches:
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+                n_frames = 2 + int(doc_id) % 7
+                w, h = 4 + int(doc_id) % 5, 3 + int(doc_id) % 4
+                src = text or "\x00"
+                L = len(src)
+                need = w * h * 3
+                frames = [
+                    encode_ppm(
+                        w,
+                        h,
+                        bytes(ord(src[(i + f) % L]) % 256 for i in range(need)),
+                    )
+                    for f in range(n_frames)
+                ]
+                decoded = [
+                    rgb for (_, _, rgb) in iter_ppm_frames(
+                        encode_ppm_stream(frames)
+                    )
+                ]
+                for fno in range(1, len(decoded)):
+                    prev_r = decoded[fno - 1][0::3]
+                    cur_r = decoded[fno][0::3]
+                    sdiff = sum(
+                        abs(a - b) for a, b in zip(cur_r, prev_r)
+                    )
+                    delta = round(sdiff / (w * h), 6)
+                    out["doc_id"].append(int(doc_id))
+                    out["frame_no"].append(fno)
+                    out["delta_r"].append(delta)
+                    out["is_cut"].append(int(delta > _SB_CUT))
+        yield pd.DataFrame(out)
+
+    return d.mapInPandas(
+        diff_batches,
+        "doc_id bigint, frame_no int, delta_r double, is_cut int",
     )

@@ -11,11 +11,18 @@ Determinism ground rules follow functions/determinism.py: float sums go
 through decimal(28,6); arg-extrema carry an explicit lexicographic
 tie-break mirrored in the oracle's window ORDER BY; regression outputs
 are derived in double from exact sums and rounded to 6 dp.
+
+Engine-parity ground rules follow functions/determinism.py: integer
+ratios stay integer until one mirrored float division; libm outputs are
+rounded (9 dp) before any cross-row aggregation; array folds use the
+index-ordered textual mirror pair (_dot/_dot_sql) that the similarity
+tier verified.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from python_etl_sample_spark.functions.determinism import (
@@ -402,3 +409,193 @@ def api_sql_frontend(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     register_views(spark, sf_dir)
     return spark.sql(_SQL_FRONTEND)
+
+
+#: synthetic resource-hold length for the interval-merge op (its own
+#: constant — events_max_concurrent's 15-min sweep is a different query)
+_IVL_HOLD_S = 10 * 60
+
+
+@query(
+    "fn_intervals_overlap_merge",
+    oracle=f"""
+    WITH iv AS (
+      SELECT user_id, ts AS s, ts + INTERVAL {_IVL_HOLD_S} SECOND AS e,
+             event_id
+      FROM events
+    ),
+    marked AS (
+      SELECT user_id, s, e, event_id,
+             CASE WHEN MAX(e) OVER (PARTITION BY user_id ORDER BY s, event_id
+                                    ROWS BETWEEN UNBOUNDED PRECEDING
+                                             AND 1 PRECEDING) >= s
+                  THEN 0 ELSE 1 END AS is_new
+      FROM iv
+    ),
+    islands AS (
+      SELECT user_id, s, e,
+             SUM(is_new) OVER (PARTITION BY user_id ORDER BY s, event_id
+                               ROWS BETWEEN UNBOUNDED PRECEDING
+                                        AND CURRENT ROW) AS island
+      FROM marked
+    ),
+    merged AS (
+      SELECT user_id, island, MIN(s) AS ms, MAX(e) AS me, COUNT(*) AS n_raw
+      FROM islands GROUP BY user_id, island
+    )
+    SELECT user_id,
+           COUNT(*) AS n_merged,
+           CAST(SUM(n_raw) AS BIGINT) AS n_raw,
+           CAST(SUM(date_diff('second', ms, me)) AS BIGINT) AS covered_s
+    FROM merged GROUP BY user_id
+    """,
+)
+def fn_intervals_overlap_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Interval union per key (gaps-and-islands over RANGES): each
+    event holds a resource for 10 minutes; overlapping holds merge, and
+    the per-user report counts merged intervals and total covered
+    seconds — the classic uptime/billing/utilization primitive that
+    naive per-second expansion (600× blow-up) or a range self-join
+    (O(n·k)) gets catastrophically wrong.
+
+    The rewrite: an interval starts a new island iff the running MAX of
+    previous interval ends (user-partitioned, (start, event_id) order)
+    does not reach its start; islands number by running sum of the
+    marks; coverage is Σ(island end − island start) in exact epoch
+    seconds — both windows share the (start, event_id) TOTAL order (the
+    engine tie-break law), so tied starts island identically in both
+    engines. One user_id shuffle serves the mark window, the island
+    numbering, and (partial-agg) both rollups."""
+    ev = table(spark, sf_dir, "events")
+    iv = ev.select(
+        "user_id",
+        F.col("ts").alias("s"),
+        (F.col("ts") + F.expr(f"INTERVAL {_IVL_HOLD_S} SECOND")).alias("e"),
+        "event_id",
+    )
+    w_prev = (
+        Window.partitionBy("user_id")
+        .orderBy("s", "event_id")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    marked = iv.select(
+        "user_id",
+        "s",
+        "e",
+        "event_id",
+        F.when(F.max("e").over(w_prev) >= F.col("s"), 0)
+        .otherwise(1)
+        .alias("is_new"),
+    )
+    w_run = (
+        Window.partitionBy("user_id")
+        .orderBy("s", "event_id")
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    islands = marked.withColumn("island", F.sum("is_new").over(w_run))
+    merged = islands.groupBy("user_id", "island").agg(
+        F.min("s").alias("ms"),
+        F.max("e").alias("me"),
+        F.count(F.lit(1)).alias("n_raw"),
+    )
+    return merged.groupBy("user_id").agg(
+        F.count(F.lit(1)).alias("n_merged"),
+        F.sum("n_raw").cast("bigint").alias("n_raw"),
+        F.sum(
+            F.unix_timestamp("me") - F.unix_timestamp("ms")
+        ).cast("bigint").alias("covered_s"),
+    )
+
+
+#: recursive-CTE hierarchy walk — {idiv} is '//' (DuckDB) / 'div'
+#: (Spark SQL); the synthetic forest is parent(k) = k div 7 for k ≥ 7
+#: (keys < 7 are roots — the explicit k ≥ 7 recursion guard matters:
+#: key 0 would otherwise be its own parent, an infinite cycle BOTH
+#: engines faithfully looped on when first written). parent(k) < k for
+#: every recursing k, so depth is bounded by log7(max key) and the
+#: recursion provably terminates.
+_RECURSIVE_TMPL = """
+    WITH RECURSIVE chain AS (
+      SELECT p_partkey AS node, 0 AS depth
+      FROM part WHERE p_partkey < 7
+      UNION ALL
+      SELECT p.p_partkey AS node, c.depth + 1 AS depth
+      FROM part p JOIN chain c ON p.p_partkey {idiv} 7 = c.node
+      WHERE p.p_partkey >= 7
+    )
+    SELECT depth,
+           COUNT(*) AS n_parts,
+           MIN(node) AS min_key,
+           MAX(node) AS max_key,
+           CAST(SUM(node) AS BIGINT) AS key_sum
+    FROM chain GROUP BY depth
+"""
+
+
+@query(
+    "api_sql_recursive_cte",
+    oracle=_RECURSIVE_TMPL.format(idiv="//"),
+)
+def api_sql_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Recursive CTE (WITH RECURSIVE — new in Spark 4): transitive
+    closure over a synthetic assembly forest (parent(k) = k div 7, the
+    bill-of-materials / org-chart shape), rolled up as parts per depth
+    with key checksums so the hash pins EVERY node's depth, not just
+    counts. The same query text runs on both engines modulo the
+    integer-division token — checking Spark's brand-new recursion
+    operator against DuckDB's mature one.
+
+    Termination is structural (parent key strictly decreases), not a
+    row-limit guard. Scale: each recursion step is one equi-join of the
+    frontier against the part scan + union — the same per-level
+    frontier shape as graph_bfs_hops, planned by Catalyst's
+    UnionLoop; depth is logarithmic in the key domain (≤8 levels at
+    10^7 parts)."""
+    from python_etl_sample_spark.sources import register_views
+
+    register_views(spark, sf_dir)
+    return spark.sql(_RECURSIVE_TMPL.format(idiv="div"))
+
+
+@query(
+    "api_sql_registered_udf",
+    oracle="""
+    SELECT lang, COUNT(*) AS n_docs,
+           CAST(SUM(len(string_split_regex(text, '\\s+'))) AS BIGINT)
+             AS total_tokens
+    FROM documents GROUP BY lang
+    """,
+)
+def api_sql_registered_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """User-extensible SQL: a vectorized pandas UDF registered into the
+    SQL function catalog (`spark.udf.register`) and invoked from SQL
+    TEXT — the extensibility path a warehouse user takes when the
+    built-in function library runs out. The UDF counts whitespace
+    tokens as (number of \\s+ runs) + 1, the exact cardinality of
+    Java's split — the same twin the JVM-side text operators use — so
+    the SQL-invoked Python result hash-matches the DuckDB oracle.
+
+    Scale: registration is metadata; execution is the same Arrow-batch
+    path as udf_scalar_pandas (#67) — the SQL front-end changes WHO can
+    call the function, not how it runs. The aggregate on top is
+    JVM-side; only the per-row token count crosses the Arrow boundary."""
+    import os
+
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf("int")
+    def ws_tokens(s: pd.Series) -> pd.Series:
+        # len(re.split('\s+', x)) == count of \s+ runs + 1, exactly
+        return (s.str.count(r"\s+") + 1).astype("int32")
+
+    spark.udf.register("ws_tokens", ws_tokens)
+    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
+    view = f"docs_udf_{tag}"
+    table(spark, sf_dir, "documents").createOrReplaceTempView(view)
+    return spark.sql(
+        f"""
+        SELECT lang, COUNT(*) AS n_docs,
+               CAST(SUM(ws_tokens(text)) AS BIGINT) AS total_tokens
+        FROM {view} GROUP BY lang
+        """
+    )

@@ -16,6 +16,11 @@ Engine-parity ground rules (functions/determinism.py):
   luck.
 - Derived ratios (z-scores, skew/kurt) combine exact sums in double
   with the association mirrored textually in the oracle, rounded 6 dp.
+
+- ``sample_balanced_downsample``: exact class-balanced downsampling —
+  keep the m = min-class-count hash-first rows of EACH label so a
+  skewed binary target trains on a 50:50 sample, via one stacked
+  total-order kernel pass (no per-class single-task window).
 """
 
 from __future__ import annotations
@@ -537,4 +542,144 @@ def agg_weighted_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             F.max("tot").cast("bigint").alias("total_weight"),
         )
+    )
+
+
+@query(
+    "sample_weighted_priority",
+    oracle=f"""
+    WITH keyed AS (
+      SELECT o_orderpriority, o_orderkey, o_totalprice,
+             ROW_NUMBER() OVER (
+               PARTITION BY o_orderpriority
+               ORDER BY ln(((o_orderkey % 100000) * 2654435761 % 1000003 + 1)
+                           / 1000004.0) / o_totalprice DESC,
+                        o_orderkey
+             ) AS rk
+      FROM orders
+    )
+    SELECT o_orderpriority, COUNT(*) AS n_sampled,
+           CAST(SUM(o_orderkey) AS BIGINT) AS key_sum,
+           {dsum_sql('o_totalprice')} AS weight_sampled
+    FROM keyed WHERE rk <= 20 GROUP BY o_orderpriority
+    """,
+)
+def sample_weighted_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Weighted sampling without replacement, 20 orders per priority
+    class, selection probability proportional to o_totalprice — the
+    Efraimidis-Spirakis scheme (rank by u^(1/w), here by its log
+    ln(u)/w) with u derived from the key, not a RNG: the same masked
+    2654435761 multiplicative hash as the A/B splitter and the uniform
+    reservoir, so the sample is identical on any engine, partitioning,
+    or rerun. This is how a corpus pipeline up-weights high-quality
+    sources while staying reproducible.
+
+    The hashed output includes SUM(o_orderkey) so the driver hash is
+    sensitive to the sample's exact membership, not just its size.
+
+    Scale: one window shuffle on the group key with rank truncated at
+    k — constant state per key, no driver involvement; at 100 TB the
+    rank window becomes a per-partition top-k + merge exactly like
+    topk_per_group."""
+    o = table(spark, sf_dir, "orders")
+    u = (
+        (F.col("o_orderkey") % 100000) * 2654435761 % 1000003 + 1
+    ) / 1000004.0
+    es_key = F.log(u) / F.col("o_totalprice")
+    w = Window.partitionBy("o_orderpriority").orderBy(
+        es_key.desc(), F.col("o_orderkey").asc()
+    )
+    return (
+        o.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= 20)
+        .groupBy("o_orderpriority")
+        .agg(
+            F.count(F.lit(1)).alias("n_sampled"),
+            F.sum("o_orderkey").alias("key_sum"),
+            dsum("o_totalprice").alias("weight_sampled"),
+        )
+    )
+
+
+_YPOS = "CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END"
+
+
+# ---------------------------------------------------------------------------
+# sample_balanced_downsample
+# ---------------------------------------------------------------------------
+
+#: sampling-order hash — the repo's audited masked multiplicative
+#: shape: (key % p) * 2654435761 stays inside int64 (operators/
+#: inference.py); the final small modulus decorrelates from key order
+_BAL_HASH = "((o_orderkey % 3221225473) * 2654435761) % 1000003"
+
+
+@query(
+    "sample_balanced_downsample",
+    oracle=f"""
+    WITH base AS (
+      SELECT o_orderkey, {_YPOS} AS label, {_BAL_HASH} AS h FROM orders
+    ),
+    cls AS (SELECT label, COUNT(*) AS n_l FROM base GROUP BY label),
+    m_t AS (SELECT MIN(n_l) AS m FROM cls),
+    r AS (
+      SELECT o_orderkey, label,
+             ROW_NUMBER() OVER (PARTITION BY label
+                                ORDER BY h, o_orderkey) AS rn
+      FROM base
+    )
+    SELECT o_orderkey, CAST(label AS INT) AS label
+    FROM r CROSS JOIN m_t
+    WHERE rn <= m
+    """,
+)
+def sample_balanced_downsample(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Exact class-balanced downsampling of the urgent/high binary
+    target: every class keeps its m hash-first rows, where m is the
+    minority-class count — the 50:50 training sample that keeps a
+    classifier from collapsing onto the majority class, with the
+    masked multiplicative hash making the kept set reproducible
+    across runs, engines, and partitionings (no RNG state).
+
+    Scale shape: the per-class rank comes from ONE stacked pass of
+    the range-partitioned total-order kernel over (label, hash, key)
+    — classes are contiguous under that order, so per-class rank =
+    global rank − class offset (the RFM stacked-metric pattern,
+    marketing.py). A per-class window would funnel each class through
+    one task; the kernel keeps both classes range-partitioned. Class
+    counts are a 2-row broadcast.
+
+    Determinism: the hash is the repo's int64-audited multiplicative
+    mix with the key as tie-break; ranks and the m cut are exact
+    integers."""
+    o = table(spark, sf_dir, "orders")
+    base = o.select(
+        "o_orderkey",
+        F.expr(_YPOS).alias("label"),
+        F.expr(_BAL_HASH).alias("h"),
+    )
+    ranked = attach_global_order(
+        base,
+        [F.asc("label"), F.asc("h"), F.asc("o_orderkey")],
+        rn="__grn",
+    )
+    cls = base.groupBy("label").agg(F.count(F.lit(1)).alias("n_l"))
+    below = cls.select(
+        F.col("label").alias("blabel"), F.col("n_l").alias("bn")
+    )
+    # exclusive prefix + global min over the 2-row class frame via
+    # joins (window-free: the frame is the label domain, a constant)
+    offsets = (
+        cls.join(below, F.col("blabel") < F.col("label"), "left")
+        .groupBy("label", "n_l")
+        .agg(F.coalesce(F.sum("bn"), F.lit(0)).alias("off"))
+        .crossJoin(F.broadcast(cls.agg(F.min("n_l").alias("m"))))
+        .select("label", "off", "m")
+    )
+    return (
+        ranked.join(F.broadcast(offsets), "label")
+        .filter(F.col("__grn") - F.col("off") <= F.col("m"))
+        .select("o_orderkey", F.col("label").cast("int").alias("label"))
     )

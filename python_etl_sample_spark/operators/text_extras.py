@@ -6,6 +6,34 @@ CHARACTER-level near-duplicate detector the token-level MinHash/SimHash
 signatures miss (small in-place edits, OCR noise), and adds the
 corpus-health diagnostic (Zipf slope) every tokenizer/LM data report
 includes.
+
+- ``corpus_temperature_mix`` — square-root temperature sampling weights
+  per (lang, source) domain (the T=2 / α=0.5 multilingual-LM sampling
+  scheme), complementing ``corpus_mix_weights``'s full equalization.
+  sqrt is IEEE-correctly-rounded, so the temperature transform is
+  bit-identical across engines — the reason α is 0.5 and not 0.3
+  (libm ``pow`` carries no cross-engine guarantee).
+
+``corpus_apportion_budget``: largest-remainder
+apportionment of a sampling budget.
+
+``corpus_temperature_mix`` produces fractional sampling
+weights; an epoch builder needs INTEGER document counts that sum to the
+budget EXACTLY — fractional quotas rounded independently over- or
+under-shoot by up to |domains|/2. The classical fix is Hamilton's
+largest-remainder method: every domain gets ⌊quota⌋, and the leftover
+seats go to the largest remainders (deterministic tie-break). The
+apportionment property Σ alloc = budget is structural, not approximate
+— and the oracle proves it as data.
+
+Parity: the quota is one mirrored double expression rounded at 9 dp
+(so ⌊·⌋ and the remainder are engine-identical); everything after is
+exact integer arithmetic and an exact-rank cut.
+
+- ``corpus_mix_alpha_sweep``: exponentiated sampling weights
+  q_i ∝ p_i^α per (lang, source) bucket for an α grid — the decision
+  curve around corpus_temperature_mix's deployed α = 0.5 policy
+  (mT5/XLM-R-style, public papers).
 """
 
 from __future__ import annotations
@@ -16,7 +44,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from python_etl_sample_spark.cache import cached_df
-from python_etl_sample_spark.functions.determinism import dsum_sql
+from python_etl_sample_spark.functions import xengine as xe
+from python_etl_sample_spark.functions.determinism import DEC9, dsum_sql
 from python_etl_sample_spark.functions.total_order import attach_global_order
 from python_etl_sample_spark.registry import query
 from python_etl_sample_spark.sources import table
@@ -523,4 +552,398 @@ def text_collocations_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored.orderBy(F.desc("pmi"), F.asc("w1"), F.asc("w2"))
         .limit(20)
         .select("w1", "w2", "pair_count", F.round("pmi", 6).alias("pmi"))
+    )
+
+
+# --------------------------------------------------------------------------
+# corpus_temperature_mix
+# --------------------------------------------------------------------------
+
+
+@query(
+    "corpus_temperature_mix",
+    oracle="""
+    WITH per AS (
+      SELECT lang, source, COUNT(*) AS n_docs,
+             CAST(SUM(n_chars) AS BIGINT) AS n_chars
+      FROM documents GROUP BY lang, source
+    ),
+    tot AS (SELECT CAST(SUM(n_chars) AS BIGINT) AS total_chars FROM per),
+    sq AS (
+      SELECT p.lang, p.source, p.n_docs, p.n_chars,
+             CAST(p.n_chars AS DOUBLE) / CAST(t.total_chars AS DOUBLE)
+               AS p_share,
+             round(sqrt(CAST(p.n_chars AS DOUBLE)
+                        / CAST(t.total_chars AS DOUBLE)), 9) AS sq9
+      FROM per p CROSS JOIN tot t
+    ),
+    z AS (
+      SELECT CAST(SUM(CAST(sq9 AS DECIMAL(28, 12))) AS DOUBLE) AS z FROM sq
+    )
+    SELECT s.lang, s.source, s.n_docs, s.n_chars,
+           round(s.p_share, 6) AS char_share,
+           round(s.sq9 / z.z, 6) AS weight,
+           round((s.sq9 / z.z) / s.p_share, 6) AS boost
+    FROM sq s CROSS JOIN z
+    """,
+)
+def corpus_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Temperature-based domain sampling weights: per (lang, source),
+    the multinomial sampling weight ∝ p^0.5 (square-root temperature,
+    the standard multilingual-LM rebalance — softer than
+    corpus_mix_weights' full equalization, which over-samples tiny
+    domains) plus the boost factor weight/p a sampler applies on top of
+    natural frequency.
+
+    Float parity by construction: p is one IEEE division of two exact
+    BIGINT→DOUBLE conversions (char totals ≪ 2^53 even at 100 TB);
+    sqrt is correctly rounded in both engines; the 9-dp round makes the
+    normalizer's inputs decimal-exact so Z = Σ decimal(sq9) is exact and
+    order-free; weight and boost are mirrored double divisions rounded
+    to 6 dp. α = 0.5 specifically because libm ``pow`` has no
+    cross-engine bit guarantee — sqrt does.
+
+    Scale: one map-side-combined groupBy over the corpus to ~domains
+    rows; the totals and Z frames are 1-row broadcasts; nothing else
+    touches the documents."""
+    d = table(spark, sf_dir, "documents")
+    per = d.groupBy("lang", "source").agg(
+        F.count(F.lit(1)).alias("n_docs"), F.sum("n_chars").alias("n_chars")
+    )
+    tot = per.agg(F.sum("n_chars").alias("total_chars"))
+    p_share = F.col("n_chars").cast("double") / F.col("total_chars").cast(
+        "double"
+    )
+    sq = per.crossJoin(F.broadcast(tot)).select(
+        "lang",
+        "source",
+        "n_docs",
+        "n_chars",
+        p_share.alias("p_share"),
+        F.round(F.sqrt(p_share), 9).alias("sq9"),
+    )
+    z = sq.agg(
+        F.sum(F.col("sq9").cast("decimal(28,12)")).cast("double").alias("z")
+    )
+    return sq.crossJoin(F.broadcast(z)).select(
+        "lang",
+        "source",
+        "n_docs",
+        "n_chars",
+        F.round(F.col("p_share"), 6).alias("char_share"),
+        F.round(F.col("sq9") / F.col("z"), 6).alias("weight"),
+        F.round((F.col("sq9") / F.col("z")) / F.col("p_share"), 6).alias(
+            "boost"
+        ),
+    )
+
+
+_BUDGET = 10_000  # documents to draw next epoch
+
+
+@query(
+    "corpus_apportion_budget",
+    oracle=f"""
+    WITH per AS (
+      SELECT lang, source, COUNT(*) AS n_docs,
+             CAST(SUM(n_chars) AS BIGINT) AS n_chars
+      FROM documents GROUP BY lang, source
+    ),
+    tot AS (SELECT CAST(SUM(n_chars) AS BIGINT) AS total_chars FROM per),
+    sq AS (
+      SELECT p.lang, p.source, p.n_docs,
+             round(sqrt(CAST(p.n_chars AS DOUBLE)
+                        / CAST(t.total_chars AS DOUBLE)), 9) AS sq9
+      FROM per p CROSS JOIN tot t
+    ),
+    z AS (
+      SELECT CAST(SUM(CAST(sq9 AS DECIMAL(28, 12))) AS DOUBLE) AS z FROM sq
+    ),
+    quota AS (
+      SELECT s.lang, s.source, s.n_docs,
+             round({_BUDGET} * (s.sq9 / z.z), 9) AS q
+      FROM sq s CROSS JOIN z
+    ),
+    base AS (
+      SELECT lang, source, n_docs, q,
+             CAST(floor(q) AS BIGINT) AS b,
+             round(q - floor(q), 9) AS rem
+      FROM quota
+    ),
+    d AS (
+      SELECT CAST({_BUDGET} - SUM(b) AS BIGINT) AS deficit FROM base
+    ),
+    ranked AS (
+      SELECT lang, source, n_docs, q, b, rem,
+             ROW_NUMBER() OVER (ORDER BY rem DESC, lang, source) AS rr
+      FROM base
+    )
+    SELECT r.lang, r.source, r.n_docs,
+           round(r.q, 6) AS quota,
+           CAST(r.rr AS BIGINT) AS remainder_rank,
+           r.b + CASE WHEN r.rr <= d.deficit THEN 1 ELSE 0 END AS alloc
+    FROM ranked r CROSS JOIN d
+    """,
+)
+def corpus_apportion_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hamilton (largest-remainder) apportionment of a 10000-doc
+    epoch budget across (lang, source) domains under the square-root
+    temperature weights of corpus_temperature_mix: each domain draws
+    ⌊budget·w⌋ documents, and the budget − Σ⌊·⌋ leftover goes to the
+    largest fractional remainders (ties broken by (lang, source)).
+    Unlike independent rounding, Σ alloc = budget EXACTLY — the
+    property an epoch manifest needs before sampling starts — and each
+    alloc differs from its real-valued quota by < 1 (Hamilton's
+    staying-within-the-quota guarantee).
+
+    Scale: one map-side-combined groupBy to ~domains rows; everything
+    after runs on the domain frame. The remainder rank is a window over
+    that frame —
+    # bounded-window: the ORDER BY rem frame is the (lang, source)
+    # domain table (~100 rows at ANY corpus size), not data-sized.
+
+    Determinism: sqrt-temperature weights as in corpus_temperature_mix
+    (IEEE-guaranteed sqrt, decimal normalizer); the quota rounds at
+    9 dp so floor/remainder are engine-identical; allocation is exact
+    integer arithmetic over an exact rank."""
+    d = table(spark, sf_dir, "documents")
+    per = d.groupBy("lang", "source").agg(
+        F.count(F.lit(1)).alias("n_docs"), F.sum("n_chars").alias("n_chars")
+    )
+    tot = per.agg(F.sum("n_chars").alias("total_chars"))
+    p_share = F.col("n_chars").cast("double") / F.col("total_chars").cast(
+        "double"
+    )
+    sq = per.crossJoin(F.broadcast(tot)).select(
+        "lang", "source", "n_docs", F.round(F.sqrt(p_share), 9).alias("sq9")
+    )
+    z = sq.agg(
+        F.sum(F.col("sq9").cast("decimal(28,12)")).cast("double").alias("z")
+    )
+    base = sq.crossJoin(F.broadcast(z)).select(
+        "lang",
+        "source",
+        "n_docs",
+        F.round(F.lit(_BUDGET) * (F.col("sq9") / F.col("z")), 9).alias("q"),
+    ).select(
+        "lang",
+        "source",
+        "n_docs",
+        "q",
+        F.floor("q").cast("long").alias("b"),
+        F.round(F.col("q") - F.floor("q"), 9).alias("rem"),
+    )
+    deficit = base.agg(
+        (F.lit(_BUDGET) - F.sum("b")).cast("long").alias("deficit")
+    )
+    # bounded-window: the remainder rank orders the (lang, source)
+    # domain frame (~100 rows at ANY corpus size), not data-sized rows
+    wr = Window.orderBy(F.desc("rem"), F.asc("lang"), F.asc("source"))
+    return (
+        base.withColumn("rr", F.row_number().over(wr))
+        .crossJoin(F.broadcast(deficit))
+        .select(
+            "lang",
+            "source",
+            "n_docs",
+            F.round(F.col("q"), 6).alias("quota"),
+            F.col("rr").cast("long").alias("remainder_rank"),
+            (
+                F.col("b")
+                + F.when(F.col("rr") <= F.col("deficit"), 1).otherwise(0)
+            ).alias("alloc"),
+        )
+    )
+
+
+# --------------------------------------------------------------------------
+# corpus_dedup_survivorship
+# --------------------------------------------------------------------------
+
+
+@query(
+    "corpus_dedup_survivorship",
+    oracle=f"""
+    WITH {xe._X_CTES},
+    dropped AS (
+      SELECT DISTINCT doc_b AS doc_id
+      FROM xinter
+      JOIN xsizes sa ON sa.doc_id = doc_a
+      JOIN xsizes sb ON sb.doc_id = doc_b
+      WHERE n_inter / (sa.n + sb.n - n_inter) >= 0.8
+    ),
+    keep AS (
+      SELECT d.doc_id, d.n_chars,
+             length(string_split_regex(trim(lower(d.text)), '\\s+'))
+               AS n_words,
+             CASE WHEN dr.doc_id IS NULL THEN 1 ELSE 0 END AS is_keeper
+      FROM documents d LEFT JOIN dropped dr ON dr.doc_id = d.doc_id
+    )
+    SELECT is_keeper,
+           CAST(COUNT(*) AS BIGINT) AS n_docs,
+           CAST(SUM(n_chars) AS BIGINT) AS total_chars,
+           round(SUM(n_chars) * 1.0 / COUNT(*), 6) AS mean_chars,
+           round(SUM(n_words) * 1.0 / COUNT(*), 6) AS mean_words
+    FROM keep
+    GROUP BY is_keeper
+    """,
+    tags=("memo",),
+)
+def corpus_dedup_survivorship(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Survivorship audit of near-dedup: do the documents the
+    keep-lowest rule KEEPS differ systematically from the ones it
+    drops? A document is dropped when it is the higher-id side of any
+    shingle-Jaccard ≥ 0.8 pair (``dedup_near_minhash``'s verified pair
+    set under the greedy keep-lowest discipline of
+    ``pipeline_dedup_funnel``); per group: count, total/mean
+    characters, mean whitespace-token count. A large keeper-vs-dropped
+    gap means dedup is reshaping the corpus distribution, not just
+    shrinking it — the bias check a curation pipeline reports next to
+    its retention rate. (Exact-hash dedup is vacuous on these fixtures
+    — zero byte-identical pairs at sf0.01 — so the audit runs on the
+    near-dup tier, where the fixtures plant 25/256 pairs.)
+
+    Rides the session-memoized cross-engine inverted-index frames
+    (functions/xengine.py); the audit adds one anti-join-shaped LEFT
+    JOIN and one aggregation. Determinism: the dropped set is an exact
+    integer-keyed set; stats are exact-int sums with mirrored final
+    divisions rounded 6 dp."""
+    keys = xe._xengine_shingle_keys(spark, sf_dir)
+    pairs = xe._xengine_pairs(spark, sf_dir)
+    sizes = keys.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
+    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
+    jac = F.col("n_inter") / (F.col("na") + F.col("nb") - F.col("n_inter"))
+    dropped = (
+        pairs.join(sa, "doc_a")
+        .join(sb, "doc_b")
+        .filter(jac >= 0.8)
+        .select(F.col("doc_b").alias("doc_id"))
+        .distinct()
+        .withColumn("dropped", F.lit(1))
+    )
+    d = table(spark, sf_dir, "documents")
+    keep = d.join(dropped, "doc_id", "left").select(
+        "n_chars",
+        F.size(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias(
+            "n_words"
+        ),
+        F.when(F.col("dropped").isNull(), 1).otherwise(0).alias("is_keeper"),
+    )
+    return keep.groupBy("is_keeper").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("n_chars").cast("long").alias("total_chars"),
+        F.round(
+            F.sum("n_chars") * F.lit(1.0) / F.count(F.lit(1)), 6
+        ).alias("mean_chars"),
+        F.round(
+            F.sum("n_words") * F.lit(1.0) / F.count(F.lit(1)), 6
+        ).alias("mean_words"),
+    )
+
+
+# --------------------------------------------------------------------------
+# corpus_mix_alpha_sweep
+# --------------------------------------------------------------------------
+
+#: temperature grid: alpha=1.0 is proportional sampling, alpha->0
+#: approaches uniform-over-buckets — the multilingual-mixing knob of
+#: mT5/XLM-R-style corpus sampling (public papers).
+_MIX_ALPHAS = (1.0, 0.7, 0.5, 0.3)
+_MIX_ALPHAS_SQL = ", ".join(repr(a) for a in _MIX_ALPHAS)
+
+
+@query(
+    "corpus_mix_alpha_sweep",
+    oracle=f"""
+    WITH per AS (
+      SELECT lang, source, CAST(SUM(n_chars) AS BIGINT) AS n_chars
+      FROM documents GROUP BY lang, source
+    ),
+    tot AS (SELECT CAST(SUM(n_chars) AS BIGINT) AS total_chars FROM per),
+    p AS (
+      SELECT lang, source, n_chars,
+             round(n_chars * 1.0 / t.total_chars, 9) AS p_raw
+      FROM per CROSS JOIN tot t
+    ),
+    al AS (SELECT UNNEST([{_MIX_ALPHAS_SQL}]) AS alpha),
+    pa AS (
+      SELECT a.alpha, p.lang, p.source, p.n_chars, p.p_raw,
+             round(power(p.p_raw, a.alpha), 9) AS p_pow
+      FROM al a CROSS JOIN p
+    ),
+    z AS (
+      SELECT alpha,
+             CAST(SUM(CAST(p_pow AS DECIMAL(38,9))) AS DOUBLE) AS zsum
+      FROM pa GROUP BY alpha
+    )
+    SELECT pa.alpha, pa.lang, pa.source, pa.n_chars, pa.p_raw,
+           round(pa.p_pow / z.zsum, 6) AS weight,
+           round((pa.p_pow / z.zsum) / pa.p_raw, 6) AS boost
+    FROM pa JOIN z ON z.alpha = pa.alpha
+    """,
+)
+def corpus_mix_alpha_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Temperature-scaled sampling weights per (lang, source) bucket:
+    q_i(α) = p_i^α / Σ_j p_j^α for α in {1.0, 0.7, 0.5, 0.3}, where p_i
+    is the bucket's character share — the mixing knob multilingual
+    pretraining uses (mT5 / XLM-R style exponentiated sampling) to lift
+    low-resource buckets without flattening the mix entirely. `boost`
+    = q_i/p_i is the effective up/down-sampling factor each bucket
+    receives at each temperature; α = 1.0 is the identity row that
+    anchors the sweep (weight == p_raw, boost == 1 up to rounding).
+
+    Relationship to ``corpus_temperature_mix``: that
+    operator ships the SINGLE deployed policy α = 0.5 and pins it with
+    sqrt specifically because sqrt is correctly rounded in both engines
+    while libm pow is not. This sweep is the DECISION CURVE around it —
+    the α grid a team compares before committing to 0.5 — and pays the
+    standard transcendental toll instead: power() rounds at 9 dp
+    immediately (the ln/log-odds convention), so its α = 0.5 row agrees
+    with the deployed operator's weights to ~1e-6 (pinned in tests)
+    rather than bit-exactly. Policy row exact, sweep rows
+    convention-rounded — the same split as dedup_near_minhash (exact
+    detector) vs dedup_minhash_param_sweep (geometry curve).
+
+    Scale: one combiner-reduced groupBy to |lang × source| rows, then
+    constant-size frame arithmetic under broadcast — nothing rescans
+    documents per α. Determinism: p_raw is an exact-int ratio rounded
+    9 dp; the 9-dp-rounded power feeds the scale-9 decimal normalizer
+    sum (exact for 9-dp inputs — see functions/determinism.py DEC9);
+    final weight/boost are mirrored divisions rounded 6 dp."""
+    d = table(spark, sf_dir, "documents")
+    per = d.groupBy("lang", "source").agg(
+        F.sum("n_chars").cast("long").alias("n_chars")
+    )
+    tot = per.agg(F.sum("n_chars").cast("long").alias("total_chars"))
+    p = per.crossJoin(F.broadcast(tot)).select(
+        "lang",
+        "source",
+        "n_chars",
+        F.round(F.col("n_chars") * 1.0 / F.col("total_chars"), 9).alias(
+            "p_raw"
+        ),
+    )
+    al = spark.createDataFrame([(a,) for a in _MIX_ALPHAS], "alpha double")
+    pa = F.broadcast(al).crossJoin(p).select(
+        "alpha",
+        "lang",
+        "source",
+        "n_chars",
+        "p_raw",
+        F.round(F.pow(F.col("p_raw"), F.col("alpha")), 9).alias("p_pow"),
+    )
+    z = pa.groupBy("alpha").agg(
+        F.sum(F.col("p_pow").cast(DEC9)).cast("double").alias("zsum")
+    )
+    return pa.join(z, "alpha").select(
+        "alpha",
+        "lang",
+        "source",
+        "n_chars",
+        "p_raw",
+        F.round(F.col("p_pow") / F.col("zsum"), 6).alias("weight"),
+        F.round((F.col("p_pow") / F.col("zsum")) / F.col("p_raw"), 6).alias(
+            "boost"
+        ),
     )

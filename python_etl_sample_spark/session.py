@@ -16,6 +16,7 @@ cluster this would be set ≈ 2-3× total cores or left to AQE.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -37,6 +38,11 @@ _ENV = {
         str(64 * 1024 * 1024),
         lambda v: v.isascii() and v.isdigit(),
         "a non-negative integer (bytes)",
+    ),
+    "SPARK_GRAFT_DRIVER_MEM": (
+        "8g",
+        lambda v: re.fullmatch(r"[1-9][0-9]*[kKmMgGtT]", v) is not None,
+        "a JVM memory size such as 8g or 2048m",
     ),
 }
 
@@ -76,6 +82,7 @@ _PREFER_SORT_MERGE_JOIN = env_setting("SPARK_GRAFT_PREFER_SORT_MERGE_JOIN")
 def get_spark(app_name: str = "python-etl-sample-spark") -> SparkSession:
     """Build (or get) a SparkSession configured for this engine."""
     cpus = env_setting("SPARK_GRAFT_CPUS")
+    driver_mem = env_setting("SPARK_GRAFT_DRIVER_MEM")
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
@@ -90,7 +97,7 @@ def get_spark(app_name: str = "python-etl-sample-spark") -> SparkSession:
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
             _SHJ_LOCAL_MAP_THRESHOLD,
         )
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
     )
     return builder.getOrCreate()

@@ -309,10 +309,12 @@ def test_mix_site_sweep_enumerates_known_sites():
     for expected in (
         "inference.py",
         "statistics.py",
-        "scale_ops5.py",
         "composites.py",
         "spatial.py",
-        "round7_ops.py",
+        "kmeans.py",
+        "sketches.py",
+        "privacy.py",
+        "event_sequences.py",
     ):
         assert expected in files, f"mix sites in {expected} vanished from the scan"
 

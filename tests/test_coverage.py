@@ -151,3 +151,46 @@ def test_suite_walltime_line():
     assert all(int(g) > 0 for g in m.groups()[1:]), (
         "wall-time placeholders must be filled with real measurements"
     )
+
+
+def test_no_round_named_modules():
+    """Modules are named for their domain (SURVEY.md §2), not for the
+    round that added them, so finding a query never means grepping."""
+    pkg = REPO / "python_etl_sample_spark"
+    named = sorted(
+        str(p.relative_to(REPO))
+        for p in pkg.rglob("*.py")
+        if re.match(r"round|scale_ops|tpch_extra6$", p.stem)
+    )
+    assert not named, f"round-named modules: {named}"
+
+
+def test_no_module_binds_a_top_level_name_twice():
+    """Merging modules must not rebind a name: ``_DIM`` is 128 in
+    features.py but 64 for the semantic-dedup tier, and a merge that
+    rebinds such a constant changes the value every earlier user sees —
+    which query fingerprints cannot catch, as they hash names, not
+    values."""
+    import ast
+    from collections import Counter
+
+    twice = {}
+    for p in sorted((REPO / "python_etl_sample_spark").rglob("*.py")):
+        names: Counter = Counter()
+        for stmt in ast.parse(p.read_text()).body:
+            if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                names[stmt.name] += 1
+            elif isinstance(stmt, (ast.Import, ast.ImportFrom)):
+                names.update((a.asname or a.name).split(".")[0] for a in stmt.names)
+            elif isinstance(stmt, (ast.Assign, ast.AnnAssign, ast.AugAssign)):
+                targets = stmt.targets if isinstance(stmt, ast.Assign) else [stmt.target]
+                names.update(
+                    n.id
+                    for t in targets
+                    for n in ast.walk(t)
+                    if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store)
+                )
+        dup = sorted(n for n, c in names.items() if c > 1)
+        if dup:
+            twice[str(p.relative_to(REPO))] = dup
+    assert not twice, f"top-level names bound more than once: {twice}"

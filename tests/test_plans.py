@@ -97,8 +97,8 @@ def test_no_driver_materialization_in_similarity_kernels():
 
     src = inspect.getsource(similarity)
     # round 11 removed the last exemption: sim_ann_ivf's quantizer is
-    # now the shared _km_fit (whose own bounded k-row collects are
-    # pinned in round7_ops), so the module is entirely collect-free.
+    # now the shared _km_fit (whose own bounded k-row collects live in
+    # functions/kmeans.py), so the module is entirely collect-free.
     for forbidden in ("toPandas(", ".collect(", ".toLocalIterator("):
         assert forbidden not in src, f"driver materialization via {forbidden}"
 
@@ -286,10 +286,7 @@ def test_bloom_runtime_filter_injected(spark):
     (bloom_filter_agg over the dimension keys) and the might_contain
     probe on the fact side — proof the fact rows are pruned BEFORE the
     shuffle, not after the join."""
-    from python_etl_sample_spark.operators.scale_ops5 import (
-        _BLOOM_CONFS,
-        bloom_join_frame,
-    )
+    from python_etl_sample_spark.operators.joins import _BLOOM_CONFS, bloom_join_frame
 
     old = {k: spark.conf.get(k, None) for k in _BLOOM_CONFS}
     for k, v in _BLOOM_CONFS.items():

@@ -77,18 +77,13 @@ def test_dsum_is_exact_and_partitioning_invariant(spark, values):
 
 
 def test_cc_kernels_agree_on_random_graphs(spark):
-    """The two connected-components formulations in
-    functions/components.py (pointer-jumped hash-min — the shipped
-    kernel — and large-star/small-star contraction) must label random
-    graphs identically, and identically to a pure-Python union-find.
-    Graph shapes chosen to cover the adversarial cases: chains (worst
+    """The connected-components kernel in functions/components.py
+    (pointer-jumped hash-min) must label random graphs identically to a
+    pure-Python union-find. Graph shapes chosen to cover the adversarial cases: chains (worst
     diameter), stars (the near-dup shape), and sparse random."""
     import random
 
-    from python_etl_sample_spark.functions.components import (
-        pointer_jump_components,
-        star_contract_components,
-    )
+    from python_etl_sample_spark.functions.components import pointer_jump_components
 
     rng = random.Random(421)
     cases = []
@@ -132,12 +127,7 @@ def test_cc_kernels_agree_on_random_graphs(spark):
             r["node"]: r["lab"]
             for r in pointer_jump_components(edges, n_bound=n_nodes).collect()
         }
-        got_star = {
-            r["node"]: r["lab"]
-            for r in star_contract_components(edges, n_bound=n_nodes).collect()
-        }
         assert got_pj == want, "pointer-jump kernel diverged from union-find"
-        assert got_star == want, "star-contract kernel diverged from union-find"
 
 
 # ---- round-5 kernels -------------------------------------------------
@@ -475,30 +465,26 @@ def test_thumbnail_bmp_selects_every_other_pixel(w, h, seed):
 def test_cc_kernels_on_10k_chain(spark):
     """VERDICT r5 item 6: the adversarial worst case for hash-min CC is
     a LONG CHAIN — naive propagation needs diameter rounds (10,000),
-    which would hang any fixed budget. Both kernels must label a
-    10k-node chain with the single component minimum inside their
-    ⌈log₂ n⌉+1 round budgets (pointer jumping shortcuts 2^k hops per
-    round; star contraction halves star depth per double-round), which
-    is the O(log n) guarantee the 100 TB posture rests on."""
-    from python_etl_sample_spark.functions.components import (
-        pointer_jump_components,
-        star_contract_components,
-    )
+    which would hang any fixed budget. The kernel must label a
+    10k-node chain with the single component minimum inside its
+    ⌈log₂ n⌉+1 round budget (pointer jumping shortcuts 2^k hops per
+    round), which is the O(log n) guarantee the 100 TB posture rests
+    on."""
+    from python_etl_sample_spark.functions.components import pointer_jump_components
 
     n = 10_000
     edges = spark.range(n).selectExpr("id AS src", "id + 1 AS dst")
-    for kernel in (pointer_jump_components, star_contract_components):
-        labels = kernel(edges, n_bound=n + 1)
-        distinct_labs = labels.select("lab").distinct().collect()
-        assert [r["lab"] for r in distinct_labs] == [0], kernel.__name__
-        assert labels.count() == n + 1, kernel.__name__
+    labels = pointer_jump_components(edges, n_bound=n + 1)
+    distinct_labs = labels.select("lab").distinct().collect()
+    assert [r["lab"] for r in distinct_labs] == [0]
+    assert labels.count() == n + 1
 
 
 # ---- round-12 kernels ------------------------------------------------
 
 
 def test_lpa_mode_superstep_equals_pure_python_plurality(spark):
-    """The single-shuffle LPA superstep (round6c_ops, round 12) rests
+    """The single-shuffle LPA superstep (graph_analytics.py) rests
     entirely on Spark's mode(label, deterministic=true) implementing
     the plurality rule (count DESC, label ASC). Replay 3 synchronous
     rounds on random graphs against a pure-Python reference — small

@@ -31,7 +31,7 @@ def test_xengine_truth_matches_ngram_jaccard(spark):
     """The polynomial-key ground truth (J ≥ 0.8 over 3-word shingle
     sets) must equal dedup_ngram_jaccard's hash-checked pair set —
     the hash family is exchangeable, the truth set is not."""
-    from python_etl_sample_spark.operators.round10_ops import (
+    from python_etl_sample_spark.functions.xengine import (
         _xengine_pairs,
         _xengine_shingle_keys,
     )
@@ -125,7 +125,7 @@ def test_hash_family_overflow_margins_and_distinctness():
     int64 on the FULL key domain in BOTH engines (the repo-wide
     multiplicative-hash audit, tests/test_ansi_edges.py), and the
     multiplier families must be distinct permutations."""
-    from python_etl_sample_spark.operators.round10_ops import (
+    from python_etl_sample_spark.functions.xengine import (
         _MH_P,
         _N_PERM,
         _SH_BITS,

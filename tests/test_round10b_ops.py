@@ -10,12 +10,11 @@ from __future__ import annotations
 
 import numpy as np
 
-from python_etl_sample_spark.operators.round10b_ops import (
+from python_etl_sample_spark.operators.graph_analytics import (
     _HITS_SCALE,
-    _PQ_TOPK,
     graph_hits_scores,
-    sim_pq_adc,
 )
+from python_etl_sample_spark.operators.similarity import _PQ_TOPK, sim_pq_adc
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -67,7 +66,7 @@ def test_hits_degree_guard_trips_beyond_audited_headroom(spark, monkeypatch):
     other HITS test covers that side)."""
     import pytest
 
-    from python_etl_sample_spark.operators import round10b_ops as mod
+    from python_etl_sample_spark.operators import graph_analytics as mod
 
     monkeypatch.setattr(mod, "_hits_maxdeg_bound", lambda _: 0)
     with pytest.raises(Exception, match="_HITS_RENORM_EVERY"):
@@ -128,7 +127,7 @@ def test_ivfadc_consistent_with_exhaustive_scan(spark):
     retain more of the exhaustive top-5 than the 25% that random cell
     choice would (0.382 measured — the quantizer's probing beats
     chance even on isotropic fixtures)."""
-    from python_etl_sample_spark.operators.round10b_ops import sim_pq_ivf_adc
+    from python_etl_sample_spark.operators.similarity import sim_pq_ivf_adc
 
     full = sim_pq_adc(spark, SF_DIR).toPandas()
     ivf = sim_pq_ivf_adc(spark, SF_DIR).toPandas()
@@ -145,7 +144,7 @@ def test_ivfadc_consistent_with_exhaustive_scan(spark):
 def test_ivfadc_ranks_consecutive(spark):
     """Ranks are 1..n per query with no gaps (n ≤ k; fewer only if a
     query's probed cells hold fewer candidates)."""
-    from python_etl_sample_spark.operators.round10b_ops import sim_pq_ivf_adc
+    from python_etl_sample_spark.operators.similarity import sim_pq_ivf_adc
 
     pdf = sim_pq_ivf_adc(spark, SF_DIR).toPandas()
     assert (pdf.query_id != pdf.neighbor_id).all()
@@ -163,7 +162,7 @@ def test_bpe_merges_match_pure_python_replay(spark):
     apply) over the same word-frequency table."""
     import duckdb
 
-    from python_etl_sample_spark.operators.round10b_ops import (
+    from python_etl_sample_spark.operators.text_analysis import (
         _BPE_EOW,
         _BPE_ROUNDS,
         text_bpe_train_merges,
@@ -205,9 +204,7 @@ def test_bpe_pair_counts_non_increasing(spark):
     """Greedy max-count selection means each round's winning count can
     never exceed the previous round's (old pairs only lose occurrences;
     pairs created by a merge inherit at most the merged pair's count)."""
-    from python_etl_sample_spark.operators.round10b_ops import (
-        text_bpe_train_merges,
-    )
+    from python_etl_sample_spark.operators.text_analysis import text_bpe_train_merges
 
     pdf = (
         text_bpe_train_merges(spark, SF_DIR)
@@ -224,7 +221,7 @@ def test_bpe_encode_matches_python_replay(spark):
     as the merge-table pin, carried one step further)."""
     import duckdb
 
-    from python_etl_sample_spark.operators.round10b_ops import (
+    from python_etl_sample_spark.operators.text_analysis import (
         _BPE_EOW,
         _BPE_ROUNDS,
         text_bpe_encode,

@@ -36,10 +36,7 @@ SF_DIR = "/root/testdata/sf0.001"
 
 
 def test_ppr_seeds_and_mass(spark):
-    from python_etl_sample_spark.operators.round10c_ops import (
-        _PPR_SEEDS,
-        _PPR_TELE,
-    )
+    from python_etl_sample_spark.operators.graph_analytics import _PPR_SEEDS, _PPR_TELE
     from python_etl_sample_spark.operators.graph_analytics import _PR_SCALE
 
     rows = REGISTRY["graph_personalized_pagerank"].fn(spark, SF_DIR).collect()
@@ -105,7 +102,7 @@ def test_temperature_weights_distribution_and_monotone(spark):
 def test_boilerplate_matches_pure_python_replay(spark):
     """Replay the full measurement in plain Python over the fixture and
     require exact agreement on every output cell."""
-    from python_etl_sample_spark.operators.round10c_ops import _BP_MIN_DF
+    from python_etl_sample_spark.operators.text_analysis import _BP_MIN_DF
 
     tbl = pq.read_table(f"{SF_DIR}/documents.parquet").to_pylist()
     tri_docs = defaultdict(set)  # tg -> {doc_id}

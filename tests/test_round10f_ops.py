@@ -17,7 +17,7 @@ SF_DIR = "/root/testdata/sf0.001"
 
 
 def test_apportionment_properties_and_replay(spark):
-    from python_etl_sample_spark.operators.round10f_ops import _BUDGET
+    from python_etl_sample_spark.operators.text_extras import _BUDGET
 
     rows = REGISTRY["corpus_apportion_budget"].fn(spark, SF_DIR).collect()
     # the structural identity: allocations sum to the budget EXACTLY

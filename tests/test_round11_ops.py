@@ -271,7 +271,7 @@ def test_hits_cadence_constant_is_shared_and_valid():
     CTE chain; a cadence that does not renormalize on the final round
     would leave the hub output un-normalized while the oracle's final
     SELECT still reads h{rounds} — pin the structural invariant."""
-    from python_etl_sample_spark.operators.round10b_ops import (
+    from python_etl_sample_spark.operators.graph_analytics import (
         _HITS_RENORM_EVERY,
         _HITS_ROUNDS,
     )

@@ -13,14 +13,13 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from python_etl_sample_spark.operators.round7b_ops import dedup_semantic_cluster
-from python_etl_sample_spark.operators.round10_ops import sim_ann_recall
-from python_etl_sample_spark.operators.round12_ops import (
+from python_etl_sample_spark.operators.dedup import dedup_semantic_cluster
+from python_etl_sample_spark.operators.similarity import sim_ann_recall
+from python_etl_sample_spark.operators.similarity import (
     _CHURN_MOD,
-    _SEMDEDUP_TS,
     ann_recall_under_churn,
-    dedup_semdedup_eps,
 )
+from python_etl_sample_spark.operators.dedup import _SEMDEDUP_TS, dedup_semdedup_eps
 from python_etl_sample_spark.operators.similarity import sim_knn_per_query
 from python_etl_sample_spark.sources import table
 
@@ -93,7 +92,7 @@ def test_churn_is_exact_reclassification_of_recall_pairs(spark):
 
 
 def test_quality_sweep_monotone_and_brackets_deployed_cut(spark):
-    from python_etl_sample_spark.operators.round12_ops import (
+    from python_etl_sample_spark.operators.text_analysis import (
         _QT_TS,
         text_quality_threshold_sweep,
     )
@@ -127,7 +126,7 @@ def test_quality_sweep_monotone_and_brackets_deployed_cut(spark):
 
 
 def test_mix_temperature_weights_normalize_and_compress(spark):
-    from python_etl_sample_spark.operators.round12_ops import (
+    from python_etl_sample_spark.operators.text_extras import (
         _MIX_ALPHAS,
         corpus_mix_alpha_sweep,
     )
@@ -169,12 +168,8 @@ def test_alpha_sweep_half_row_matches_deployed_temperature_mix(spark):
     pow(round(p,9), 0.5) rounded 9 dp — agreement to ~1e-6 is the
     designed overlap, divergence beyond it means one side's share or
     normalizer drifted."""
-    from python_etl_sample_spark.operators.round10c_ops import (
-        corpus_temperature_mix,
-    )
-    from python_etl_sample_spark.operators.round12_ops import (
-        corpus_mix_alpha_sweep,
-    )
+    from python_etl_sample_spark.operators.text_extras import corpus_temperature_mix
+    from python_etl_sample_spark.operators.text_extras import corpus_mix_alpha_sweep
 
     deployed = {
         (r["lang"], r["source"]): r["weight"]
@@ -191,9 +186,7 @@ def test_alpha_sweep_half_row_matches_deployed_temperature_mix(spark):
 
 
 def test_ivf_imbalance_partitions_corpus(spark):
-    from python_etl_sample_spark.operators.round12_ops import (
-        ann_ivf_imbalance,
-    )
+    from python_etl_sample_spark.operators.similarity import ann_ivf_imbalance
 
     rows = ann_ivf_imbalance(spark, SF_DIR).collect()
     n_vecs = table(spark, SF_DIR, "embeddings").count()

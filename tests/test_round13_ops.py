@@ -18,8 +18,8 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from python_etl_sample_spark.operators import round10b_ops as mod
-from python_etl_sample_spark.operators.round10b_ops import (
+from python_etl_sample_spark.operators import graph_analytics as mod
+from python_etl_sample_spark.operators.graph_analytics import (
     _HITS_RENORM_EVERY,
     _HITS_SCALE,
     _hits_maxdeg_bound,

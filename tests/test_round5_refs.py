@@ -88,7 +88,7 @@ def test_zorder_interleave_matches_python_bits(spark):
     interleave for every (custkey, doy) pair in the fixture."""
     from pyspark.sql import functions as F
 
-    from python_etl_sample_spark.operators.scale_ops5 import _z_value_spark
+    from python_etl_sample_spark.operators.etl_quality import _z_value_spark
 
     def z_py(c: int, d: int) -> int:
         c, d, z = c % 256, d % 256, 0

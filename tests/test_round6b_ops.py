@@ -10,10 +10,8 @@ import datetime as dt
 import hashlib
 import random
 
-from python_etl_sample_spark.operators.round6b_ops import (
-    _KMV_K,
-    _TE_M,
-)
+from python_etl_sample_spark.operators.sketches import _KMV_K
+from python_etl_sample_spark.operators.features import _TE_M
 from python_etl_sample_spark.registry import REGISTRY, load_all_operators
 
 load_all_operators()
@@ -104,10 +102,7 @@ def test_cms_hash_matches_sha256_reference(spark):
     """The Spark-side bucket hash is EXACTLY the first-6-hex-digits of
     sha256 idiom (the cross-engine contract) — re-derived in pure
     Python for a probe of user ids."""
-    from python_etl_sample_spark.operators.round6b_ops import (
-        _CMS_WIDTH,
-        _spark_hexhash,
-    )
+    from python_etl_sample_spark.operators.sketches import _CMS_WIDTH, _spark_hexhash
     from pyspark.sql import functions as F
 
     df = spark.createDataFrame([(i,) for i in range(50)], "user_id long")

@@ -42,7 +42,7 @@ def test_mmr_matches_python_greedy_reference(spark):
     import numpy as np
     import pyarrow.parquet as pq
 
-    from python_etl_sample_spark.operators.round6d_ops import (
+    from python_etl_sample_spark.operators.similarity import (
         _MMR_LAMBDA,
         _MMR_POOL,
         _MMR_QUERIES,

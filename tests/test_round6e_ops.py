@@ -33,7 +33,7 @@ def test_cusum_matches_sequential_recursion_and_localizes_shift(spark, tmp_path)
     max CUSUM equals the literal S_t = max(0, S_{t-1} + x_t - mu)
     recursion replayed in Python, and (b) the alarm fires after the
     shift, never before."""
-    from python_etl_sample_spark.operators.round6e_ops import _H_SIGMAS
+    from python_etl_sample_spark.operators.inference import _H_SIGMAS
 
     vals = [1000.0 + 50 * ((3 * i) % 7) for i in range(30)]
     for i in range(20, 30):

@@ -227,7 +227,7 @@ def test_seasonal_decompose_recovers_additive_pattern(spark, tmp_path):
 def test_knn_grid_matches_brute_force(spark, tmp_path):
     """Grid kNN must equal a brute-force all-pairs scan (same hash
     coordinates, same radius, same tie-break) on a 40×12 fixture."""
-    from python_etl_sample_spark.operators.round6f_ops import _KNN_K
+    from python_etl_sample_spark.operators.spatial import _KNN_K
     from python_etl_sample_spark.operators.spatial import _R2
 
     custs = [(k, f"C#{k}", 1, 0.0, "BUILDING") for k in range(1, 41)]

@@ -59,7 +59,7 @@ def test_silhouette_describes_the_shipped_clustering(spark):
 def test_silhouette_matches_pure_python_recompute(spark):
     """Recompute every vector's simplified silhouette in pure Python
     from the same fit (_km_fit) and compare the per-cluster report."""
-    from python_etl_sample_spark.operators.round7_ops import _km_fit
+    from python_etl_sample_spark.operators.similarity import _km_fit
 
     final, cents = _km_fit(spark, SF_DIR)
     rows = final.select("vec_id", "emb").collect()

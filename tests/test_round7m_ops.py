@@ -254,7 +254,7 @@ def test_textrank_matches_pure_python_replay(spark, tmp_path):
 def test_textrank_fixture_shape(spark):
     """Fifteen ranked keywords, scores positive and non-increasing,
     none a stopword."""
-    from python_etl_sample_spark.operators.round7e_ops import _RAKE_STOP
+    from python_etl_sample_spark.operators.text_analysis import _RAKE_STOP
 
     rows = sorted(
         REGISTRY["text_textrank_keywords"].fn(spark, SF_DIR).collect(),

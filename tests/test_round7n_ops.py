@@ -116,9 +116,7 @@ def test_hotspot_fwd_plan_is_equi_join(spark):
     stage at construction, so tools/plan_audit.py cannot see this
     join; this test pins the intermediate frame's physical plan
     directly."""
-    from python_etl_sample_spark.operators.round7n_ops import (
-        _hotspot_fwd_edges,
-    )
+    from python_etl_sample_spark.operators.spatial import _hotspot_fwd_edges
 
     dense = spark.createDataFrame(
         [(cx * 100000 + cy, cx, cy, 3) for cx in range(4) for cy in range(4)],
@@ -139,9 +137,7 @@ def test_hotspot_fwd_matches_theta_join_semantics(spark):
     against a brute-force recompute on a grid with borders, gaps, and
     cy=0 edge cells (where the (+1,-1) offset key must dangle, not
     wrap onto another real cell)."""
-    from python_etl_sample_spark.operators.round7n_ops import (
-        _hotspot_fwd_edges,
-    )
+    from python_etl_sample_spark.operators.spatial import _hotspot_fwd_edges
 
     cells = [
         (0, 0), (0, 1), (1, 0), (2, 2), (3, 1), (3, 3), (4, 0), (5, 5),
@@ -174,7 +170,7 @@ def test_hotspot_components_cross_tile_merge(spark):
     id. At the fixture scale factors the whole grid fits one tile, so
     this synthetic graph is the only coverage of the contracted
     boundary-graph path."""
-    from python_etl_sample_spark.operators.round7n_ops import (
+    from python_etl_sample_spark.operators.spatial import (
         _hotspot_components,
         _hotspot_fwd_edges,
     )

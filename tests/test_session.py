@@ -1,8 +1,9 @@
 """Mistyped ``SPARK_GRAFT_*`` overrides fail fast, naming the variable.
 
 The two join-posture variables are read when ``session`` is imported,
-so each is checked on a fresh interpreter; ``SPARK_GRAFT_CPUS`` is read
-by ``get_spark``, which must refuse it before touching the builder.
+so each is checked on a fresh interpreter; ``SPARK_GRAFT_CPUS`` and
+``SPARK_GRAFT_DRIVER_MEM`` are read by ``get_spark``, which must refuse
+them before touching the builder.
 """
 
 from __future__ import annotations
@@ -56,4 +57,14 @@ def test_cpus_must_be_star_or_positive_int(bad, monkeypatch):
         assert env_setting("SPARK_GRAFT_CPUS") == good
     monkeypatch.setenv("SPARK_GRAFT_CPUS", bad)
     with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
+        get_spark()
+
+
+@pytest.mark.parametrize("bad", ["8", "8 g", "8gb", "eight", "0g"])
+def test_driver_mem_must_be_a_jvm_size(bad, monkeypatch):
+    for good in ("8g", "2048m", "512M"):
+        monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", good)
+        assert env_setting("SPARK_GRAFT_DRIVER_MEM") == good
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", bad)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_DRIVER_MEM"):
         get_spark()

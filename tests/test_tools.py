@@ -173,3 +173,50 @@ def test_fingerprint_ignores_decorators_docstrings_and_position(tmp_path):
     assert fps["base", "SELECT 1"] == fps["meta", "SELECT 1"]
     assert fps["base", "SELECT 1"] != fps["edit", "SELECT 1"]
     assert fps["base", "SELECT 1"] != fps["base", "SELECT 2"]
+
+
+def test_driver_order_file_round_trips(tmp_path, monkeypatch):
+    """``gen_driver_order.py --write`` writes the committed data file
+    format exactly: re-writing the committed order with its bucket
+    labels reproduces driver_order.txt byte for byte, and
+    ``registry.DRIVER_ORDER`` is its name lines in order."""
+    from python_etl_sample_spark.registry import DRIVER_ORDER
+
+    mod = _load_gen_module()
+    committed = open(mod.DRIVER_ORDER_FILE).read()
+    order, label = [], None
+    for line in committed.splitlines():
+        if line.startswith("# --- "):
+            label = line[len("# --- "):-len(" ---")]
+        elif line and not line.startswith("#"):
+            order.append((line, label))
+    assert tuple(n for n, _ in order) == DRIVER_ORDER
+    out = tmp_path / "driver_order.txt"
+    monkeypatch.setattr(mod, "DRIVER_ORDER_FILE", str(out))
+    mod.write_driver_order(order)
+    assert out.read_text() == committed
+
+
+def test_fingerprint_ignores_function_local_operator_imports(tmp_path):
+    """Moving a helper between operator modules rewrites or drops a
+    function-local ``from python_etl_sample_spark.operators.<m> import``
+    line. That is layout, not behaviour, so it must not flag the query;
+    any other function-local import still does."""
+    mod = _load_gen_module()
+    body = "    return h(spark)\n"
+    variants = {
+        "old_home": "    from python_etl_sample_spark.operators.round6b_ops import h\n",
+        "new_home": "    from python_etl_sample_spark.operators.sketches import h\n",
+        "same_module": "",
+        "other_pkg": "    from python_etl_sample_spark.functions.xengine import h\n",
+    }
+    fps = {}
+    for key, imp in variants.items():
+        path = tmp_path / f"fp_imp_{key}.py"
+        path.write_text(f"def q(spark, sf_dir):\n{imp}{body}")
+        spec = importlib.util.spec_from_file_location(f"fp_imp_{key}", path)
+        m = importlib.util.module_from_spec(spec)
+        spec.loader.exec_module(m)
+        fps[key] = mod.query_fingerprint(type("Spec", (), {"fn": m.q, "oracle": None}))
+    assert fps["old_home"] == fps["new_home"] == fps["same_module"]
+    assert fps["other_pkg"] != fps["same_module"]

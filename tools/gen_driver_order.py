@@ -36,8 +36,10 @@ edit flags every query it defines).  That over-approximates — editing
 one query re-records its file siblings — but over-recording is free
 and under-recording is the round-8 gap this policy closes.
 
-Prints a ready-to-paste Python tuple body; ``--write`` splices it into
-``python_etl_sample_spark/registry.py`` in place.  Run from anywhere:
+Prints the order as a Python tuple body; ``--write`` writes it to
+``python_etl_sample_spark/driver_order.txt`` (one name per line, which
+``registry.DRIVER_ORDER`` loads) and snapshots the fingerprints.  Run
+from anywhere:
 
     python tools/gen_driver_order.py [--write]
 """
@@ -47,7 +49,6 @@ import glob
 import inspect
 import json
 import os
-import re
 import subprocess
 import sys
 import time
@@ -88,14 +89,25 @@ VERDICT_PRIORITY = (
 #: round ≥ since, exactly like the old file-epoch rule but per query.
 FINGERPRINTS = os.path.join(REPO, "tools", "query_fingerprints.json")
 
+_OPERATORS = "python_etl_sample_spark.operators"
+
+DRIVER_ORDER_FILE = os.path.join(REPO, "python_etl_sample_spark", "driver_order.txt")
+_DRIVER_ORDER_HEADER = """\
+# Driver-facing query order: one name per line, bucket labels as
+# "# --- label ---" lines. Generated by tools/gen_driver_order.py --write;
+# loaded by python_etl_sample_spark.registry.DRIVER_ORDER.
+"""
+
 
 def query_fingerprint(spec) -> str:
     """sha1 over the query function's AST + its EXPANDED oracle SQL.
 
-    The AST is ``ast.dump`` of the function with its decorators and
-    leading docstring removed, so registration metadata (``tags=``),
-    docstrings, comments, formatting and line numbers — a move to
-    another module included — never flag a query. The expanded oracle
+    The AST is ``ast.dump`` of the function with its decorators,
+    leading docstring and function-local ``from <operators module>
+    import`` statements removed, so registration metadata (``tags=``),
+    docstrings, comments, formatting, line numbers and which operator
+    module defines a helper — a move of the query or its helpers
+    included — never flag a query. The expanded oracle
     (not the f-string source) is what catches helper-driven changes
     (dsum_sql & co. are interpolated at import time); a Spark-side-only
     helper change that alters VALUES necessarily changes the oracle too
@@ -108,10 +120,15 @@ def query_fingerprint(spec) -> str:
     import hashlib
     import textwrap
 
+    class _DropOperatorImports(ast.NodeTransformer):
+        def visit_ImportFrom(self, imp):
+            return None if (imp.module or "").startswith(_OPERATORS) else imp
+
     node = ast.parse(textwrap.dedent(inspect.getsource(spec.fn))).body[0]
     node.decorator_list = []
     if ast.get_docstring(node, clean=False) is not None:
         node.body = node.body[1:]
+    node = _DropOperatorImports().visit(node)
     return hashlib.sha1(
         (ast.dump(node) + "\x00" + (spec.oracle or "")).encode()
     ).hexdigest()
@@ -285,29 +302,25 @@ def compute_order() -> tuple[list[tuple[str, str]], dict[str, int]]:
     return out, counts
 
 
-def render_body(order: list[tuple[str, str]]) -> str:
+def render_body(
+    order: list[tuple[str, str]],
+    label_fmt: str = "    # --- {} ---",
+    name_fmt: str = '    "{}",',
+) -> str:
     lines: list[str] = []
     last_label = None
     for name, label in order:
         if label != last_label:
-            lines.append(f"    # --- {label} ---")
+            lines.append(label_fmt.format(label))
             last_label = label
-        lines.append(f'    "{name}",')
+        lines.append(name_fmt.format(name))
     return "\n".join(lines)
 
 
-def write_registry(body: str) -> None:
-    path = os.path.join(REPO, "python_etl_sample_spark", "registry.py")
-    src = open(path).read()
-    new, n = re.subn(
-        r"(DRIVER_ORDER: tuple\[str, \.\.\.\] = \(\n).*?(\n\)\n)",
-        lambda m: m.group(1) + body + m.group(2),
-        src,
-        count=1,
-        flags=re.DOTALL,
-    )
-    assert n == 1, "DRIVER_ORDER tuple not found in registry.py"
-    open(path, "w").write(new)
+def write_driver_order(order: list[tuple[str, str]]) -> None:
+    with open(DRIVER_ORDER_FILE, "w") as fh:
+        fh.write(_DRIVER_ORDER_HEADER)
+        fh.write(render_body(order, "# --- {} ---", "{}") + "\n")
 
 
 def write_fingerprints() -> int:
@@ -349,18 +362,17 @@ def write_fingerprints() -> int:
 
 def main() -> None:
     order, counts = compute_order()
-    body = render_body(order)
     if "--write" in sys.argv:
-        write_registry(body)
+        write_driver_order(order)
         n_fp = write_fingerprints()
         print(
-            f"registry.py DRIVER_ORDER rewritten: {counts['never']} never / "
+            f"driver_order.txt rewritten: {counts['never']} never / "
             f"{counts['changed']} changed / {counts['upgraded']} upgraded / "
             f"{counts['rest']} by (rows, recency); {n_fp} fingerprints "
             f"snapshotted"
         )
     else:
-        print(body)
+        print(render_body(order))
 
 
 if __name__ == "__main__":

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from python_etl_sample_spark.cache import cached_df  # noqa: E402
-from python_etl_sample_spark.operators.round10b_ops import (  # noqa: E402
+from python_etl_sample_spark.operators.graph_analytics import (  # noqa: E402
     _HITS_RENORM_EVERY,
     _HITS_ROUNDS,
     _hits_maxdeg_bound,
