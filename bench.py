@@ -45,12 +45,15 @@ def _attempt(failed: dict[str, str], name: str, run: Callable[[], T]) -> T | Non
 
 
 def main() -> int:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+    from python_etl_sample_spark.session import env_setting, get_spark
+
+    # fail before any Spark work: a mistyped directory would otherwise
+    # run every warm-up and then record every query as failed
+    sf_dir = env_setting("SPARK_GRAFT_SF_DIR")
 
     from python_etl_sample_spark.api import queries
     from python_etl_sample_spark.registry import REGISTRY, WARM_TAGS
-    from python_etl_sample_spark.session import get_spark
 
     spark = get_spark("python-etl-sample-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")

@@ -20,6 +20,16 @@ import re
 
 from pyspark.sql import SparkSession
 
+from python_etl_sample_spark.api import SMOKE_SF_DIR
+
+
+def _holds_fixture_tables(path: str) -> bool:
+    # sources.tables imports this module, so its names are read lazily
+    from python_etl_sample_spark.sources.tables import TABLE_NAMES
+
+    return all(os.path.exists(f"{path}/{name}.parquet") for name in TABLE_NAMES)
+
+
 #: Validated environment overrides: name -> (default, check, expected).
 #: A mistyped value fails fast instead of reaching Spark (or the
 #: ``local[...]`` master string) as an opaque error or a silent default.
@@ -43,6 +53,12 @@ _ENV = {
         "8g",
         lambda v: re.fullmatch(r"[1-9][0-9]*[kKmMgGtT]", v) is not None,
         "a JVM memory size such as 8g or 2048m",
+    ),
+    "SPARK_GRAFT_SF_DIR": (
+        # the sf0.1 fixtures beside the smoke fixtures
+        os.path.join(os.path.dirname(SMOKE_SF_DIR), "sf0.1"),
+        _holds_fixture_tables,
+        "a directory holding the ten fixture tables as <table>.parquet",
     ),
 }
 

@@ -1,8 +1,9 @@
 from python_etl_sample_spark.sources.tables import (
     TABLE_NAMES,
     load_tables,
+    raw_schema,
     register_views,
     table,
 )
 
-__all__ = ["TABLE_NAMES", "load_tables", "register_views", "table"]
+__all__ = ["TABLE_NAMES", "load_tables", "raw_schema", "register_views", "table"]

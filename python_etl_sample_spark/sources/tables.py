@@ -12,15 +12,23 @@ not on an assumption about the file, so either vintage of fixture
 works unmodified.
 
 Scale note: loading is purely lazy — each table is a parquet scan plan,
-so Catalyst column-pruning/predicate-pushdown reach the scan. No
-caching or materialization happens here.
+so Catalyst column-pruning/predicate-pushdown reach the scan. No data is
+cached or materialized here. The one thing kept is each file's raw
+parquet schema (``raw_schema``): without it every read lists the file
+and runs one Spark job to infer the schema from the footer, the largest
+fixed cost of a short query. The memo is keyed per
+**(applicationId, path)** like ``cache.py``, so a restarted session
+infers afresh and the dead session's entries are dropped. It assumes a
+fixture file does not change while a session runs; at scale a catalog
+or table format plays this role, holding the schema instead of
+re-reading footers.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
+from pyspark.sql.types import LongType, StructType
 
 from python_etl_sample_spark.session import ensure_session_configs
 
@@ -38,12 +46,31 @@ TABLE_NAMES = (
 )
 
 
+#: (applicationId, parquet path) -> the schema Spark inferred for it
+_RAW_SCHEMAS: dict[tuple[str, str], StructType] = {}
+
+
+def raw_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
+    """The fixture file's parquet schema as Spark reads it (before the
+    ``events.ts`` normalization), inferred once per session."""
+    app = spark.sparkContext.applicationId
+    key = (app, f"{sf_dir}/{name}.parquet")
+    schema = _RAW_SCHEMAS.get(key)
+    if schema is None:
+        for stale in [k for k in _RAW_SCHEMAS if k[0] != app]:
+            del _RAW_SCHEMAS[stale]
+        ensure_session_configs(spark)
+        schema = _RAW_SCHEMAS[key] = spark.read.parquet(key[1]).schema
+    return schema
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table as a lazy DataFrame, normalized."""
     ensure_session_configs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    schema = raw_schema(spark, sf_dir, name)
+    df = spark.read.schema(schema).parquet(f"{sf_dir}/{name}.parquet")
     if name == "events":
-        if isinstance(df.schema["ts"].dataType, LongType):
+        if isinstance(schema["ts"].dataType, LongType):
             # timestamp[ns] fixture read as bigint nanos (nanosAsLong)
             df = df.withColumn(
                 "ts", F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz")

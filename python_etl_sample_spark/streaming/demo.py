@@ -31,8 +31,10 @@ from python_etl_sample_spark.session import ensure_session_configs
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events.parquet replayed as a streaming source (ts normalized to
     a watermarkable timestamp exactly as the batch loader does)."""
+    from python_etl_sample_spark.sources import raw_schema
+
     ensure_session_configs(spark)
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = raw_schema(spark, sf_dir, "events")
     # the file stream source requires a directory; stage the events file
     # into scratch once (at 100 TB this would be the landing directory
     # new files arrive into)
@@ -43,14 +45,14 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.copyfile(f"{sf_dir}/events.parquet", f"{p}/events.parquet")
 
     src_dir = stage_once("stream_src", sf_dir, _stage)
-    stream = spark.readStream.schema(raw_schema).parquet(src_dir)
+    stream = spark.readStream.schema(schema).parquet(src_dir)
     # watermarks require TIMESTAMP (not NTZ); with the UTC session tz the
     # wall-clock values are identical to the batch loader's timestamp_ntz.
     # Branch on the LOADED ts type exactly as the batch loader does
     # (sources/tables.py): bigint = nanos fixture vintage, else native.
     from pyspark.sql.types import LongType
 
-    if isinstance(raw_schema["ts"].dataType, LongType):
+    if isinstance(schema["ts"].dataType, LongType):
         return stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return stream.withColumn("ts", F.col("ts").cast("timestamp"))
 

@@ -1,8 +1,16 @@
 """Session-memo lifecycle (cache.py): repeated query invocation must
 not accumulate persisted intermediates (round-2 ADVICE — per-call
-persists leaked until GC), and release must empty the memo."""
+persists leaked until GC), and release must empty the memo. The
+loader's parquet-schema memo (sources/tables.py) is keyed per session
+the same way."""
 
 from __future__ import annotations
+
+import json
+import os
+import subprocess
+import sys
+from pathlib import Path
 
 from python_etl_sample_spark.cache import cache_keys, release_all
 from python_etl_sample_spark.registry import REGISTRY, load_all_operators
@@ -10,6 +18,36 @@ from python_etl_sample_spark.registry import REGISTRY, load_all_operators
 load_all_operators()
 
 SF_DIR = "/root/testdata/sf0.001"
+REPO = Path(__file__).resolve().parents[1]
+
+#: Child process: loads two tables, restarts the session, loads one
+#: again under a job group and reports the application ids, the jobs of
+#: that load and the schema memo's keys afterwards.
+_RESTART_CHILD = """
+import json, sys
+from python_etl_sample_spark.session import get_spark
+from python_etl_sample_spark.sources import tables
+
+sf_dir = sys.argv[1]
+spark = get_spark("schema-memo-restart")
+tables.table(spark, sf_dir, "region")
+tables.table(spark, sf_dir, "nation")
+old = spark.sparkContext.applicationId
+keys_before = sorted(tables._RAW_SCHEMAS)
+spark.stop()
+spark = get_spark("schema-memo-restart")
+sc = spark.sparkContext
+sc.setJobGroup("reload", "first load in the new session")
+tables.table(spark, sf_dir, "region")
+print(json.dumps({
+    "old": old,
+    "new": sc.applicationId,
+    "keys_before": keys_before,
+    "reload_jobs": list(sc.statusTracker().getJobIdsForGroup("reload")),
+    "keys_after": sorted(tables._RAW_SCHEMAS),
+}))
+spark.stop()
+"""
 
 
 def test_repeated_calls_do_not_grow_cache(spark):
@@ -45,3 +83,27 @@ def test_release_all_empties_the_memo(spark):
     assert cache_keys() == []
     # and the memo rebuilds cleanly afterwards
     assert REGISTRY["dedup_near_minhash"].fn(spark, SF_DIR).count() >= 0
+
+
+def test_schema_memo_is_per_session():
+    """A restarted session re-infers each fixture schema, and the dead
+    session's entries are pruned. Runs in a child process, because it
+    stops its session."""
+    out = subprocess.run(
+        [sys.executable, "-c", _RESTART_CHILD, SF_DIR],
+        cwd=REPO,
+        env={**os.environ, "SPARK_GRAFT_CPUS": "2", "SPARK_GRAFT_DRIVER_MEM": "1g"},
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    got = json.loads(out.stdout.strip().splitlines()[-1])
+    old, new = got["old"], got["new"]
+    assert old != new
+    assert got["keys_before"] == [
+        [old, f"{SF_DIR}/nation.parquet"],
+        [old, f"{SF_DIR}/region.parquet"],
+    ]
+    assert got["reload_jobs"], "the new session reused the dead session's schema"
+    assert got["keys_after"] == [[new, f"{SF_DIR}/region.parquet"]]

@@ -45,3 +45,60 @@ def test_embeddings_dim(spark):
     emb = load_tables(spark, SF_DIR)["embeddings"]
     dims = emb.select(F.size("embedding").alias("d")).distinct().collect()
     assert [r["d"] for r in dims] == [64]
+
+
+def test_warm_load_launches_no_spark_job(spark):
+    """After a table's first load in a session, ``table()`` and the
+    streaming demo's events source reuse its inferred parquet schema
+    instead of running a footer-inference job."""
+    from python_etl_sample_spark.sources import table
+    from python_etl_sample_spark.streaming.demo import _events_stream
+
+    first = {name: table(spark, SF_DIR, name).dtypes for name in ("events", "orders")}
+    sc = spark.sparkContext
+    group = "test-warm-table-load"
+    sc.setJobGroup(group, "warm table() loads")
+    try:
+        again = {name: table(spark, SF_DIR, name).dtypes for name in first}
+        stream = _events_stream(spark, SF_DIR)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert again == first
+    assert stream.isStreaming
+    assert dict(stream.dtypes)["ts"] == "timestamp"
+
+
+def test_ns_vintage_events_load_as_micros(spark, tmp_path):
+    """The timestamp[ns] fixture vintage (read as bigint nanos under
+    ``nanosAsLong``) comes out as ``timestamp_ntz`` at ``ts div 1000``
+    microseconds, on the schema-inferring first load and on the memo hit."""
+    from datetime import datetime, timedelta
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from python_etl_sample_spark.sources import tables
+
+    nanos = [1_704_067_207_123_456_789, 1_704_067_800_000_000_999, 1_706_659_032_000_001_000]
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([0, 1, 2], pa.int64()),
+                "ts": pa.array(nanos, pa.timestamp("ns")),
+                "user_id": pa.array([7, 8, 7], pa.int64()),
+                "event_type": ["click", "view", "purchase"],
+                "value": [1.5, 2.0, 0.25],
+                "props": ['{"k": 1}', '{"k": 2}', '{"k": 3}'],
+            }
+        ),
+        tmp_path / "events.parquet",
+    )
+    expected = [datetime(1970, 1, 1) + timedelta(microseconds=n // 1000) for n in nanos]
+    key = (spark.sparkContext.applicationId, f"{tmp_path}/events.parquet")
+    assert key not in tables._RAW_SCHEMAS
+    for _ in ("miss", "hit"):
+        ev = tables.table(spark, str(tmp_path), "events")
+        assert key in tables._RAW_SCHEMAS
+        assert dict(ev.dtypes)["ts"] == "timestamp_ntz"
+        assert [r["ts"] for r in ev.orderBy("event_id").collect()] == expected

@@ -3,7 +3,8 @@
 The two join-posture variables are read when ``session`` is imported,
 so each is checked on a fresh interpreter; ``SPARK_GRAFT_CPUS`` and
 ``SPARK_GRAFT_DRIVER_MEM`` are read by ``get_spark``, which must refuse
-them before touching the builder.
+them before touching the builder; ``SPARK_GRAFT_SF_DIR`` is read by
+``bench.py``, which must refuse it before starting Spark.
 """
 
 from __future__ import annotations
@@ -68,3 +69,28 @@ def test_driver_mem_must_be_a_jvm_size(bad, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", bad)
     with pytest.raises(ValueError, match="SPARK_GRAFT_DRIVER_MEM"):
         get_spark()
+
+
+def test_bench_refuses_an_sf_dir_without_the_fixture_tables(tmp_path, monkeypatch):
+    from python_etl_sample_spark.api import SMOKE_SF_DIR as good
+    from python_etl_sample_spark.sources import TABLE_NAMES
+
+    name = "SPARK_GRAFT_SF_DIR"
+    monkeypatch.setenv(name, good)
+    assert env_setting(name) == good
+    for table in TABLE_NAMES[:-1]:
+        (tmp_path / f"{table}.parquet").touch()
+    monkeypatch.setenv(name, str(tmp_path))
+    with pytest.raises(ValueError, match=name):
+        env_setting(name)
+    out = subprocess.run(
+        [sys.executable, "bench.py"],
+        cwd=REPO,
+        env={**os.environ, name: good + "-typo"},
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert out.returncode != 0
+    assert f"ValueError: {name}='{good}-typo'" in out.stderr
+    assert out.stdout == ""
