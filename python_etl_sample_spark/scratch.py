@@ -24,7 +24,11 @@ import os
 import shutil
 from collections.abc import Callable
 
-_ROOT = "/root/repo/.scratch"
+#: ``.scratch/`` beside the package, so each checkout stages into its own
+#: tree (perfbench repoints it at a private directory)
+_ROOT = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"
+)
 _staged: set[str] = set()
 
 

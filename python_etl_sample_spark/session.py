@@ -95,6 +95,22 @@ _SHJ_LOCAL_MAP_THRESHOLD = env_setting("SPARK_GRAFT_SHJ_LOCAL_MAP_THRESHOLD")
 _PREFER_SORT_MERGE_JOIN = env_setting("SPARK_GRAFT_PREFER_SORT_MERGE_JOIN")
 
 
+#: Runtime-settable confs every session needs: ``get_spark`` builds with
+#: them and ``ensure_session_configs`` sets them on a session someone
+#: else built. Shuffle partitions are right-sized for local-mode fixture
+#: scale (the 200 default wastes task-launch overhead at sf≤0.1; AQE
+#: coalescing makes the number forgiving either way).
+_SESSION_CONFS = {
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.shuffle.partitions": "32",
+    "spark.sql.join.preferSortMergeJoin": _PREFER_SORT_MERGE_JOIN,
+    "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": _SHJ_LOCAL_MAP_THRESHOLD,
+}
+
+
 def get_spark(app_name: str = "python-etl-sample-spark") -> SparkSession:
     """Build (or get) a SparkSession configured for this engine."""
     cpus = env_setting("SPARK_GRAFT_CPUS")
@@ -102,17 +118,8 @@ def get_spark(app_name: str = "python-etl-sample-spark") -> SparkSession:
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        .config(map=_SESSION_CONFS)
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.join.preferSortMergeJoin", _PREFER_SORT_MERGE_JOIN)
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            _SHJ_LOCAL_MAP_THRESHOLD,
-        )
         .config("spark.driver.memory", driver_mem)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
     )
@@ -122,11 +129,9 @@ def get_spark(app_name: str = "python-etl-sample-spark") -> SparkSession:
 def ensure_session_configs(spark: SparkSession) -> None:
     """Apply runtime-settable configs to an externally-built session.
 
-    The driver's harness constructs its own SparkSession; all of these
-    configs are dynamic (verified empirically), so the loader calls this
-    before every read. Shuffle partitions are right-sized for local-mode
-    fixture scale (the 200 default wastes task-launch overhead at sf≤0.1;
-    AQE coalescing makes the number forgiving either way).
+    The driver's harness constructs its own SparkSession; all of
+    ``_SESSION_CONFS`` are dynamic (verified empirically), so the loader
+    calls this before every read.
     """
     # Memoized by probing a marker conf ON THE SESSION itself — never by
     # id(spark): CPython reuses ids after GC, so a session created after
@@ -136,16 +141,8 @@ def ensure_session_configs(spark: SparkSession) -> None:
             return
     except Exception:
         pass
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
-    spark.conf.set("spark.sql.join.preferSortMergeJoin", _PREFER_SORT_MERGE_JOIN)
-    spark.conf.set(
-        "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        _SHJ_LOCAL_MAP_THRESHOLD,
-    )
+    for key, value in _SESSION_CONFS.items():
+        spark.conf.set(key, value)
     spark.conf.set(_MARKER_CONF, "true")
 
 

@@ -1,8 +1,14 @@
 from __future__ import annotations
 
+import sys
+from pathlib import Path
+
 import pytest
 
 from python_etl_sample_spark.session import get_spark
+
+# tools/parity_core.py, the oracle checker every grader shares
+sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
 
 #: the fast tier (`pytest -m fast`, VERDICT r12 item 4): the
 #: contract-shaped signal — what the driver itself grades (oracle

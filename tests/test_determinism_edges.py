@@ -133,17 +133,17 @@ def test_int8_quantize_zero_vector_parity(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from parity_core import run_parity
+
     from python_etl_sample_spark.registry import REGISTRY, load_all_operators
-    from python_etl_sample_spark.testing import run_parity
+    from python_etl_sample_spark.sources.tables import TABLE_NAMES
 
     load_all_operators()
 
     src = "/root/testdata/sf0.001"
-    for name in (
-        "region nation customer supplier part orders lineitem events "
-        "documents".split()
-    ):
-        shutil.copy(f"{src}/{name}.parquet", tmp_path / f"{name}.parquet")
+    for name in TABLE_NAMES:
+        if name != "embeddings":  # written below, with the trap
+            shutil.copy(f"{src}/{name}.parquet", tmp_path / f"{name}.parquet")
     rng = np.random.default_rng(7)
     vecs = [rng.normal(size=8).astype("float32") for _ in range(4)]
     vecs.append(np.zeros(8, dtype="float32"))  # the trap

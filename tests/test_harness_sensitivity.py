@@ -6,9 +6,10 @@ hash-match twice and nobody would notice. This module proves the
 checker can FAIL: six representative queries are deliberately
 perturbed — a constant flipped, a filter dropped, a rounding mode
 swapped, a column renamed, rows dropped/duplicated, a single value
-nudged — and the EXACT compare code the driver-mimic runs
-(tools/parity_core.py, imported by tools/drive_contract.py) must flag
-every mutant in the expected dimension (rows / schema / value-hash),
+nudged, an integer column served as text — and the EXACT compare code
+every grader runs (tools/parity_core.py: tests/test_parity.py,
+tools/drive_contract.py, perfbench) must flag every mutant in the
+expected dimension (rows / schema / dtype / value-hash),
 while the unmutated pair still matches, so each flag is attributable
 to the mutation alone.
 
@@ -23,26 +24,17 @@ mutant into a no-op test.
 
 from __future__ import annotations
 
-import importlib.util
 import os
 
 import pytest
+from parity_core import CHECKS, compare, duck_connection
 from pyspark.sql import functions as F
 
 from python_etl_sample_spark.registry import REGISTRY, load_all_operators
-from python_etl_sample_spark.testing import duck_connection
 
 load_all_operators()
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = os.environ.get("PARITY_SF_DIR", "/root/testdata/sf0.001")
-
-_spec = importlib.util.spec_from_file_location(
-    "parity_core", os.path.join(REPO, "tools", "parity_core.py")
-)
-parity_core = importlib.util.module_from_spec(_spec)
-_spec.loader.exec_module(parity_core)
-compare = parity_core.compare
 
 #: the queries this module mutates — one sanity pass proves the
 #: originals match, so every flag below is the mutation's doing
@@ -86,7 +78,7 @@ def _mutated_oracle(duck, name: str, old: str, new: str, count: int | None = 1):
 def test_sanity_unmutated_pairs_match(originals):
     for name, (spdf, dpdf) in originals.items():
         row = compare(spdf, dpdf)
-        assert row["rows_match"] and row["schema_match"] and row["hash_match"], (
+        assert all(row[c] for c in CHECKS), (
             f"{name} does not match UNMUTATED — mutation flags below "
             f"would be meaningless: {row}"
         )
@@ -183,3 +175,19 @@ def test_single_value_nudge_is_flagged(spark, originals):
     assert not row["hash_match"], (
         "value hash missed a one-cent, one-row perturbation"
     )
+
+
+def test_type_change_is_flagged(spark, originals):
+    """agg_groupby with its integer ``count_order`` served as text: the
+    same digits write the same CSV, so the value hash cannot see it —
+    only dtype_match can, and it must."""
+    _, dpdf = originals["agg_groupby"]
+    base = REGISTRY["agg_groupby"].fn(spark, SF_DIR)
+    assert dict(base.dtypes)["count_order"] == "bigint"
+    mutant = base.withColumn(
+        "count_order", F.col("count_order").cast("string")
+    ).toPandas()
+    row = compare(mutant, dpdf)
+    assert row["rows_match"] and row["schema_match"]
+    assert row["hash_match"], "mutant meant to be hash-invisible — retarget it"
+    assert not row["dtype_match"], "dtype check missed an int served as text"

@@ -1,15 +1,16 @@
 """Shift-left driver-parity test: every registered query vs its DuckDB
 oracle at a small scale factor (SURVEY.md §5.4 — same check the driver
-runs at sf0.01, runnable here at any sf via PARITY_SF_DIR)."""
+runs at sf0.01, runnable here at any sf via PARITY_SF_DIR), graded by
+tools/parity_core.run_parity: rows, schema, dtypes and value hash."""
 
 from __future__ import annotations
 
 import os
 
 import pytest
+from parity_core import run_parity
 
 from python_etl_sample_spark.registry import REGISTRY, load_all_operators
-from python_etl_sample_spark.testing import run_parity
 
 load_all_operators()
 

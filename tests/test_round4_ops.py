@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import pandas as pd
 import pytest
+from parity_core import norm
 
 from python_etl_sample_spark.registry import REGISTRY, load_all_operators
 
@@ -35,20 +36,12 @@ ROUND4_FLOAT_OPS = (
 )
 
 
-def _sorted_pdf(df) -> pd.DataFrame:
-    pdf = df.toPandas()
-    pdf = pdf[sorted(pdf.columns)]
-    return pdf.sort_values(by=list(pdf.columns), kind="mergesort").reset_index(
-        drop=True
-    )
-
-
 @pytest.mark.parametrize("name", ROUND4_FLOAT_OPS)
 def test_partitioning_invariance(spark, name):
-    base = _sorted_pdf(REGISTRY[name].fn(spark, SF_DIR))
+    base = norm(REGISTRY[name].fn(spark, SF_DIR).toPandas())
     spark.conf.set("spark.sql.shuffle.partitions", "7")
     try:
-        alt = _sorted_pdf(REGISTRY[name].fn(spark, SF_DIR))
+        alt = norm(REGISTRY[name].fn(spark, SF_DIR).toPandas())
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", "32")
     pd.testing.assert_frame_equal(base, alt, check_exact=True)

@@ -4,11 +4,15 @@ The two join-posture variables are read when ``session`` is imported,
 so each is checked on a fresh interpreter; ``SPARK_GRAFT_CPUS`` and
 ``SPARK_GRAFT_DRIVER_MEM`` are read by ``get_spark``, which must refuse
 them before touching the builder; ``SPARK_GRAFT_SF_DIR`` is read by
-``bench.py``, which must refuse it before starting Spark.
+``bench.py``, which must refuse it before starting Spark. A plain
+session, as the driver builds it, reads every conf of
+``session._SESSION_CONFS`` as ``get_spark``'s session does once
+``ensure_session_configs`` has run.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import subprocess
 import sys
@@ -94,3 +98,32 @@ def test_bench_refuses_an_sf_dir_without_the_fixture_tables(tmp_path, monkeypatc
     assert out.returncode != 0
     assert f"ValueError: {name}='{good}-typo'" in out.stderr
     assert out.stdout == ""
+
+
+#: Child process: a plain session, as the driver builds it, configured
+#: only by ``ensure_session_configs``; prints every mapped conf.
+_PLAIN_SESSION = """
+import json
+from pyspark.sql import SparkSession
+from python_etl_sample_spark.session import _SESSION_CONFS, ensure_session_configs
+
+spark = SparkSession.builder.master("local[1]").getOrCreate()
+ensure_session_configs(spark)
+print(json.dumps({k: spark.conf.get(k) for k in _SESSION_CONFS}))
+spark.stop()
+"""
+
+
+def test_plain_session_reads_the_get_spark_confs(spark):
+    from python_etl_sample_spark.session import _SESSION_CONFS
+
+    out = subprocess.run(
+        [sys.executable, "-c", _PLAIN_SESSION],
+        cwd=REPO,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    plain = json.loads(out.stdout.splitlines()[-1])
+    assert plain == {k: spark.conf.get(k) for k in _SESSION_CONFS}

@@ -1,10 +1,19 @@
-"""Mimic the driver: plain session, import __spark_entry__, smoke + oracle compare."""
+"""Mimic the driver: plain session, import __spark_entry__, smoke + oracle compare.
+
+Runs from any working directory. PARITY_SF_DIR picks the fixtures
+(default sf0.01), PARITY_ONLY=a,b checks only the named queries, and
+PARITY_OUT writes every row of a full run as JSON."""
 import os, sys
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.join(ROOT, "tools"))
+# the Python workers inherit this from the JVM, which inherits it from us
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
+from pyspark.errors import PythonException
 from pyspark.sql import SparkSession
-import duckdb
-from parity_core import compare, norm, vhash  # the shared checker (mutation-tested)
+from parity_core import compare, duck_connection  # the shared checker (mutation-tested)
 
 spark = SparkSession.builder.master("local[8]").appName("driver-mimic").getOrCreate()  # NO special configs
 spark.sparkContext.setLogLevel("ERROR")
@@ -20,13 +29,11 @@ qs, osql = E.queries(), E.oracle_sql()
 print("declared:", len(qs), "with oracle:", len(osql))
 
 sf = __import__("os").environ.get("PARITY_SF_DIR", "/root/testdata/sf0.01")
-con = duckdb.connect()
+con = duck_connection(sf)
 # cap oracle spill so one runaway plan degrades to a per-query err row
 # instead of filling the disk and killing every query after it (the
 # r14 sf1 lesson); harmless at the driver's sf0.01
 con.execute("SET max_temp_directory_size='40GiB'")
-for t in ["region","nation","customer","supplier","part","orders","lineitem","events","documents","embeddings"]:
-    con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')")
 
 only = __import__("os").environ.get("PARITY_ONLY")
 names = sorted(qs) if not only else [n for n in sorted(qs) if n in set(only.split(","))]
@@ -43,7 +50,11 @@ for name in names:
         dpdf = con.execute(osql[name]).df()
     except Exception as e:  # noqa: BLE001 — an err row, like the driver records
         bad += 1
-        msg = f"{type(e).__name__}: {e}".splitlines()[0][:300]
+        lines = [l.strip() for l in str(e).splitlines() if l.strip()] or [""]
+        # a worker's PythonException opens with a banner and ends with the
+        # worker's own exception line; Spark's own errors lead with theirs
+        line = lines[-1] if isinstance(e, PythonException) else lines[0]
+        msg = f"{type(e).__name__}: {line}"[:300]
         print(f"  {name}: ERR {msg}")
         results[name] = {"rows_match": None, "schema_match": None, "hash_match": False,
                          "spark_rows": None, "oracle_rows": None, "err": msg}
