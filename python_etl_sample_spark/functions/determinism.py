@@ -155,6 +155,29 @@ def _pearson_from_int_sums(m: DataFrame, out: str) -> DataFrame:
 # integer cents (exact in both engines, so moment sums over them are
 # exact int64/decimal arithmetic) and the 38-digit decimal those sums
 # are carried in.
-_CENTS = "CAST(round(o_totalprice * 100) AS BIGINT)"
-_VCENTS = "CAST(round(value * 100) AS BIGINT)"
+def cents_sql(col: str) -> str:
+    """``col`` (an exact 2-decimal money column) as integer cents."""
+    return f"CAST(round({col} * 100) AS BIGINT)"
+
+
+_CENTS = cents_sql("o_totalprice")
+_VCENTS = cents_sql("value")
+_LCENTS = cents_sql("l_extendedprice")
 _DEC38 = "decimal(38,0)"
+
+
+# Vector folds over array<double> columns. Both accumulate index 0→n−1
+# from 0.0, the order of the oracles' list_dot_product / range-indexed
+# SUM twins, so the doubles are bit-identical across engines.
+def _fold(arr: Column) -> Column:
+    return F.aggregate(arr, F.lit(0.0), lambda acc, x: acc + x)
+
+
+def _dot(a: Column, b: Column) -> Column:
+    """Index-ordered fold of the elementwise product (double)."""
+    return _fold(F.zip_with(a, b, lambda x, y: x * y))
+
+
+def _d2(a: Column, b: Column) -> Column:
+    """Squared L2 distance: index-ordered fold of (x−y)²."""
+    return _fold(F.zip_with(a, b, lambda x, y: (x - y) * (x - y)))

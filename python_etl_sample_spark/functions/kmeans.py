@@ -22,7 +22,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from python_etl_sample_spark.cache import cached_df, cached_value
-from python_etl_sample_spark.functions.determinism import DEC
+from python_etl_sample_spark.functions.determinism import DEC, _d2
 from python_etl_sample_spark.sources import table
 
 
@@ -122,31 +122,25 @@ def _km_centroid_literal(rows: list[tuple[int, list[float]]]) -> Column:
     )
 
 
-def _km_assign(vecs: DataFrame, cents: list[tuple[int, list[float]]]) -> DataFrame:
-    """(vec_id, emb, cid, dist): nearest centroid per vector, map-only.
-
-    Distance is the index-ordered left fold of (x−y)² (the exact twin
-    of the oracle's range-indexed SUM), rounded at 9 dp; the argmin is
-    ``array_min`` over (dist, cid) structs — Spark's struct ordering IS
-    the (distance, centroid-id) tie-break the oracle's window uses."""
-    carr = _km_centroid_literal(cents)
-    dists = F.transform(
-        carr,
+def _km_dists(cents: list[tuple[int, list[float]]]) -> Column:
+    """Per vector (the ``emb`` column), the array of (dist, cid) structs
+    over the centroids. Distance is the index-ordered left fold of
+    (x−y)² (the exact twin of the oracle's range-indexed SUM), rounded
+    at 9 dp; Spark's struct ordering IS the (distance, centroid-id)
+    tie-break the oracle's window uses, so ``array_min`` picks the
+    nearest centroid and ``array_sort`` gives the probe order."""
+    return F.transform(
+        _km_centroid_literal(cents),
         lambda c: F.struct(
-            F.round(
-                F.aggregate(
-                    F.zip_with(
-                        F.col("emb"), c["emb"], lambda x, y: (x - y) * (x - y)
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ),
-                9,
-            ).alias("dist"),
+            F.round(_d2(F.col("emb"), c["emb"]), 9).alias("dist"),
             c["cid"].alias("cid"),
         ),
     )
-    best = F.array_min(dists)
+
+
+def _km_assign(vecs: DataFrame, cents: list[tuple[int, list[float]]]) -> DataFrame:
+    """(vec_id, emb, cid, dist): nearest centroid per vector, map-only."""
+    best = F.array_min(_km_dists(cents))
     return vecs.select(
         "vec_id", "emb", best["cid"].alias("cid"), best["dist"].alias("dist")
     )

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from python_etl_sample_spark.functions.determinism import _LCENTS
 from python_etl_sample_spark.registry import query
 from python_etl_sample_spark.sources import table
 
@@ -260,15 +261,15 @@ def fn_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "fn_nested_struct_ops",
-    oracle="""
+    oracle=f"""
     WITH packed AS (
       SELECT l_orderkey,
              list(struct_pack(
                     ln := l_linenumber,
                     qty := CAST(l_quantity AS BIGINT),
-                    pc := CAST(round(l_extendedprice * 100) AS BIGINT))
+                    pc := {_LCENTS})
                   ORDER BY l_linenumber, CAST(l_quantity AS BIGINT),
-                           CAST(round(l_extendedprice * 100) AS BIGINT))
+                           {_LCENTS})
                AS lines
       FROM lineitem GROUP BY l_orderkey
     )
@@ -302,7 +303,7 @@ def fn_nested_struct_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     line = F.struct(
         F.col("l_linenumber").alias("ln"),
         F.col("l_quantity").cast("bigint").alias("qty"),
-        F.expr("CAST(round(l_extendedprice * 100) AS BIGINT)").alias("pc"),
+        F.expr(_LCENTS).alias("pc"),
     )
     packed = li.groupBy("l_orderkey").agg(
         F.sort_array(F.collect_list(line)).alias("lines")

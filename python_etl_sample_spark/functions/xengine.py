@@ -34,6 +34,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from python_etl_sample_spark.cache import cached_df
+from python_etl_sample_spark.functions.determinism import _dot
 from python_etl_sample_spark.sources import table
 
 # --------------------------------------------------------------------------
@@ -372,9 +373,4 @@ def lsh_bucket_col(vec: Column, t: int) -> Column:
     ``_lsh_dot_sql`` bucketing; the floor consumes a 9-dp-rounded
     double so the discontinuity lands identically in both engines."""
     proj = F.array(*[F.lit(float(x)) for x in _LSH_PROJ[t]])
-    dot = F.aggregate(
-        F.zip_with(vec, proj, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return F.floor(F.round(dot, 9) / F.lit(_LSH_BUCKET_LEN))
+    return F.floor(F.round(_dot(vec, proj), 9) / F.lit(_LSH_BUCKET_LEN))

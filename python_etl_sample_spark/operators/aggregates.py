@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from python_etl_sample_spark.functions.determinism import (
+    _CENTS,
+    _LCENTS,
     davg,
     davg_big,
     davg_big_sql,
@@ -413,7 +415,7 @@ _QUANTILES = ((25, 100), (50, 100), (75, 100), (90, 100), (99, 100))
     "agg_exact_quantiles_global",
     oracle=f"""
     WITH r AS (
-      SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
+      SELECT {_CENTS} AS cents,
              ROW_NUMBER() OVER (
                ORDER BY round(o_totalprice * 100), o_orderkey) AS rn
       FROM orders
@@ -447,7 +449,7 @@ def agg_exact_quantiles_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     unpredictably at ulp boundaries and would shift the selected rank
     by one on exact multiples."""
     o = table(spark, sf_dir, "orders")
-    cents = F.expr("CAST(round(o_totalprice * 100) AS BIGINT)")
+    cents = F.expr(_CENTS)
     ranked = attach_global_order(
         o.select(cents.alias("cents"), "o_orderkey"),
         [F.asc("cents"), F.asc("o_orderkey")],
@@ -593,9 +595,6 @@ def agg_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.max(F.col("xg") / F.col("xt")), 6).alias("revenue_share"),
         )
     )
-
-
-_LCENTS = "CAST(round(l_extendedprice * 100) AS BIGINT)"
 
 
 # ---------------------------------------------------------------------------

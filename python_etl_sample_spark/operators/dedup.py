@@ -115,7 +115,7 @@ from pyspark.sql import functions as F
 from python_etl_sample_spark.cache import cached_df
 from python_etl_sample_spark.functions import xengine as xe
 from python_etl_sample_spark.functions.components import pointer_jump_components
-from python_etl_sample_spark.functions.determinism import DEC9, dsum9_sql
+from python_etl_sample_spark.functions.determinism import DEC9, _dot, dsum9_sql
 from python_etl_sample_spark.functions.kmeans import _km_ctes, _km_fit
 from python_etl_sample_spark.functions.xengine import (
     _BANDS,
@@ -211,6 +211,26 @@ def _shingle_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return cached_df(spark, ("shingle_hashes", os.path.abspath(sf_dir)), build)
+
+
+def _shingle_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_b, doc_a, n_inter, na, nb): every document pair (doc_a <
+    doc_b) sharing at least one shingle hash, with the shared count and
+    both documents' shingle counts. The pairs come from the shingle-hash
+    equi-join, so a pair with no overlap never materializes."""
+    tokens = _shingle_hashes(spark, sf_dir)
+    sizes = tokens.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_tok"))
+    ta = tokens.select(F.col("doc_id").alias("doc_a"), "h")
+    tb = tokens.select(F.col("doc_id").alias("doc_b"), "h")
+    inter = (
+        ta.join(tb, "h")
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count(F.lit(1)).alias("n_inter"))
+    )
+    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_tok").alias("na"))
+    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_tok").alias("nb"))
+    return inter.join(sa, "doc_a").join(sb, "doc_b")
 
 
 #: long-format band frame for the candidate self-join, derived from the
@@ -481,23 +501,9 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
 
     def build() -> DataFrame:
-        tokens = _shingle_hashes(spark, sf_dir)
-
-        sizes = tokens.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_tok"))
-        ta = tokens.select(F.col("doc_id").alias("doc_a"), "h")
-        tb = tokens.select(F.col("doc_id").alias("doc_b"), "h")
-        inter = (
-            ta.join(tb, "h")
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count(F.lit(1)).alias("n_inter"))
-        )
-        sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_tok").alias("na"))
-        sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_tok").alias("nb"))
         jac = F.col("n_inter") / (F.col("na") + F.col("nb") - F.col("n_inter"))
         return (
-            inter.join(sa, "doc_a")
-            .join(sb, "doc_b")
+            _shingle_overlap(spark, sf_dir)
             .filter(jac >= 0.8)
             .select("doc_a", "doc_b", "n_inter", F.round(jac, 6).alias("jaccard"))
         )
@@ -805,6 +811,34 @@ _COS_T = "0.45"  # same semantic-dup threshold as dedup_embedding_cosine
 _DOT = "list_dot_product({a}::DOUBLE[], {b}::DOUBLE[])"
 
 
+def _cluster_cos_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(cid, vec_a, emb_a, nrm_a, vec_b, emb_b, nrm_b, sim): every
+    same-cluster vector pair of the memoized Lloyd fit with vec_a <
+    vec_b, and its cosine — the dot/norm form rounded at 9 dp."""
+    assigned, _ = _km_fit(spark, sf_dir)
+    nrm = F.sqrt(_dot(F.col("emb"), F.col("emb")))
+    e = assigned.select("cid", "vec_id", "emb", nrm.alias("nrm"))
+    a = e.select(
+        "cid",
+        F.col("vec_id").alias("vec_a"),
+        F.col("emb").alias("emb_a"),
+        F.col("nrm").alias("nrm_a"),
+    )
+    b = e.select(
+        "cid",
+        F.col("vec_id").alias("vec_b"),
+        F.col("emb").alias("emb_b"),
+        F.col("nrm").alias("nrm_b"),
+    )
+    dot = _dot(F.col("emb_a"), F.col("emb_b"))
+    sim = F.round(dot / (F.col("nrm_a") * F.col("nrm_b")), 9)
+    return (
+        a.join(b, "cid")
+        .filter(F.col("vec_a") < F.col("vec_b"))
+        .withColumn("sim", sim)
+    )
+
+
 # ---------------------------------------------------------------------------
 # dedup_semantic_cluster
 # ---------------------------------------------------------------------------
@@ -848,37 +882,8 @@ def dedup_semantic_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     formulation (float32 products are exact in double), rounded 9 dp.
 
     Warm-up tag ``memo``: reads the memoized Lloyd fit."""
-    assigned, _ = _km_fit(spark, sf_dir)
-    nrm = F.sqrt(
-        F.aggregate(
-            F.zip_with(F.col("emb"), F.col("emb"), lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-    e = assigned.select("cid", "vec_id", "emb", nrm.alias("nrm"))
-    a = e.select(
-        "cid",
-        F.col("vec_id").alias("vec_a"),
-        F.col("emb").alias("emb_a"),
-        F.col("nrm").alias("nrm_a"),
-    )
-    b = e.select(
-        "cid",
-        F.col("vec_id").alias("vec_b"),
-        F.col("emb").alias("emb_b"),
-        F.col("nrm").alias("nrm_b"),
-    )
-    dot = F.aggregate(
-        F.zip_with(F.col("emb_a"), F.col("emb_b"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    sim = F.round(dot / (F.col("nrm_a") * F.col("nrm_b")), 9)
     return (
-        a.join(b, "cid")
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .withColumn("sim", sim)
+        _cluster_cos_pairs(spark, sf_dir)
         .filter(F.col("sim") >= float(_COS_T))
         .select("cid", "vec_a", "vec_b", "sim")
     )
@@ -1759,40 +1764,9 @@ def dedup_semdedup_eps(spark: SparkSession, sf_dir: str) -> DataFrame:
     thresholds are shared literals, so every >= lands on identical
     doubles in both engines; counts are exact ints; retention is one
     mirrored division rounded 6 dp."""
-    assigned, _ = _km_fit(spark, sf_dir)
-    nrm = F.sqrt(
-        F.aggregate(
-            F.zip_with(F.col("emb"), F.col("emb"), lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-    e = assigned.select("cid", "vec_id", "emb", nrm.alias("nrm"))
-    a = e.select(
-        "cid",
-        F.col("vec_id").alias("vec_a"),
-        F.col("emb").alias("emb_a"),
-        F.col("nrm").alias("nrm_a"),
-    )
-    b = e.select(
-        "cid",
-        F.col("vec_id").alias("vec_b"),
-        F.col("emb").alias("emb_b"),
-        F.col("nrm").alias("nrm_b"),
-    )
-    dot = F.aggregate(
-        F.zip_with(F.col("emb_a"), F.col("emb_b"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
     pairs = (
-        a.join(b, "cid")
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .select(
-            "vec_a",
-            "vec_b",
-            F.round(dot / (F.col("nrm_a") * F.col("nrm_b")), 9).alias("sim"),
-        )
+        _cluster_cos_pairs(spark, sf_dir)
+        .select("vec_a", "vec_b", "sim")
         .filter(F.col("sim") >= min(_SEMDEDUP_TS))
     )
     grid = spark.createDataFrame(

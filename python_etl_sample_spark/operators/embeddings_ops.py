@@ -44,13 +44,8 @@ from decimal import ROUND_HALF_UP, Decimal
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from python_etl_sample_spark.functions.determinism import DEC, dsum_sql
-from python_etl_sample_spark.operators.similarity import (
-    _dot,
-    _dot_sql,
-    _self_grid,
-    _unpack,
-)
+from python_etl_sample_spark.functions.determinism import DEC, _dot, dsum_sql
+from python_etl_sample_spark.operators.similarity import _dot_sql, _self_grid, _unpack
 from python_etl_sample_spark.registry import query
 from python_etl_sample_spark.sources import table
 

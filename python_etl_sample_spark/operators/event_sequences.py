@@ -60,10 +60,30 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from python_etl_sample_spark.functions.determinism import DEC, dsum, dsum_sql
+from python_etl_sample_spark.functions.determinism import (
+    _DEC38,
+    _VCENTS,
+    DEC,
+    dsum,
+    dsum_sql,
+)
 from python_etl_sample_spark.functions.total_order import attach_global_order
 from python_etl_sample_spark.registry import query
 from python_etl_sample_spark.sources import table
+
+
+def _transition_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(event_type, next_type, n): how often each event type is
+    followed by each other in a user's (ts, event_id) order — LEAD over
+    one user-partitioned shuffle, then a map-side-combined count."""
+    ev = table(spark, sf_dir, "events")
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    return (
+        ev.withColumn("next_type", F.lead("event_type").over(w))
+        .filter(F.col("next_type").isNotNull())
+        .groupBy("event_type", "next_type")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
 
 
 @query(
@@ -94,14 +114,7 @@ def events_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     5×5 pair table, not the raw events. Scale: one shuffle by user for
     the lag, one map-side-combined count — the classic two-stage
     sessionization shape."""
-    ev = table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    pairs = (
-        ev.withColumn("next_type", F.lead("event_type").over(w))
-        .filter(F.col("next_type").isNotNull())
-        .groupBy("event_type", "next_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
+    pairs = _transition_counts(spark, sf_dir)
     wt = Window.partitionBy("event_type")
     return pairs.select(
         "event_type",
@@ -973,14 +986,7 @@ def events_markov_kstep(spark: SparkSession, sf_dir: str) -> DataFrame:
     one map-side-combined count (identical to P¹); every multiply
     joins (state, state) tables whose size is |event_types|² — domain-
     bounded, broadcast-joined, constant cost no matter the corpus."""
-    ev = table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    cnt = (
-        ev.withColumn("next_type", F.lead("event_type").over(w))
-        .filter(F.col("next_type").isNotNull())
-        .groupBy("event_type", "next_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
+    cnt = _transition_counts(spark, sf_dir)
     wt = Window.partitionBy("event_type")
     # persist the |types|²-bounded P¹ (≤25 rows): the unrolled powers
     # reference it once per step, and without a barrier each reference
@@ -1011,14 +1017,6 @@ def events_markov_kstep(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("b").alias("next_type"),
         F.round("p", 6).alias(f"p{_MK_STEPS}"),
     )
-
-
-_VCENTS = "CAST(round(value * 100) AS BIGINT)"
-
-
-#: wide-decimal accumulator for products of cents sums (int64-safe
-#: far beyond 100 TB row counts)
-_DEC38 = "decimal(38,0)"
 
 
 # ---------------------------------------------------------------------------

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from python_etl_sample_spark.functions.determinism import _DEC38
+from python_etl_sample_spark.functions.determinism import _CENTS, _DEC38
 from python_etl_sample_spark.registry import query
 from python_etl_sample_spark.sources import table
 
@@ -231,9 +231,6 @@ def features_woe_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PCENTS = "CAST(round(o_totalprice * 100) AS BIGINT)"
-
-
 # ---------------------------------------------------------------------------
 # features_target_encoding_loo
 # ---------------------------------------------------------------------------
@@ -245,7 +242,7 @@ _TE_SMOOTH = "20.0"
     "features_target_encoding_loo",
     oracle=f"""
     WITH base AS (
-      SELECT o.o_orderkey, c.c_mktsegment AS segment, {_PCENTS} AS cents
+      SELECT o.o_orderkey, c.c_mktsegment AS segment, {_CENTS} AS cents
       FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
     ),
     seg AS (
@@ -303,7 +300,7 @@ def features_target_encoding_loo(
     ).select(
         "o_orderkey",
         F.col("c_mktsegment").alias("segment"),
-        F.expr(_PCENTS).alias("cents"),
+        F.expr(_CENTS).alias("cents"),
     )
     seg = base.groupBy("segment").agg(
         F.count(F.lit(1)).alias("n_seg"),

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from python_etl_sample_spark.functions.components import _uf_find, _uf_union
 from python_etl_sample_spark.registry import query
 from python_etl_sample_spark.sources import table
 
@@ -118,24 +119,11 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         ids = pdf["doc_id"].to_numpy()
         gaps = pdf["n_chars"].to_numpy()
         parent: dict[int, int] = {}
-
-        def find(x: int) -> int:
-            parent.setdefault(x, x)
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
         for k in range(len(ids) - 1):
             if gaps[k + 1] - gaps[k] <= 3:
-                ra, rb = find(int(ids[k])), find(int(ids[k + 1]))
-                if ra != rb:
-                    parent[max(ra, rb)] = min(ra, rb)
+                _uf_union(parent, int(ids[k]), int(ids[k + 1]))
         return pd.DataFrame(
-            {
-                "node": ids,
-                "lab": [find(int(x)) for x in ids],
-            }
+            {"node": ids, "lab": [_uf_find(parent, int(x)) for x in ids]}
         )
 
     labels = d.groupBy("lang", "source").applyInPandas(

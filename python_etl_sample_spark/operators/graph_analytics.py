@@ -129,6 +129,18 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _directed_edges(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Both directions (src, dst) of the undirected (u, v) edge list,
+    and each node's degree (node, deg) counted over them."""
+    dir_edges = edges.select(
+        F.col("u").alias("src"), F.col("v").alias("dst")
+    ).unionAll(edges.select(F.col("v").alias("src"), F.col("u").alias("dst")))
+    deg = dir_edges.groupBy(F.col("src").alias("node")).agg(
+        F.count(F.lit(1)).alias("deg")
+    )
+    return dir_edges, deg
+
+
 # li/edges/deg are MATERIALIZED (r14): every consumer references edges
 # (and often deg) several times — the unrolled iterative oracles up to
 # 4x per round — and DuckDB's CTE inlining re-derives the whole
@@ -314,13 +326,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     a localCheckpoint-per-round variant was 9× slower from per-job
     scheduling overhead — see _copurchase_edges docstring)."""
     edges = _copurchase_edges(spark, sf_dir)
-    dir_edges = edges.select(
-        F.col("u").alias("src"), F.col("v").alias("dst")
-    ).unionAll(edges.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-    deg = (
-        dir_edges.groupBy(F.col("src").alias("node"))
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
+    dir_edges, deg = _directed_edges(edges)
     n_nodes = deg.agg(F.count(F.lit(1)).alias("n"))
     ranks = deg.crossJoin(F.broadcast(n_nodes)).select(
         "node", "deg", F.expr(f"CAST({_PR_SCALE} div n AS BIGINT)").alias("r")
@@ -421,12 +427,7 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     recorded: linear self-reference → lean on ReuseExchange;
     multiplicative self-reference → cut lineage per round."""
     edges = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=False)
-    dir_edges = edges.select(
-        F.col("u").alias("src"), F.col("v").alias("dst")
-    ).unionAll(edges.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-    deg = dir_edges.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).alias("deg")
-    )
+    dir_edges, deg = _directed_edges(edges)
     seeds = deg.orderBy(F.desc("deg"), F.asc("node")).limit(10).select("node")
     dist = deg.join(
         seeds.withColumnRenamed("node", "seed"),
@@ -620,12 +621,7 @@ def graph_jaccard_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame
     while a per-node collect_set would concentrate each hub's whole
     deg² expansion in one task."""
     edges = _copurchase_edges(spark, sf_dir)
-    sym = edges.select(
-        F.col("u").alias("src"), F.col("v").alias("dst")
-    ).unionAll(edges.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-    deg = sym.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).alias("deg")
-    )
+    sym, deg = _directed_edges(edges)
     a, b = sym.alias("a"), sym.alias("b")
     common = (
         a.join(
@@ -954,12 +950,7 @@ def graph_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     2.6 s at sf0.1)."""
 
     edges = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=False)
-    dir_edges = edges.select(
-        F.col("u").alias("src"), F.col("v").alias("dst")
-    ).unionAll(edges.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-    deg = dir_edges.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).alias("deg")
-    )
+    dir_edges, deg = _directed_edges(edges)
     seeds = (
         deg.orderBy(F.desc("deg"), F.asc("node"))
         .limit(_HC_SEEDS)
@@ -1469,15 +1460,7 @@ def graph_personalized_pagerank(
     loop, ReuseExchange dedupes the repeated edge/degree subtrees (the
     measured graph_pagerank posture; see _copurchase_edges note)."""
     edges = _copurchase_edges(spark, sf_dir)
-    dir_edges = edges.select(
-        F.col("u").alias("src"), F.col("v").alias("dst")
-    ).unionAll(
-        edges.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-    )
-    deg = (
-        dir_edges.groupBy(F.col("src").alias("node"))
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
+    dir_edges, deg = _directed_edges(edges)
     seeds = (
         deg.orderBy(F.desc("deg"), F.asc("node"))
         .limit(_PPR_SEEDS)

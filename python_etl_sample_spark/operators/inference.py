@@ -107,7 +107,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from python_etl_sample_spark.functions.determinism import (
+    _CENTS,
+    _DEC38,
+    _VCENTS,
     _pearson_from_int_sums,
+    cents_sql,
     davg_sql,
     dsum,
     dsum_sql,
@@ -115,9 +119,6 @@ from python_etl_sample_spark.functions.determinism import (
 from python_etl_sample_spark.functions.total_order import attach_global_order
 from python_etl_sample_spark.registry import query
 from python_etl_sample_spark.sources import table
-
-#: exact integer cents of a 2-dp double price
-_CENTS = "CAST(round(o_totalprice * 100) AS BIGINT)"
 
 
 @query(
@@ -1638,9 +1639,6 @@ def stats_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_OCENTS = "CAST(round(o_totalprice * 100) AS BIGINT)"
-
-
 # ---------------------------------------------------------------------------
 # stats_permutation_test
 # ---------------------------------------------------------------------------
@@ -1652,7 +1650,7 @@ _PT_B = 32
     "stats_permutation_test",
     oracle=f"""
     WITH base AS (
-      SELECT {_OCENTS} AS cents,
+      SELECT {_CENTS} AS cents,
              CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
                   THEN 1 ELSE 0 END AS grp,
              o_orderkey AS k
@@ -1716,7 +1714,7 @@ def stats_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     bootstrap at similarity scale."""
     o = table(spark, sf_dir, "orders")
     base = o.select(
-        F.expr(_OCENTS).alias("cents"),
+        F.expr(_CENTS).alias("cents"),
         F.when(
             F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1
         )
@@ -1785,9 +1783,6 @@ def stats_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(n_rows))
         .select("n_rows", "n_resamples", "t_obs", "n_ge", "p_value")
     )
-
-
-_VCENTS = "CAST(round(value * 100) AS BIGINT)"
 
 
 # ---------------------------------------------------------------------------
@@ -1903,7 +1898,7 @@ def stats_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BCENTS = "CAST(round(c_acctbal * 100) AS BIGINT)"
+_BCENTS = cents_sql("c_acctbal")
 
 
 # ---------------------------------------------------------------------------
@@ -2034,9 +2029,6 @@ def stats_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("corr") > 0, F.round(F.col("hraw") / F.col("corr"), 6)
         ).alias("h_tie_corrected"),
     )
-
-
-_DEC38 = "decimal(38,0)"
 
 
 # ---------------------------------------------------------------------------

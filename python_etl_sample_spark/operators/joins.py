@@ -214,25 +214,15 @@ def join_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "join_asof",
-    oracle="""
-    SELECT p.event_id, p.user_id, p.ts AS purchase_ts, c.ts AS last_click_ts
-    FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-    ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
-      ON p.user_id = c.user_id AND p.ts >= c.ts
-    """,
-)
-def join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """#19 as-of join: each purchase matched to the user's latest click
-    at-or-before it.
+def _asof_last_click(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Purchase events (user_id, ts, event_id, …) with last_click_ts, the
+    user's latest click at or before the purchase.
 
     Spark has no batch ASOF JOIN; the scalable emulation is
     union-the-streams + ``last(click_ts, ignorenulls)`` over a
     (user_id)-partitioned, ts-ordered window — one shuffle, no
     per-row subquery. Click rows sort before purchase rows at equal ts
-    (side tag ascending) to match DuckDB's inclusive ``p.ts >= c.ts``.
-    """
+    (side tag ascending) to match DuckDB's inclusive ``p.ts >= c.ts``."""
     ev = table(spark, sf_dir, "events")
     clicks = ev.filter(F.col("event_type") == "click").select(
         "user_id",
@@ -256,7 +246,22 @@ def join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged = clicks.unionByName(purchases).withColumn(
         "last_click_ts", F.last("click_ts", ignorenulls=True).over(w)
     )
-    return merged.filter(F.col("side") == 1).select(
+    return merged.filter(F.col("side") == 1)
+
+
+@query(
+    "join_asof",
+    oracle="""
+    SELECT p.event_id, p.user_id, p.ts AS purchase_ts, c.ts AS last_click_ts
+    FROM (SELECT * FROM events WHERE event_type = 'purchase') p
+    ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
+      ON p.user_id = c.user_id AND p.ts >= c.ts
+    """,
+)
+def join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """#19 as-of join: each purchase matched to the user's latest click
+    at-or-before it (the window emulation of ``_asof_last_click``)."""
+    return _asof_last_click(spark, sf_dir).select(
         "event_id", "user_id", F.col("ts").alias("purchase_ts"), "last_click_ts"
     )
 
@@ -546,29 +551,6 @@ def join_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ts, side) window, then the same tolerance gate). One shuffle on
     user_id; no per-row subquery; a user's history sorts within one
     task — the standard as-of contract."""
-    ev = table(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "user_id",
-        "ts",
-        F.lit(0).alias("side"),
-        F.lit(None).cast("bigint").alias("event_id"),
-        F.col("ts").alias("click_ts"),
-    )
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id",
-        "ts",
-        F.lit(1).alias("side"),
-        "event_id",
-        F.lit(None).cast("timestamp_ntz").alias("click_ts"),
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "side")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    merged = clicks.unionByName(purchases).withColumn(
-        "last_click_ts", F.last("click_ts", ignorenulls=True).over(w)
-    )
     fresh = (
         F.col("last_click_ts").isNotNull()
         & (
@@ -576,7 +558,7 @@ def join_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
             <= _ASOF_TOL_S
         )
     )
-    return merged.filter(F.col("side") == 1).select(
+    return _asof_last_click(spark, sf_dir).select(
         "event_id",
         "user_id",
         F.col("ts").alias("purchase_ts"),

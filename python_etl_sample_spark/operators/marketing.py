@@ -29,14 +29,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from python_etl_sample_spark.functions.determinism import _CENTS, cents_sql
 from python_etl_sample_spark.functions.total_order import (
     attach_global_order,
     ntile_from_rank,
 )
 from python_etl_sample_spark.registry import query
 from python_etl_sample_spark.sources import table
-
-_OCENTS = "CAST(round(o_totalprice * 100) AS BIGINT)"
 
 
 @query(
@@ -48,7 +47,7 @@ _OCENTS = "CAST(round(o_totalprice * 100) AS BIGINT)"
              date_diff('day', MAX(o_orderdate), (SELECT d0 FROM ref))
                AS recency_days,
              COUNT(*) AS frequency,
-             CAST(SUM({_OCENTS}) AS BIGINT) AS monetary_cents
+             CAST(SUM({_CENTS}) AS BIGINT) AS monetary_cents
       FROM orders GROUP BY o_custkey
     ),
     scored AS (
@@ -96,7 +95,7 @@ def events_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = o.groupBy("o_custkey").agg(
         F.max("o_orderdate").alias("last_order"),
         F.count(F.lit(1)).alias("frequency"),
-        F.sum(F.expr(_OCENTS)).alias("monetary_cents"),
+        F.sum(F.expr(_CENTS)).alias("monetary_cents"),
     )
 
     # one stacked frame: metric 0 = R, 1 = F, 2 = M. Recency DESC with
@@ -377,7 +376,7 @@ def ts_resample_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT CAST(year(o_orderdate) * 100 + month(o_orderdate) AS BIGINT)
                AS month_key,
              CAST(year(o_orderdate) AS BIGINT) AS yr,
-             CAST(SUM({_OCENTS}) AS BIGINT) AS rev_cents
+             CAST(SUM({_CENTS}) AS BIGINT) AS rev_cents
       FROM orders GROUP BY 1, 2
     ),
     scored AS (
@@ -413,7 +412,7 @@ def ts_seasonal_naive_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("month_key"),
         F.year("o_orderdate").cast("bigint").alias("yr"),
-    ).agg(F.sum(F.expr(_OCENTS)).alias("rev_cents"))
+    ).agg(F.sum(F.expr(_CENTS)).alias("rev_cents"))
     cur, prv = monthly.alias("cur"), monthly.alias("prv")
     scored = cur.join(
         prv, F.col("prv.month_key") == F.col("cur.month_key") - 100
@@ -547,10 +546,10 @@ def win_sliding_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "win_ratio_to_report",
-    oracle="""
+    oracle=f"""
     WITH nation_rev AS (
       SELECT n.n_name AS nation, r.r_name AS region,
-             CAST(SUM(CAST(round(o.o_totalprice * 100) AS BIGINT)) AS BIGINT)
+             CAST(SUM({cents_sql('o.o_totalprice')}) AS BIGINT)
                AS rev_cents
       FROM orders o
       JOIN customer c ON c.c_custkey = o.o_custkey
@@ -583,7 +582,7 @@ def win_ratio_to_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = table(spark, sf_dir, "customer")
     n = table(spark, sf_dir, "nation")
     r = table(spark, sf_dir, "region")
-    cents = F.expr("CAST(round(o_totalprice * 100) AS BIGINT)")
+    cents = F.expr(_CENTS)
     nation_rev = (
         o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
@@ -710,7 +709,7 @@ def events_dau_wau_mau(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT f.cohort_m,
              (year(o.o_orderdate) * 12 + month(o.o_orderdate)) - f.cohort_m
                AS age_months,
-             CAST(SUM({_OCENTS}) AS BIGINT) AS rev_cents
+             CAST(SUM({_CENTS}) AS BIGINT) AS rev_cents
       FROM orders o JOIN first_order f ON f.o_custkey = o.o_custkey
       GROUP BY 1, 2
     ),
@@ -755,7 +754,7 @@ def events_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cohort_m",
             (month_key - F.col("cohort_m")).alias("age_months"),
         )
-        .agg(F.sum(F.expr(_OCENTS)).alias("rev_cents"))
+        .agg(F.sum(F.expr(_CENTS)).alias("rev_cents"))
     )
     w = (
         Window.partitionBy("cohort_m")

@@ -75,6 +75,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from python_etl_sample_spark.functions.determinism import _CENTS, _DEC38
 from python_etl_sample_spark.functions.total_order import (
     attach_global_order,
     ntile_from_rank,
@@ -84,10 +85,49 @@ from python_etl_sample_spark.registry import query
 from python_etl_sample_spark.sources import table
 
 
-_SCENTS = "CAST(round(o_totalprice * 100) AS BIGINT)"
-
-
 _YPOS = "CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END"
+
+
+def _score_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(score, cnt, pos): orders per distinct integer-cents score and
+    the positives (``_YPOS``) among them — the value-domain-bounded
+    histogram the rank-based metrics run on."""
+    base = table(spark, sf_dir, "orders").select(
+        F.expr(_CENTS).alias("score"), F.expr(_YPOS).alias("y")
+    )
+    return base.groupBy("score").agg(
+        F.count(F.lit(1)).alias("cnt"), F.sum("y").alias("pos")
+    )
+
+
+def _calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(bin, y, p): each order's logistic score p — the global z-score
+    of its cents through the logistic, rounded at 6 dp — and its
+    10-equal-width bin. μ and sd come from exact integer-cents sums."""
+    base = table(spark, sf_dir, "orders").select(
+        F.expr(_CENTS).alias("cents"), F.expr(_YPOS).alias("y")
+    )
+    cd = F.col("cents").cast(_DEC38)
+    m = base.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(cd).cast("double").alias("s"),
+        F.sum(cd * F.col("cents")).cast("double").alias("ssq"),
+    )
+    mu = F.col("s") / F.col("n")
+    # GREATEST-guard (ADVICE r7): near-constant series can round the
+    # variance to a tiny negative; DuckDB sqrt raises where Spark NaNs
+    sd = F.sqrt(
+        F.greatest((F.col("ssq") - F.col("s") * mu) / F.col("n"), F.lit(0.0))
+    )
+    p = F.round(
+        1.0 / (1.0 + F.exp(-((F.col("cents").cast("double") - mu) / sd))), 6
+    )
+    z = base.crossJoin(F.broadcast(m)).select("y", p.alias("p"))
+    return z.select(
+        F.least(F.floor(F.col("p") * 10), F.lit(9)).cast("int").alias("bin"),
+        "y",
+        "p",
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -99,7 +139,7 @@ _YPOS = "CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END"
     "ml_roc_auc",
     oracle=f"""
     WITH base AS (
-      SELECT {_SCENTS} AS score, {_YPOS} AS y FROM orders
+      SELECT {_CENTS} AS score, {_YPOS} AS y FROM orders
     ),
     h AS (SELECT score, COUNT(*) AS cnt, SUM(y) AS pos
           FROM base GROUP BY score),
@@ -150,13 +190,7 @@ def ml_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     the positive-rank sum accumulates in 38-digit decimals; AUC is one
     division of exact integers rounded at 6 dp (degenerate one-class
     inputs yield NULL on both engines)."""
-    o = table(spark, sf_dir, "orders")
-    base = o.select(
-        F.expr(_SCENTS).alias("score"), F.expr(_YPOS).alias("y")
-    )
-    h = base.groupBy("score").agg(
-        F.count(F.lit(1)).alias("cnt"), F.sum("y").alias("pos")
-    )
+    h = _score_histogram(spark, sf_dir)
     r = attach_global_order(h, [F.asc("score")], cumsums=[("cnt", "cum")])
     avg2 = 2 * F.col("cum") - F.col("cnt") + 1
     agg = r.agg(
@@ -187,7 +221,7 @@ def ml_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ml_calibration_bins",
     oracle=f"""
     WITH base AS (
-      SELECT {_SCENTS} AS cents, {_YPOS} AS y FROM orders
+      SELECT {_CENTS} AS cents, {_YPOS} AS y FROM orders
     ),
     m AS (
       SELECT COUNT(*) AS n,
@@ -238,36 +272,7 @@ def ml_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     bin membership is engine-identical) and sums as decimal(28,10);
     (p − y)² rounds at 12 dp into decimal sums; the three per-bin
     ratios are single divisions rounded at 6 dp."""
-    o = table(spark, sf_dir, "orders")
-    base = o.select(
-        F.expr(_SCENTS).alias("cents"), F.expr(_YPOS).alias("y")
-    )
-    cd = F.col("cents").cast(_DEC38)
-    m = base.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(cd).cast("double").alias("s"),
-        F.sum(cd * F.col("cents")).cast("double").alias("ssq"),
-    )
-    mu = F.col("s") / F.col("n")
-    # GREATEST-guard (ADVICE r7): near-constant series can round the
-    # variance to a tiny negative; DuckDB sqrt raises where Spark NaNs
-    sd = F.sqrt(
-        F.greatest((F.col("ssq") - F.col("s") * mu) / F.col("n"), F.lit(0.0))
-    )
-    p = F.round(
-        1.0
-        / (
-            1.0
-            + F.exp(-((F.col("cents").cast("double") - mu) / sd))
-        ),
-        6,
-    )
-    z = base.crossJoin(F.broadcast(m)).select("y", p.alias("p"))
-    b = z.select(
-        F.least(F.floor(F.col("p") * 10), F.lit(9)).cast("int").alias("bin"),
-        "y",
-        "p",
-    )
+    b = _calibration_bins(spark, sf_dir)
     return b.groupBy("bin").agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.round(
@@ -299,7 +304,7 @@ def ml_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ml_gains_deciles",
     oracle=f"""
     WITH base AS (
-      SELECT o_orderkey, {_SCENTS} AS score, {_YPOS} AS y FROM orders
+      SELECT o_orderkey, {_CENTS} AS score, {_YPOS} AS y FROM orders
     ),
     d AS (
       SELECT y, NTILE(10) OVER (ORDER BY score DESC, o_orderkey) AS decile
@@ -344,7 +349,7 @@ def ml_gains_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratios are single divisions of exact integers rounded at 6 dp."""
     o = table(spark, sf_dir, "orders")
     base = o.select(
-        "o_orderkey", F.expr(_SCENTS).alias("score"), F.expr(_YPOS).alias("y")
+        "o_orderkey", F.expr(_CENTS).alias("score"), F.expr(_YPOS).alias("y")
     )
     ranked = attach_global_order(
         base,
@@ -389,9 +394,6 @@ def ml_gains_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PCENTS = "CAST(round(o_totalprice * 100) AS BIGINT)"
-
-
 # ---------------------------------------------------------------------------
 # ml_conformal_interval
 # ---------------------------------------------------------------------------
@@ -403,7 +405,7 @@ _CONF_ALPHA = "0.1"
     "ml_conformal_interval",
     oracle=f"""
     WITH base AS (
-      SELECT o_orderkey, o_orderpriority AS grp, {_PCENTS} AS cents
+      SELECT o_orderkey, o_orderpriority AS grp, {_CENTS} AS cents
       FROM orders
     ),
     g AS (
@@ -464,7 +466,7 @@ def ml_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = o.select(
         "o_orderkey",
         F.col("o_orderpriority").alias("grp"),
-        F.expr(_PCENTS).alias("cents"),
+        F.expr(_CENTS).alias("cents"),
     )
     g = base.groupBy("grp").agg(
         F.count(F.lit(1)).alias("n_g"),
@@ -513,9 +515,6 @@ def ml_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DEC38 = "decimal(38,0)"
-
-
 # ---------------------------------------------------------------------------
 # ml_pr_auc
 # ---------------------------------------------------------------------------
@@ -525,7 +524,7 @@ _DEC38 = "decimal(38,0)"
     "ml_pr_auc",
     oracle=f"""
     WITH base AS (
-      SELECT {_SCENTS} AS score, {_YPOS} AS y FROM orders
+      SELECT {_CENTS} AS score, {_YPOS} AS y FROM orders
     ),
     h AS (SELECT score, COUNT(*) AS cnt, SUM(y) AS pos
           FROM base GROUP BY score),
@@ -570,13 +569,7 @@ def ml_pr_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: cumcnt/cumpos/pos are exact integers; each
     threshold's pos·cumpos/cumcnt is ONE division rounded at 12 dp
     into an order-free decimal sum; AP divides by n₁ once, 6 dp."""
-    o = table(spark, sf_dir, "orders")
-    base = o.select(
-        F.expr(_SCENTS).alias("score"), F.expr(_YPOS).alias("y")
-    )
-    h = base.groupBy("score").agg(
-        F.count(F.lit(1)).alias("cnt"), F.sum("y").alias("pos")
-    )
+    h = _score_histogram(spark, sf_dir)
     r = attach_global_order(
         h,
         [F.desc("score")],
@@ -716,7 +709,7 @@ def ml_ndcg_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ml_threshold_sweep",
     oracle=f"""
     WITH base AS (
-      SELECT {_SCENTS} AS score, {_YPOS} AS y FROM orders
+      SELECT {_CENTS} AS score, {_YPOS} AS y FROM orders
     ),
     h AS (SELECT score, COUNT(*) AS cnt, SUM(y) AS pos
           FROM base GROUP BY score),
@@ -767,15 +760,9 @@ def ml_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: every confusion cell is exact integer arithmetic on
     cumulative counts; F1 = 2TP/(2TP+FP+FN) is ONE division of exact
     integers, rounded at 6 dp."""
-    o = table(spark, sf_dir, "orders")
-    base = o.select(
-        F.expr(_SCENTS).alias("score"), F.expr(_YPOS).alias("y")
-    )
     # persist (r14): the histogram feeds the prefix-sum kernel and the
     # n/n1 totals — one orders scan + groupBy, not two
-    h = base.groupBy("score").agg(
-        F.count(F.lit(1)).alias("cnt"), F.sum("y").alias("pos")
-    ).persist()
+    h = _score_histogram(spark, sf_dir).persist()
     r = attach_global_order(
         h,
         [F.desc("score")],
@@ -821,7 +808,7 @@ def ml_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: ml_calibration_bins' oracle so both queries score and bin the same
 _BINS_CTES = f"""
     base AS (
-      SELECT {_SCENTS} AS cents, {_YPOS} AS y FROM orders
+      SELECT {_CENTS} AS cents, {_YPOS} AS y FROM orders
     ),
     m AS (
       SELECT COUNT(*) AS n,
@@ -901,29 +888,7 @@ def ml_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     each bin's n·Δ² term rounds at 9 dp into decimal(28,12) sums; the
     four reported components round at 6 dp and the residual is
     computed FROM the 6-dp components, so it is exactly reproducible."""
-    o = table(spark, sf_dir, "orders")
-    base = o.select(
-        F.expr(_SCENTS).alias("cents"), F.expr(_YPOS).alias("y")
-    )
-    cd = F.col("cents").cast(_DEC38)
-    m = base.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(cd).cast("double").alias("s"),
-        F.sum(cd * F.col("cents")).cast("double").alias("ssq"),
-    )
-    mu = F.col("s") / F.col("n")
-    sd = F.sqrt(
-        F.greatest((F.col("ssq") - F.col("s") * mu) / F.col("n"), F.lit(0.0))
-    )
-    p = F.round(
-        1.0 / (1.0 + F.exp(-((F.col("cents").cast("double") - mu) / sd))), 6
-    )
-    z = base.crossJoin(F.broadcast(m)).select("y", p.alias("p"))
-    b = z.select(
-        F.least(F.floor(F.col("p") * 10), F.lit(9)).cast("int").alias("bin"),
-        "y",
-        "p",
-    )
+    b = _calibration_bins(spark, sf_dir)
     g = b.agg(
         F.count(F.lit(1)).alias("n"),
         F.round(F.sum("y") / F.count(F.lit(1)).cast("double"), 9).alias(
@@ -998,7 +963,7 @@ def ml_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ml_auc_delong_ci",
     oracle=f"""
     WITH base AS (
-      SELECT {_SCENTS} AS score, {_YPOS} AS y FROM orders
+      SELECT {_CENTS} AS score, {_YPOS} AS y FROM orders
     ),
     h AS (
       SELECT score, COUNT(*) AS cnt, SUM(y) AS pos,
@@ -1085,7 +1050,7 @@ def ml_auc_delong_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the clamped CI bounds round at 6 dp, with the CI computed FROM
     the 6-dp-rounded AUC and SE so every reported digit replays."""
     o = table(spark, sf_dir, "orders")
-    base = o.select(F.expr(_SCENTS).alias("score"), F.expr(_YPOS).alias("y"))
+    base = o.select(F.expr(_CENTS).alias("score"), F.expr(_YPOS).alias("y"))
     # persist the score histogram: it feeds both the prefix-sum kernel
     # and the n1/n0 totals — without a barrier the orders scan +
     # groupBy evaluates twice (r14 plan audit)

@@ -23,7 +23,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from python_etl_sample_spark.operators.similarity import _dot, _dot_sql
+from python_etl_sample_spark.functions.determinism import _dot
+from python_etl_sample_spark.operators.similarity import _dot_sql
 from python_etl_sample_spark.registry import query
 from python_etl_sample_spark.sources import table
 

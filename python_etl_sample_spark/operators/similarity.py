@@ -129,19 +129,19 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from python_etl_sample_spark.cache import cached_df
 from python_etl_sample_spark.functions import xengine as xe
-from python_etl_sample_spark.functions.determinism import DEC, dsum_sql
+from python_etl_sample_spark.functions.determinism import DEC, _d2, _dot, dsum_sql
 from python_etl_sample_spark.functions.kmeans import (
     _KM_DIM,
     _KM_ROUNDS,
-    _km_centroid_literal,
     _km_ctes,
     _km_dist_sql,
+    _km_dists,
     _km_fit,
 )
 from python_etl_sample_spark.functions.xengine import (
@@ -151,18 +151,13 @@ from python_etl_sample_spark.functions.xengine import (
     _lsh_dot_sql,
     lsh_bucket_col,
 )
-from python_etl_sample_spark.operators.text_analysis import _BM25_CTES, text_bm25_rank
+from python_etl_sample_spark.operators.text_analysis import (
+    _BM25_CTES,
+    _doc_tokens,
+    text_bm25_rank,
+)
 from python_etl_sample_spark.registry import query
 from python_etl_sample_spark.sources import table
-
-
-def _dot(a: Column, b: Column) -> Column:
-    """Index-ordered fold of the elementwise product (double)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
 
 
 # list_dot_product is bit-identical to the older per-element
@@ -608,25 +603,7 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     assigned, cents = _km_fit(spark, sf_dir)
-    carr = _km_centroid_literal(cents)
-    pdists = F.array_sort(
-        F.transform(
-            carr,
-            lambda c: F.struct(
-                F.round(
-                    F.aggregate(
-                        F.zip_with(
-                            F.col("emb"), c["emb"], lambda x, y: (x - y) * (x - y)
-                        ),
-                        F.lit(0.0),
-                        lambda acc, x: acc + x,
-                    ),
-                    9,
-                ).alias("dist"),
-                c["cid"].alias("cid"),
-            ),
-        )
-    )
+    pdists = F.array_sort(_km_dists(cents))
     # one frame carries the home cell (= nearest centroid) and the
     # probe fan-out; local_knn's membership test recovers the lists
     probes = assigned.select(
@@ -813,8 +790,7 @@ def dedup_embedding_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("centroid").alias("cb"),
         F.col("radius").alias("rb"),
     )
-    diff = F.zip_with(F.col("ca"), F.col("cb"), lambda x, y: (x - y) * (x - y))
-    cdist = F.sqrt(F.aggregate(diff, F.lit(0.0), lambda acc, x: acc + x))
+    cdist = F.sqrt(_d2(F.col("ca"), F.col("cb")))
     surviving = (
         sa.join(sb, "ccell")
         .filter(
@@ -1393,25 +1369,8 @@ def cluster_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     correctly-rounded) re-rounded at 9 dp; s = 1 − a/b is one division
     rounded at 9 dp, decimal-summed per cluster, divided once, 6 dp."""
     final, cents = _km_fit(spark, sf_dir)
-    carr = _km_centroid_literal(cents)
-    dists = F.transform(
-        carr,
-        lambda c: F.struct(
-            F.round(
-                F.aggregate(
-                    F.zip_with(
-                        F.col("emb"), c["emb"], lambda x, y: (x - y) * (x - y)
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ),
-                9,
-            ).alias("dist"),
-            c["cid"].alias("cid"),
-        ),
-    )
     ranked = final.select(
-        "vec_id", F.array_sort(dists).alias("ds")
+        "vec_id", F.array_sort(_km_dists(cents)).alias("ds")
     ).select(
         "vec_id",
         F.col("ds")[0]["cid"].alias("cid"),
@@ -1520,11 +1479,7 @@ def sim_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     bm = text_bm25_rank(spark, sf_dir).select(
         "probe_id", "doc_id", F.col("rn").alias("rank_a")
     ).persist()
-    d = table(spark, sf_dir, "documents")
-    tok = d.select(
-        "doc_id",
-        F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("token"),
-    ).filter(F.col("token") != "")
+    tok = _doc_tokens(spark, sf_dir)
     dl = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
     top_b = dl.orderBy(F.desc("dl"), F.asc("doc_id")).limit(_PRIOR_TOPK)
     # bounded-window: the prior frame is LIMIT 10 rows (query
@@ -1645,11 +1600,7 @@ def sim_more_like_this(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact ratio rounded at 6 dp; dot products and norms accumulate
     12-dp-rounded products in decimals; the similarity is one mirrored
     normalization rounded at 9 dp, ties on neighbor id."""
-    d = table(spark, sf_dir, "documents")
-    tok = d.select(
-        "doc_id",
-        F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("token"),
-    ).filter(F.col("token") != "")
+    tok = _doc_tokens(spark, sf_dir)
     # persist tf and wt (r14): tf feeds df/nd/wt and wt feeds
     # norms/probes/both dot sides — without barriers the tokenize +
     # groupBy pipeline re-evaluates ~7x (r14 plan audit: 29 exchanges)
@@ -1902,25 +1853,7 @@ def _ann_flag_frame_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     assigned, cents = _km_fit(spark, sf_dir)
-    carr = _km_centroid_literal(cents)
-    pdists = F.array_sort(
-        F.transform(
-            carr,
-            lambda c: F.struct(
-                F.round(
-                    F.aggregate(
-                        F.zip_with(
-                            F.col("emb"), c["emb"], lambda x, y: (x - y) * (x - y)
-                        ),
-                        F.lit(0.0),
-                        lambda acc, x: acc + x,
-                    ),
-                    9,
-                ).alias("dist"),
-                c["cid"].alias("cid"),
-            ),
-        )
-    )
+    pdists = F.array_sort(_km_dists(cents))
     probes = assigned.select(
         "vec_id",
         pdists[0]["cid"].alias("p1"),
@@ -1969,14 +1902,7 @@ def _ann_flag_frame_build(spark: SparkSession, sf_dir: str) -> DataFrame:
             "neighbor_id",
         )
     )
-    d2 = F.round(
-        F.aggregate(
-            F.zip_with(F.col("qv"), F.col("nv"), lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        9,
-    )
+    d2 = F.round(_d2(F.col("qv"), F.col("nv")), 9)
     lsh_caught = (
         ((F.col("qb0") == F.col("nb0")) | (F.col("qb1") == F.col("nb1")))
         & (d2 <= F.lit(_LSH_RADIUS * _LSH_RADIUS))
@@ -2136,16 +2062,7 @@ def _pq_dists(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # squared L2, 9-dp-rounded, scaled to exact BIGINT (module doc)
         d9 = F.round(
-            F.round(
-                F.aggregate(
-                    F.zip_with("sub", "cen", lambda a, b: (a - b) * (a - b)),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                ),
-                9,
-            )
-            * 1e9,
-            0,
+            F.round(_d2(F.col("sub"), F.col("cen")), 9) * 1e9, 0
         ).cast("bigint")
         return sub.join(F.broadcast(centers), "s").select(
             "vec_id", "label", "s", "c", d9.alias("d9")
@@ -2197,6 +2114,31 @@ def _pq_adc_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cached_df(spark, ("pq_adc_frame", os.path.abspath(sf_dir)), build)
 
 
+def _pq_topk(adc: DataFrame) -> DataFrame:
+    """(query_id, neighbor_id, rn, adc_dist): each query's _PQ_TOPK
+    nearest of an ADC frame (query_id, vec_id, adc_scaled), ties broken
+    on vec_id."""
+    w = Window.partitionBy("query_id").orderBy("adc_scaled", "vec_id")
+    return (
+        adc.withColumn("rn", F.row_number().over(w).cast("int"))
+        .filter(F.col("rn") <= _PQ_TOPK)
+        .select(
+            "query_id",
+            F.col("vec_id").alias("neighbor_id"),
+            "rn",
+            F.round(F.col("adc_scaled") / 1e9, 9).alias("adc_dist"),
+        )
+    )
+
+
+def _ivf_queries(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(query_id, emb): the label-0 query vectors the IVF tier probes."""
+    return table(spark, sf_dir, "embeddings").filter(F.col("label") == 0).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").cast("array<double>").alias("emb"),
+    )
+
+
 @query("sim_pq_adc", oracle=_PQ_ORACLE, tags=("memo",))
 def sim_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN with asymmetric distance computation:
@@ -2239,18 +2181,7 @@ def sim_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     Warm-up tag ``memo``: the PQ distance frame (codes + query LUTs) is
     a session memo shared with ``sim_pq_ivf_adc``, so bench's timed
     number is this scan's own ranking pass."""
-    adc = _pq_adc_frame(spark, sf_dir)
-    w = Window.partitionBy("query_id").orderBy("adc_scaled", "vec_id")
-    return (
-        adc.withColumn("rn", F.row_number().over(w).cast("int"))
-        .filter(F.col("rn") <= _PQ_TOPK)
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "rn",
-            F.round(F.col("adc_scaled") / 1e9, 9).alias("adc_dist"),
-        )
-    )
+    return _pq_topk(_pq_adc_frame(spark, sf_dir))
 
 # --------------------------------------------------------------------------
 # sim_pq_ivf_adc — the IVFADC composition
@@ -2325,32 +2256,9 @@ def sim_pq_ivf_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned, cents = _km_fit(spark, sf_dir)
     home = assigned.select("vec_id", "cid")
 
-    q = table(spark, sf_dir, "embeddings").filter(F.col("label") == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").cast("array<double>").alias("emb"),
-    )
-    carr = _km_centroid_literal(cents)
-    pdists = F.array_sort(
-        F.transform(
-            carr,
-            lambda c: F.struct(
-                F.round(
-                    F.aggregate(
-                        F.zip_with(
-                            F.col("emb"), c["emb"], lambda x, y: (x - y) * (x - y)
-                        ),
-                        F.lit(0.0),
-                        lambda acc, x: acc + x,
-                    ),
-                    9,
-                ).alias("dist"),
-                c["cid"].alias("cid"),
-            ),
-        )
-    )
-    probes = q.select(
-        "query_id",
-        F.explode(F.slice(pdists, 1, _PQ_NPROBE)).alias("p"),
+    pdists = F.array_sort(_km_dists(cents))
+    probes = _ivf_queries(spark, sf_dir).select(
+        "query_id", F.explode(F.slice(pdists, 1, _PQ_NPROBE)).alias("p")
     ).select("query_id", F.col("p.cid").alias("cid"))
     cand = probes.join(home, "cid").filter(
         F.col("vec_id") != F.col("query_id")
@@ -2372,17 +2280,7 @@ def sim_pq_ivf_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("query_id", "vec_id")
         .agg(F.sum("d9").alias("adc_scaled"))
     )
-    w = Window.partitionBy("query_id").orderBy("adc_scaled", "vec_id")
-    return (
-        adc.withColumn("rn", F.row_number().over(w).cast("int"))
-        .filter(F.col("rn") <= _PQ_TOPK)
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "rn",
-            F.round(F.col("adc_scaled") / 1e9, 9).alias("adc_dist"),
-        )
-    )
+    return _pq_topk(adc)
 
 
 _NPROBES = (1, 2, 4, 8)  # 8 = k: the exhaustive anchor
@@ -2495,31 +2393,8 @@ def sim_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     home = assigned.select("vec_id", "cid")
     csize = home.groupBy("cid").agg(F.count(F.lit(1)).alias("n"))
 
-    q = table(spark, sf_dir, "embeddings").filter(F.col("label") == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").cast("array<double>").alias("emb"),
-    )
-    carr = _km_centroid_literal(cents)
-    pdists = F.array_sort(
-        F.transform(
-            carr,
-            lambda c: F.struct(
-                F.round(
-                    F.aggregate(
-                        F.zip_with(
-                            F.col("emb"), c["emb"], lambda x, y: (x - y) * (x - y)
-                        ),
-                        F.lit(0.0),
-                        lambda acc, x: acc + x,
-                    ),
-                    9,
-                ).alias("dist"),
-                c["cid"].alias("cid"),
-            ),
-        )
-    )
-    cellrank = q.select(
-        "query_id", F.posexplode(pdists).alias("pos", "p")
+    cellrank = _ivf_queries(spark, sf_dir).select(
+        "query_id", F.posexplode(F.array_sort(_km_dists(cents))).alias("pos", "p")
     ).select(
         "query_id",
         (F.col("pos") + 1).alias("rnk"),
@@ -2735,14 +2610,7 @@ def sim_lsh_radius_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "neighbor_id",
     )
-    d2 = F.round(
-        F.aggregate(
-            F.zip_with(F.col("qv"), F.col("nv"), lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        9,
-    )
+    d2 = F.round(_d2(F.col("qv"), F.col("nv")), 9)
     bucketed = F.when(
         (F.col("qb0") == F.col("nb0")) | (F.col("qb1") == F.col("nb1")), 1
     ).otherwise(0)

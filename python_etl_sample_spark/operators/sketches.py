@@ -109,6 +109,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from python_etl_sample_spark.functions.determinism import _CENTS
 from python_etl_sample_spark.functions.total_order import attach_global_order
 from python_etl_sample_spark.registry import query
 from python_etl_sample_spark.scratch import stage_once
@@ -736,7 +737,6 @@ def sketch_theta_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_OCENTS = "CAST(round(o_totalprice * 100) AS BIGINT)"
 #: sketch budget (kept-item target) for the global sketch
 _KLL_B = 2048
 #: per-scope budget for the merge demonstration (coarser on purpose —
@@ -761,7 +761,7 @@ _KLL_QS = (50, 95, 99)
       WHERE n <= {_KLL_B} * ((1::BIGINT) << l)
     ),
     smp AS (
-      SELECT {_OCENTS} AS cents, o_orderkey AS k
+      SELECT {_CENTS} AS cents, o_orderkey AS k
       FROM orders CROSS JOIN lv
       WHERE ({_KLL_HASH} % ((1::BIGINT) << lev)) = 0
     ),
@@ -771,8 +771,8 @@ _KLL_QS = (50, 95, 99)
       FROM smp
     ),
     frank AS (
-      SELECT {_OCENTS} AS cents,
-             ROW_NUMBER() OVER (ORDER BY {_OCENTS}, o_orderkey) AS rn
+      SELECT {_CENTS} AS cents,
+             ROW_NUMBER() OVER (ORDER BY {_CENTS}, o_orderkey) AS rn
       FROM orders
     ),
     q AS (SELECT UNNEST([{",".join(str(q) for q in _KLL_QS)}]) AS qn),
@@ -831,7 +831,7 @@ def sketch_kll_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     modulus = F.expr("shiftleft(CAST(1 AS BIGINT), CAST(lev AS INT))")
     smp = (
         o.select(
-            F.expr(_OCENTS).alias("cents"), F.col("o_orderkey").alias("k")
+            F.expr(_CENTS).alias("cents"), F.col("o_orderkey").alias("k")
         )
         .crossJoin(F.broadcast(lv))
         .filter(
@@ -845,7 +845,7 @@ def sketch_kll_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         total_count="kept",
     )
     frank = attach_global_order(
-        o.select(F.expr(_OCENTS).alias("cents"), "o_orderkey"),
+        o.select(F.expr(_CENTS).alias("cents"), "o_orderkey"),
         [F.asc("cents"), F.asc("o_orderkey")],
         rn="rn",
     )
@@ -894,10 +894,10 @@ def _kll_merge_scope_ctes() -> str:
     (union of group sketches re-filtered to the global level)."""
     return f"""
     scoped AS (
-      SELECT o_orderpriority AS scope, {_OCENTS} AS cents, o_orderkey AS k
+      SELECT o_orderpriority AS scope, {_CENTS} AS cents, o_orderkey AS k
       FROM orders
       UNION ALL
-      SELECT 'ALL', {_OCENTS}, o_orderkey FROM orders
+      SELECT 'ALL', {_CENTS}, o_orderkey FROM orders
     ),
     ns AS (SELECT scope, COUNT(*) AS n FROM scoped GROUP BY scope),
     lvs AS (
@@ -982,12 +982,12 @@ def sketch_kll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = table(spark, sf_dir, "orders")
     scoped = o.select(
         F.col("o_orderpriority").alias("scope"),
-        F.expr(_OCENTS).alias("cents"),
+        F.expr(_CENTS).alias("cents"),
         F.col("o_orderkey").alias("k"),
     ).unionAll(
         o.select(
             F.lit("ALL").alias("scope"),
-            F.expr(_OCENTS).alias("cents"),
+            F.expr(_CENTS).alias("cents"),
             F.col("o_orderkey").alias("k"),
         )
     # persist the scope-stacked union: it feeds the scope counts, the
@@ -1118,7 +1118,7 @@ def _duck_hash(col: str) -> str:
     "sketch_kll_partitioned_rollup",
     oracle=f"""
     WITH base AS (
-      SELECT {_YM} AS ym, {_OCENTS} AS cents, o_orderkey AS k
+      SELECT {_YM} AS ym, {_CENTS} AS cents, o_orderkey AS k
       FROM orders
     ),
     ns AS (SELECT ym, COUNT(*) AS n_s FROM base GROUP BY ym),
@@ -1209,7 +1209,7 @@ def sketch_kll_partitioned_rollup(
     o = table(spark, sf_dir, "orders")
     base = o.select(
         F.expr(_YM).alias("ym"),
-        F.expr(_OCENTS).alias("cents"),
+        F.expr(_CENTS).alias("cents"),
         F.col("o_orderkey").alias("k"),
     )
     lvl_grid = spark.range(0, 41).withColumnRenamed("id", "l")

@@ -32,10 +32,14 @@ component minima under converged min-label propagation (order-free).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from python_etl_sample_spark.functions.components import pointer_jump_components
+from python_etl_sample_spark.functions.components import (
+    _uf_find,
+    _uf_union,
+    pointer_jump_components,
+)
 from python_etl_sample_spark.registry import query
 from python_etl_sample_spark.sources import table
 
@@ -57,6 +61,34 @@ def _with_coords(df: DataFrame, key: str) -> DataFrame:
         F.expr(_CX.format(k=key)).alias("x"),
         F.expr(_CY.format(k=key)).alias("y"),
     )
+
+
+def _grid_sides(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, Column]:
+    """The sides of the customer×supplier radius grid join: customers
+    (c_custkey, x, y); suppliers replicated into their 3×3 cell
+    neighborhood (s_suppkey, sx, sy, cx, cy) — cells are radius-sized,
+    so the neighborhood provably contains every in-radius candidate —
+    and the exact int64 squared distance of a joined row."""
+    cust = _with_coords(table(spark, sf_dir, "customer"), "c_custkey")
+    sup = _with_coords(table(spark, sf_dir, "supplier"), "s_suppkey")
+    off = F.explode(F.array(F.lit(-1), F.lit(0), F.lit(1)))
+    reps = (
+        sup.withColumn("dx", off)
+        .withColumn("dy", off)
+        .select(
+            "s_suppkey",
+            F.col("x").alias("sx"),
+            F.col("y").alias("sy"),
+            (F.expr(f"x div {_R}") + F.col("dx")).alias("cx"),
+            (F.expr(f"y div {_R}") + F.col("dy")).alias("cy"),
+        )
+    )
+    d2 = (F.col("x") - F.col("sx")) * (F.col("x") - F.col("sx")) + (
+        F.col("y") - F.col("sy")
+    ) * (F.col("y") - F.col("sy"))
+    return cust, reps, d2
 
 
 @query(
@@ -108,23 +140,7 @@ def spatial_grid_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per-customer aggregation reuses the join's output partitioning.
     COUNT counts the supplier key (null on no-match rows → 0), and
     min_dist2 is NULL for isolated customers in both engines."""
-    cust = _with_coords(table(spark, sf_dir, "customer"), "c_custkey")
-    sup = _with_coords(table(spark, sf_dir, "supplier"), "s_suppkey")
-    off = F.explode(F.expr("array(-1, 0, 1)"))
-    sup_cells = (
-        sup.withColumn("dx", off)
-        .withColumn("dy", off)
-        .select(
-            "s_suppkey",
-            F.col("x").alias("sx"),
-            F.col("y").alias("sy"),
-            (F.expr(f"x div {_R}") + F.col("dx")).alias("cx"),
-            (F.expr(f"y div {_R}") + F.col("dy")).alias("cy"),
-        )
-    )
-    d2 = (F.col("x") - F.col("sx")) * (F.col("x") - F.col("sx")) + (
-        F.col("y") - F.col("sy")
-    ) * (F.col("y") - F.col("sy"))
+    cust, sup_cells, d2 = _grid_sides(spark, sf_dir)
     joined = cust.join(
         sup_cells,
         (F.col("cx") == F.expr(f"x div {_R}"))
@@ -197,23 +213,7 @@ def spatial_knn_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     by probe key (millions of small partitions, the shape window
     functions scale best at), and candidate lists are bounded by
     spatial density — never all-pairs."""
-    cust = _with_coords(table(spark, sf_dir, "customer"), "c_custkey")
-    sup = _with_coords(table(spark, sf_dir, "supplier"), "s_suppkey")
-    off = F.explode(F.array(F.lit(-1), F.lit(0), F.lit(1)))
-    reps = (
-        sup.withColumn("dx", off)
-        .withColumn("dy", off)
-        .select(
-            "s_suppkey",
-            F.col("x").alias("sx"),
-            F.col("y").alias("sy"),
-            (F.expr(f"x div {_R}") + F.col("dx")).alias("cx"),
-            (F.expr(f"y div {_R}") + F.col("dy")).alias("cy"),
-        )
-    )
-    d2 = (F.col("x") - F.col("sx")) * (F.col("x") - F.col("sx")) + (
-        F.col("y") - F.col("sy")
-    ) * (F.col("y") - F.col("sy"))
+    cust, reps, d2 = _grid_sides(spark, sf_dir)
     cand = (
         cust.join(
             F.broadcast(reps),
@@ -326,21 +326,11 @@ def _hotspot_components(dense: DataFrame, fwd: DataFrame) -> DataFrame:
 
     def tile_uf(pdf: pd.DataFrame) -> pd.DataFrame:
         parent: dict[int, int] = {}
-
-        def find(x: int) -> int:
-            parent.setdefault(x, x)
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
         for a, b in zip(pdf["src"], pdf["dst"]):
-            ra, rb = find(int(a)), find(int(b))
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
+            _uf_union(parent, int(a), int(b))
         keys = list(parent)
         return pd.DataFrame(
-            {"node": keys, "lab": [find(k) for k in keys]}
+            {"node": keys, "lab": [_uf_find(parent, k) for k in keys]}
         )
 
     intra = e.filter(F.col("t_src") == F.col("t_dst"))

@@ -110,6 +110,26 @@ def _tokens(d: DataFrame) -> DataFrame:
     ).filter((F.col("token") != "") & ~F.col("token").isin(*_STOPWORDS))
 
 
+def _doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, token): each document's lower-cased whitespace tokens,
+    empty tokens dropped."""
+    return table(spark, sf_dir, "documents").select(
+        "doc_id",
+        F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("token"),
+    ).filter(F.col("token") != "")
+
+
+def _doc_pos_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, pos, token): ``_doc_tokens`` with each token's index in
+    the split (counted before empty tokens are dropped)."""
+    return table(spark, sf_dir, "documents").select(
+        "doc_id",
+        F.posexplode(F.split(F.lower(F.col("text")), r"\s+")).alias(
+            "pos", "token"
+        ),
+    ).filter(F.col("token") != "")
+
+
 _TOKENS_SQL = f"""
     SELECT doc_id, lang, source, t.token
     FROM documents, unnest(string_split_regex(lower(text), '\\s+')) AS t(token)
@@ -995,11 +1015,7 @@ def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bm25_scored_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = table(spark, sf_dir, "documents")
-    tok = d.select(
-        "doc_id",
-        F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("token"),
-    ).filter(F.col("token") != "")
+    tok = _doc_tokens(spark, sf_dir)
     dl = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
     stats = dl.agg(
         F.count(F.lit(1)).alias("n"),
@@ -1282,21 +1298,9 @@ def text_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle, document-frequency-bounded fan-out, AQE skew-split for
     hot shingles; the directed expansion is 2× the (sparse)
     intersection table."""
-    from python_etl_sample_spark.operators.dedup import _shingle_hashes
+    from python_etl_sample_spark.operators.dedup import _shingle_overlap
 
-    tokens = _shingle_hashes(spark, sf_dir)
-    sizes = tokens.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    ta = tokens.select(F.col("doc_id").alias("doc_a"), "h")
-    tb = tokens.select(F.col("doc_id").alias("doc_b"), "h")
-    inter = (
-        ta.join(tb, "h")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
-    both = inter.join(sa, "doc_a").join(sb, "doc_b")
+    both = _shingle_overlap(spark, sf_dir)
     # one explode fans each undirected row into its two directed
     # containments in a single pass — the previous d1.unionAll(d2)
     # evaluated the intersection+size joins twice per run
@@ -1399,13 +1403,7 @@ def text_bigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the unigram scorer's dsum pattern); H is one double division;
     perplexity is power(10, H) of the identical double on both engines
     (≤1 ulp), rounded 2 dp."""
-    d = table(spark, sf_dir, "documents")
-    tok = d.select(
-        "doc_id",
-        F.posexplode(F.split(F.lower(F.col("text")), r"\s+")).alias(
-            "pos", "token"
-        ),
-    ).filter(F.col("token") != "")
+    tok = _doc_pos_tokens(spark, sf_dir)
     w = Window.partitionBy("doc_id").orderBy("pos")
     bgn = (
         tok.withColumn("w2", F.lead("token").over(w))
@@ -1600,13 +1598,7 @@ def text_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal sum; scores re-round at 9 dp per iteration so every round
     starts from identical doubles on both engines; ties in the final
     rank break on the token string."""
-    d = table(spark, sf_dir, "documents")
-    tok = d.select(
-        "doc_id",
-        F.posexplode(F.split(F.lower(F.col("text")), r"\s+")).alias(
-            "pos", "token"
-        ),
-    ).filter(F.col("token") != "")
+    tok = _doc_pos_tokens(spark, sf_dir)
     wc = Window.partitionBy("doc_id").orderBy("pos")
     content = tok.filter(~F.col("token").isin(*_RAKE_STOP)).select(
         "doc_id", "token", F.row_number().over(wc).alias("cpos")
@@ -2216,14 +2208,7 @@ def text_heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     functions/determinism.py), and the cross-products round at 9 dp in
     double — mirrored in both engines — before the same exact scale-9
     cast; ties impossible (doc_id is unique)."""
-    d = table(spark, sf_dir, "documents")
-    tok = (
-        d.select(
-            "doc_id",
-            F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("token"),
-        )
-        .filter(F.col("token") != "")
-    )
+    tok = _doc_tokens(spark, sf_dir)
     per_doc = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_tok"))
     first_seen = tok.groupBy("token").agg(F.min("doc_id").alias("fd"))
     new_per_doc = first_seen.groupBy(F.col("fd").alias("doc_id")).agg(

@@ -47,6 +47,7 @@ from python_etl_sample_spark.cache import cached_df
 from python_etl_sample_spark.functions import xengine as xe
 from python_etl_sample_spark.functions.determinism import DEC9, dsum_sql
 from python_etl_sample_spark.functions.total_order import attach_global_order
+from python_etl_sample_spark.operators.text_analysis import _doc_pos_tokens
 from python_etl_sample_spark.registry import query
 from python_etl_sample_spark.sources import table
 
@@ -499,13 +500,7 @@ def text_collocations_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     a unique (pmi, w1, w2) order. At 100 TB the (token, token) bigram
     frame is the only large intermediate and it aggregates map-side
     before the join against unigram counts."""
-    d = table(spark, sf_dir, "documents")
-    tok = d.select(
-        "doc_id",
-        F.posexplode(F.split(F.lower(F.col("text")), r"\s+")).alias(
-            "pos", "token"
-        ),
-    ).filter(F.col("token") != "")
+    tok = _doc_pos_tokens(spark, sf_dir)
     uni = tok.groupBy("token").agg(F.count(F.lit(1)).alias("c"))
     n_uni = uni.agg(F.sum("c").alias("n_uni"))
     # adjacent pairs via ONE doc-partitioned lead() window instead of
@@ -560,6 +555,31 @@ def text_collocations_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
+def _sqrt_domain_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per (lang, source): n_docs, n_chars, the character share p_share,
+    sq9 = round(sqrt(p_share), 9) and the normalizer z = Σ sq9 (an
+    exact decimal sum) — the α = 0.5 temperature weights are sq9 / z."""
+    per = table(spark, sf_dir, "documents").groupBy("lang", "source").agg(
+        F.count(F.lit(1)).alias("n_docs"), F.sum("n_chars").alias("n_chars")
+    )
+    tot = per.agg(F.sum("n_chars").alias("total_chars"))
+    p_share = F.col("n_chars").cast("double") / F.col("total_chars").cast(
+        "double"
+    )
+    sq = per.crossJoin(F.broadcast(tot)).select(
+        "lang",
+        "source",
+        "n_docs",
+        "n_chars",
+        p_share.alias("p_share"),
+        F.round(F.sqrt(p_share), 9).alias("sq9"),
+    )
+    z = sq.agg(
+        F.sum(F.col("sq9").cast("decimal(28,12)")).cast("double").alias("z")
+    )
+    return sq.crossJoin(F.broadcast(z))
+
+
 @query(
     "corpus_temperature_mix",
     oracle="""
@@ -606,26 +626,7 @@ def corpus_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one map-side-combined groupBy over the corpus to ~domains
     rows; the totals and Z frames are 1-row broadcasts; nothing else
     touches the documents."""
-    d = table(spark, sf_dir, "documents")
-    per = d.groupBy("lang", "source").agg(
-        F.count(F.lit(1)).alias("n_docs"), F.sum("n_chars").alias("n_chars")
-    )
-    tot = per.agg(F.sum("n_chars").alias("total_chars"))
-    p_share = F.col("n_chars").cast("double") / F.col("total_chars").cast(
-        "double"
-    )
-    sq = per.crossJoin(F.broadcast(tot)).select(
-        "lang",
-        "source",
-        "n_docs",
-        "n_chars",
-        p_share.alias("p_share"),
-        F.round(F.sqrt(p_share), 9).alias("sq9"),
-    )
-    z = sq.agg(
-        F.sum(F.col("sq9").cast("decimal(28,12)")).cast("double").alias("z")
-    )
-    return sq.crossJoin(F.broadcast(z)).select(
+    return _sqrt_domain_weights(spark, sf_dir).select(
         "lang",
         "source",
         "n_docs",
@@ -706,21 +707,7 @@ def corpus_apportion_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     (IEEE-guaranteed sqrt, decimal normalizer); the quota rounds at
     9 dp so floor/remainder are engine-identical; allocation is exact
     integer arithmetic over an exact rank."""
-    d = table(spark, sf_dir, "documents")
-    per = d.groupBy("lang", "source").agg(
-        F.count(F.lit(1)).alias("n_docs"), F.sum("n_chars").alias("n_chars")
-    )
-    tot = per.agg(F.sum("n_chars").alias("total_chars"))
-    p_share = F.col("n_chars").cast("double") / F.col("total_chars").cast(
-        "double"
-    )
-    sq = per.crossJoin(F.broadcast(tot)).select(
-        "lang", "source", "n_docs", F.round(F.sqrt(p_share), 9).alias("sq9")
-    )
-    z = sq.agg(
-        F.sum(F.col("sq9").cast("decimal(28,12)")).cast("double").alias("z")
-    )
-    base = sq.crossJoin(F.broadcast(z)).select(
+    base = _sqrt_domain_weights(spark, sf_dir).select(
         "lang",
         "source",
         "n_docs",

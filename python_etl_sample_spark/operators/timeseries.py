@@ -52,7 +52,13 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from python_etl_sample_spark.functions.determinism import _CENTS, _DEC38, DEC, dsum_sql
+from python_etl_sample_spark.functions.determinism import (
+    _CENTS,
+    _DEC38,
+    _VCENTS,
+    DEC,
+    dsum_sql,
+)
 from python_etl_sample_spark.registry import query
 from python_etl_sample_spark.sources import table
 
@@ -358,9 +364,6 @@ def ts_double_exponential_forecast(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-_OCENTS = "CAST(round(o_totalprice * 100) AS BIGINT)"
-
-
 # ---------------------------------------------------------------------------
 # ts_anomaly_esd
 # ---------------------------------------------------------------------------
@@ -398,7 +401,7 @@ def _esd_round_sql(prev: str, r: int) -> str:
     oracle=f"""
     WITH d0 AS (
       SELECT CAST(o_orderdate AS DATE) AS day,
-             SUM({_OCENTS}) AS cents
+             SUM({_CENTS}) AS cents
       FROM orders GROUP BY 1
     ),
     {",".join(_esd_round_sql(f"d{r - 1}", r) for r in range(1, _ESD_ROUNDS + 1))}
@@ -440,7 +443,7 @@ def ts_anomaly_esd(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (guide §2.1: remove repeated shuffles of the same frame)
     cur = (
         o.groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(F.sum(F.expr(_OCENTS)).alias("cents"))
+        .agg(F.sum(F.expr(_CENTS)).alias("cents"))
         .persist()
     )
     picks = []
@@ -482,9 +485,6 @@ def ts_anomaly_esd(spark: SparkSession, sf_dir: str) -> DataFrame:
     for p in picks[1:]:
         out = out.unionAll(p)
     return out
-
-
-_VCENTS = "CAST(round(value * 100) AS BIGINT)"
 
 
 # ---------------------------------------------------------------------------

@@ -1,7 +1,3 @@
-from python_etl_sample_spark.plans.inspect import (
-    explain_formatted,
-    plan_report,
-    scan_info,
-)
+from python_etl_sample_spark.plans.inspect import explain_formatted
 
-__all__ = ["explain_formatted", "plan_report", "scan_info"]
+__all__ = ["explain_formatted"]

@@ -1,20 +1,18 @@
-"""Physical-plan inspection utilities (SURVEY.md §4).
+"""Physical-plan inspection (SURVEY.md §4).
 
 The engine writes no custom Catalyst rules — every operator lowers to
 stock primitives (§4: "Custom Catalyst rules/strategies needed: none").
 What the engine does instead is *audit* the plans Catalyst produces:
-these helpers extract the scale-relevant plan properties (pushdown,
-pruning, join strategy, exchange count) so tests and humans can assert
-the plan is the one a 100 TB deployment needs. tests/test_plans.py is
-the consumer.
+tests/test_plans.py and test_round5b_refs read the formatted physical
+plan this module renders and assert the scale-relevant properties
+(pushdown, pruning, join strategy, exchange count) a 100 TB deployment
+needs.
 """
 
 from __future__ import annotations
 
 import contextlib
 import io
-import re
-from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 
@@ -25,57 +23,3 @@ def explain_formatted(df: DataFrame) -> str:
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
-
-
-@dataclass
-class ScanInfo:
-    read_schema: str = ""
-    pushed_filters: list[str] = field(default_factory=list)
-    partition_filters: list[str] = field(default_factory=list)
-    bucketed: bool = False
-
-
-def scan_info(df: DataFrame) -> ScanInfo:
-    """Pushdown/pruning facts from the first parquet scan in the plan."""
-    plan = explain_formatted(df)
-    info = ScanInfo()
-    for line in plan.splitlines():
-        s = line.strip()
-        if s.startswith("ReadSchema") and not info.read_schema:
-            info.read_schema = s.split(":", 1)[1].strip()
-        elif s.startswith("PushedFilters"):
-            info.pushed_filters.extend(
-                f.strip() for f in re.findall(r"\[(.*)\]", s) for f in f.split(",") if f.strip()
-            )
-        elif s.startswith("PartitionFilters") and "[]" not in s:
-            info.partition_filters.append(s)
-        elif "Bucketed: true" in s:
-            info.bucketed = True
-    return info
-
-
-@dataclass
-class PlanReport:
-    joins: list[str]
-    n_shuffle_exchanges: int
-    n_broadcast_exchanges: int
-    has_cartesian: bool
-    codegen_spans: int
-    aggregates: int
-
-
-def plan_report(df: DataFrame) -> PlanReport:
-    """The scale-relevant shape of a physical plan in one struct."""
-    plan = explain_formatted(df)
-    return PlanReport(
-        joins=re.findall(
-            r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin|"
-            r"BroadcastNestedLoopJoin|CartesianProduct)",
-            plan,
-        ),
-        n_shuffle_exchanges=len(re.findall(r"Exchange hashpartitioning", plan)),
-        n_broadcast_exchanges=len(re.findall(r"BroadcastExchange", plan)),
-        has_cartesian="CartesianProduct" in plan,
-        codegen_spans=len(set(re.findall(r"codegen id : (\d+)", plan))),
-        aggregates=len(re.findall(r"HashAggregate", plan)),
-    )

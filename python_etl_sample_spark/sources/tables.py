@@ -26,7 +26,7 @@ re-reading footers.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructType
 
@@ -64,19 +64,23 @@ def raw_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
     return schema
 
 
+def events_ts(schema: StructType, dtype: str) -> Column:
+    """``events.ts`` as ``dtype`` for an events file whose raw schema is
+    ``schema``: a bigint is the timestamp[ns] vintage read as nanos
+    (``nanosAsLong``), converted as ``ts div 1000`` microseconds; any
+    other type is the native timestamp, cast as is."""
+    if isinstance(schema["ts"].dataType, LongType):
+        return F.timestamp_micros(F.expr("ts div 1000")).cast(dtype)
+    return F.col("ts").cast(dtype)
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table as a lazy DataFrame, normalized."""
     ensure_session_configs(spark)
     schema = raw_schema(spark, sf_dir, name)
     df = spark.read.schema(schema).parquet(f"{sf_dir}/{name}.parquet")
     if name == "events":
-        if isinstance(schema["ts"].dataType, LongType):
-            # timestamp[ns] fixture read as bigint nanos (nanosAsLong)
-            df = df.withColumn(
-                "ts", F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz")
-            )
-        else:
-            df = df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
+        df = df.withColumn("ts", events_ts(schema, "timestamp_ntz"))
     return df
 
 

@@ -23,38 +23,30 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from python_etl_sample_spark.functions.determinism import _VCENTS
 from python_etl_sample_spark.registry import query
 from python_etl_sample_spark.scratch import scratch_path, stage_once
 from python_etl_sample_spark.session import ensure_session_configs
+from python_etl_sample_spark.sources import events_ts, raw_schema
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events.parquet replayed as a streaming source (ts normalized to
     a watermarkable timestamp exactly as the batch loader does)."""
-    from python_etl_sample_spark.sources import raw_schema
-
     ensure_session_configs(spark)
     schema = raw_schema(spark, sf_dir, "events")
     # the file stream source requires a directory; stage the events file
     # into scratch once (at 100 TB this would be the landing directory
     # new files arrive into)
     def _stage(p: str) -> None:
-        import os
-
         os.makedirs(p, exist_ok=True)
         shutil.copyfile(f"{sf_dir}/events.parquet", f"{p}/events.parquet")
 
     src_dir = stage_once("stream_src", sf_dir, _stage)
     stream = spark.readStream.schema(schema).parquet(src_dir)
     # watermarks require TIMESTAMP (not NTZ); with the UTC session tz the
-    # wall-clock values are identical to the batch loader's timestamp_ntz.
-    # Branch on the LOADED ts type exactly as the batch loader does
-    # (sources/tables.py): bigint = nanos fixture vintage, else native.
-    from pyspark.sql.types import LongType
-
-    if isinstance(schema["ts"].dataType, LongType):
-        return stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return stream.withColumn("ts", F.col("ts").cast("timestamp"))
+    # wall-clock values are identical to the batch loader's timestamp_ntz
+    return stream.withColumn("ts", events_ts(schema, "timestamp"))
 
 
 #: default state-store partition pin for the demos (see _run_to_memory);
@@ -557,10 +549,10 @@ def stream_demo_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stream_demo_stateful",
-    oracle="""
+    oracle=f"""
     SELECT user_id,
            COUNT(*) AS events_total,
-           round(CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS DOUBLE)
+           round(CAST(SUM({_VCENTS}) AS DOUBLE)
                  / 100.0, 6) AS value_total
     FROM events GROUP BY user_id
     """,
@@ -630,31 +622,21 @@ def stream_demo_foreachbatch_merge(spark: SparkSession, sf_dir: str) -> DataFram
     the BATCH (not history) joined against state — O(delta + state),
     never a rescan of the stream's past."""
     ensure_session_configs(spark)
-    import os
-
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    from pyspark.sql.types import LongType
+    schema = raw_schema(spark, sf_dir, "events")
 
     def _stage(p: str) -> None:
         os.makedirs(p, exist_ok=True)
-        spark.read.parquet(f"{sf_dir}/events.parquet").repartition(
+        spark.read.schema(schema).parquet(f"{sf_dir}/events.parquet").repartition(
             4
         ).write.mode("overwrite").parquet(p)
 
     src = stage_once("stream_src_fb4", sf_dir, _stage)
     stream = (
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
+        .withColumn("ts", events_ts(schema, "timestamp"))
     )
-    if isinstance(raw_schema["ts"].dataType, LongType):
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000"))
-        )
-    else:
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-
-    from python_etl_sample_spark.scratch import scratch_path
 
     state_base = scratch_path(f"fb_state_{uuid.uuid4().hex[:12]}", sf_dir)
     latest: list[str] = []

@@ -165,6 +165,54 @@ def test_no_round_named_modules():
     assert not named, f"round-named modules: {named}"
 
 
+def test_exact_arithmetic_fragments_live_in_determinism():
+    """The index-ordered vector fold (``F.aggregate`` over ``F.zip_with``)
+    and the integer-cents SQL fragment ``CAST(round(<col> * 100) AS
+    BIGINT)`` are cross-engine exact-arithmetic rules with SQL twins.
+    Each is written once, in functions/determinism.py (``_dot``, ``_d2``,
+    ``cents_sql``), so no copy can drift from its oracle twin."""
+    import ast
+
+    def call_to(node, name):
+        f = getattr(node, "func", None)
+        return isinstance(node, ast.Call) and (
+            (isinstance(f, ast.Attribute) and f.attr == name)
+            or (isinstance(f, ast.Name) and f.id == name)
+        )
+
+    cents = re.compile(r"CAST\(round\(\s*[\w.]+\s*\*\s*100\s*\)\s*AS\s+BIGINT\)", re.I)
+    home = REPO / "python_etl_sample_spark" / "functions" / "determinism.py"
+    found = []
+    for p in sorted((REPO / "python_etl_sample_spark").rglob("*.py")):
+        if p == home:
+            continue
+        src = p.read_text()
+        rel = p.relative_to(REPO)
+        found += [
+            f"{rel}:{src.count(chr(10), 0, m.start()) + 1} cents literal"
+            for m in cents.finditer(src)
+        ]
+        tree = ast.parse(src)
+        zipped = {
+            t.id
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Assign) and call_to(n.value, "zip_with")
+            for t in n.targets
+            if isinstance(t, ast.Name)
+        }
+        found += [
+            f"{rel}:{n.lineno} aggregate over zip_with"
+            for n in ast.walk(tree)
+            if call_to(n, "aggregate")
+            and n.args
+            and (
+                call_to(n.args[0], "zip_with")
+                or (isinstance(n.args[0], ast.Name) and n.args[0].id in zipped)
+            )
+        ]
+    assert not found, f"spelled outside functions/determinism.py: {found}"
+
+
 def test_no_module_binds_a_top_level_name_twice():
     """Merging modules must not rebind a name: ``_DIM`` is 128 in
     features.py but 64 for the semantic-dedup tier, and a merge that

@@ -72,13 +72,21 @@ def test_warm_load_launches_no_spark_job(spark):
 def test_ns_vintage_events_load_as_micros(spark, tmp_path):
     """The timestamp[ns] fixture vintage (read as bigint nanos under
     ``nanosAsLong``) comes out as ``timestamp_ntz`` at ``ts div 1000``
-    microseconds, on the schema-inferring first load and on the memo hit."""
+    microseconds, on the schema-inferring first load and on the memo hit;
+    the streaming side (the events stream source and the foreachBatch
+    merge demo) casts the same microseconds to ``timestamp``."""
     from datetime import datetime, timedelta
 
     import pyarrow as pa
     import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
 
     from python_etl_sample_spark.sources import tables
+    from python_etl_sample_spark.streaming.demo import (
+        _events_stream,
+        _run_to_memory,
+        stream_demo_foreachbatch_merge,
+    )
 
     nanos = [1_704_067_207_123_456_789, 1_704_067_800_000_000_999, 1_706_659_032_000_001_000]
     pq.write_table(
@@ -102,3 +110,15 @@ def test_ns_vintage_events_load_as_micros(spark, tmp_path):
         assert key in tables._RAW_SCHEMAS
         assert dict(ev.dtypes)["ts"] == "timestamp_ntz"
         assert [r["ts"] for r in ev.orderBy("event_id").collect()] == expected
+
+    micros = [n // 1000 for n in nanos]
+    stream = _events_stream(spark, str(tmp_path))
+    assert dict(stream.dtypes)["ts"] == "timestamp"
+    drained = _run_to_memory(
+        stream.select("event_id", F.unix_micros("ts").alias("us")), "append"
+    )
+    assert [r["us"] for r in drained.orderBy("event_id").collect()] == micros
+    merged = stream_demo_foreachbatch_merge(spark, str(tmp_path))
+    assert dict(merged.dtypes)["last_ts"] == "timestamp"
+    last = merged.select("user_id", F.unix_micros("last_ts").alias("us"))
+    assert sorted(map(tuple, last.collect())) == [(7, micros[2]), (8, micros[1])]

@@ -9,9 +9,9 @@ a regression tripwire: a refactor that silently adds a shuffle or drops
 a broadcast shows up as a diff in PLANS.md.
 
 Queries whose *construction* performs actions (streaming memory sinks,
-the iterative CC loop, scratch-staging writes) are listed but not
-re-planned here; their plan discipline is pinned by dedicated tests
-instead (tests/test_plans.py, tests/test_round4_ops.py).
+scratch-staging writes) are listed but not re-planned here; their plan
+discipline is pinned by dedicated tests instead (tests/test_plans.py,
+tests/test_round4_ops.py).
 
 Usage: python tools/plan_audit.py [--write PLANS.md]
 """
@@ -27,8 +27,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("PLAN_SF_DIR", "/root/testdata/sf0.01")
 
-# construction triggers execution (streams, iterative loops, staging
-# writes) — plan text would not be the interesting part anyway
+# construction triggers execution (streams, staging writes) — plan text
+# would not be the interesting part anyway
 EXECUTES_ON_BUILD = {
     "stream_demo_tumbling",
     "stream_demo_session",
@@ -37,7 +37,6 @@ EXECUTES_ON_BUILD = {
     "stream_demo_sliding",
     "stream_demo_watermark_late",
     "stream_demo_dedup",
-    "graph_connected_components",
     "source_csv",
     "source_json",
     "source_orc",
