@@ -45,6 +45,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from python_etl_sample_spark.session import scoped_confs
+
 #: rounds between eager label checkpoints (and convergence polls).
 #: Measured ~25% off wall time vs every round (r4); LONGER lineages
 #: measured slower, not faster (round 5) — the re-planned multi-round
@@ -110,19 +112,15 @@ def pointer_jump_components(edges: DataFrame, n_bound: int) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     n_edges = edges.count()
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # ~1M pair rows per task, floor 4 so skew has room, capped at the
     # session setting (a 100 TB pair list keeps the full width)
-    loop_parts = max(4, min(int(old_parts), n_edges // 1_000_000 + 4))
+    loop_parts = max(4, min(session_parts, n_edges // 1_000_000 + 4))
     # run to the convergence poll's fixpoint, capped by the sound
     # hash-min bound (diameter+1 ≤ n_bound)
     rounds = int(n_bound) + 1
-    spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    try:
-        labels = _pointer_jump_rounds(edges, labels, rounds)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return labels
+    with scoped_confs(spark, {"spark.sql.shuffle.partitions": str(loop_parts)}):
+        return _pointer_jump_rounds(edges, labels, rounds)
 
 
 def _pointer_jump_rounds(edges: DataFrame, labels: DataFrame, rounds: int) -> DataFrame:

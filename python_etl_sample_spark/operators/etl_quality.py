@@ -25,7 +25,7 @@ from python_etl_sample_spark.functions.determinism import (
     dsum_sql,
 )
 from python_etl_sample_spark.registry import query
-from python_etl_sample_spark.scratch import stage_once
+from python_etl_sample_spark.scratch import stage_once, written_schema
 from python_etl_sample_spark.sources import table
 
 
@@ -822,14 +822,13 @@ def etl_incremental_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # base = everything EXCEPT the delta day (exhaustive split whatever
     # date range a regenerated fixture carries)
+    history = rollup(ev.filter(day != F.lit(_DELTA_DAY)))
     base_path = stage_once(
         "ivm/events_rollup_base",
         sf_dir,
-        lambda p: rollup(ev.filter(day != F.lit(_DELTA_DAY)))
-        .write.mode("overwrite")
-        .parquet(p),
+        lambda p: history.write.mode("overwrite").parquet(p),
     )
-    base = spark.read.parquet(base_path)
+    base = spark.read.schema(written_schema(history)).parquet(base_path)
     delta = rollup(ev.filter(day == F.lit(_DELTA_DAY)))
     return (
         base.unionAll(delta)

@@ -129,6 +129,14 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _endpoints(edges: DataFrame) -> DataFrame:
+    """Both endpoints of every undirected (u, v) edge as one ``node``
+    column: a node appears once per incident edge."""
+    return edges.select(F.col("u").alias("node")).unionAll(
+        edges.select(F.col("v").alias("node"))
+    )
+
+
 def _directed_edges(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Both directions (src, dst) of the undirected (u, v) edge list,
     and each node's degree (node, deg) counted over them."""
@@ -206,12 +214,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     (b < c) so the closing join is against the canonical u<v edge list
     as a plain two-column equi-join."""
     edges = _copurchase_edges(spark, sf_dir)
-    deg = (
-        edges.select(F.col("u").alias("node"))
-        .unionAll(edges.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
+    deg = _endpoints(edges).groupBy("node").agg(F.count(F.lit(1)).alias("deg"))
     e = (
         edges.join(deg.withColumnRenamed("node", "u"), "u")
         .withColumnRenamed("deg", "du")
@@ -526,23 +529,15 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     same loop with a count-stability check (the CC kernel's escape
     hatch), noted rather than hashed."""
     edges = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=False)
-    nodes = (
-        edges.select(F.col("u").alias("node"))
-        .unionAll(edges.select(F.col("v").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    nodes = _endpoints(edges).distinct().localCheckpoint(eager=False)
     counts = [("0", nodes)]
     cur = nodes
     for rnd in range(1, _KCORE_ROUNDS + 1):
         kept_edges = edges.join(
             cur.withColumnRenamed("node", "u"), "u", "leftsemi"
         ).join(cur.withColumnRenamed("node", "v"), "v", "leftsemi")
-        deg = (
-            kept_edges.select(F.col("u").alias("node"))
-            .unionAll(kept_edges.select(F.col("v").alias("node")))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("deg"))
+        deg = _endpoints(kept_edges).groupBy("node").agg(
+            F.count(F.lit(1)).alias("deg")
         )
         cur = (
             deg.filter(F.col("deg") >= _KCORE_K)
@@ -1063,12 +1058,7 @@ def graph_community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     edges = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=False)
     lab = _lpa_fit(spark, sf_dir)
-    deg = (
-        edges.select(F.col("u").alias("node"))
-        .unionAll(edges.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
+    deg = _endpoints(edges).groupBy("node").agg(F.count(F.lit(1)).alias("deg"))
     m = edges.agg(F.count(F.lit(1)).alias("m"))
     la = lab.select(F.col("node").alias("u"), F.col("label").alias("lu"))
     lb = lab.select(F.col("node").alias("v"), F.col("label").alias("lv"))

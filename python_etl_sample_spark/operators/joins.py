@@ -33,6 +33,7 @@ from python_etl_sample_spark.functions.determinism import (
 )
 from python_etl_sample_spark.registry import query
 from python_etl_sample_spark.scratch import stage_once
+from python_etl_sample_spark.session import scoped_confs
 from python_etl_sample_spark.sources import table
 
 
@@ -624,19 +625,10 @@ def join_bloom_runtime(spark: SparkSession, sf_dir: str) -> DataFrame:
     eager execution, so the toggles never leak into other queries'
     plans; tests/test_plans.py pins `bloom_filter_agg` + `might_contain`
     in the optimized plan."""
-    old = {k: spark.conf.get(k, None) for k in _BLOOM_CONFS}
-    for k, v in _BLOOM_CONFS.items():
-        spark.conf.set(k, v)
-    try:
+    with scoped_confs(spark, _BLOOM_CONFS):
         # eager: the plan must optimize (and so inject the filter) while
         # the confs are in force
         return bloom_join_frame(spark, sf_dir).localCheckpoint(eager=True)
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 @query(

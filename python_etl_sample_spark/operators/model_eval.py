@@ -85,7 +85,14 @@ from python_etl_sample_spark.registry import query
 from python_etl_sample_spark.sources import table
 
 
+#: the two deterministic binary labels over orders: priority urgency
+#: (the positives of the scoring queries, a kappa rater and the McNemar
+#: gold label) and price urgency (the other kappa rater and McNemar
+#: classifier A). Cutoff 150000.0 splits the fixture price distribution
+#: near its upper third, so the two agree well above chance without
+#: being degenerate.
 _YPOS = "CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END"
+_YPRICE = "CASE WHEN o_totalprice >= 150000.0 THEN 1 ELSE 0 END"
 
 
 def _score_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1137,19 +1144,11 @@ def ml_auc_delong_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ml_cohens_kappa
 # --------------------------------------------------------------------------
 
-#: the two deterministic binary "raters" over orders: priority-based
-#: and price-based urgency labels. Cutoff 150000.0 splits the fixture
-#: price distribution near its upper third, so the raters agree well
-#: above chance without being degenerate.
-_KAPPA_A = "CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END"
-_KAPPA_B = "CASE WHEN o_totalprice >= 150000.0 THEN 1 ELSE 0 END"
-
-
 @query(
     "ml_cohens_kappa",
     oracle=f"""
     WITH lab AS (
-      SELECT {_KAPPA_A} AS a, {_KAPPA_B} AS b FROM orders
+      SELECT {_YPOS} AS a, {_YPRICE} AS b FROM orders
     ),
     cm AS (
       SELECT CAST(COUNT(*) AS BIGINT) AS n,
@@ -1186,7 +1185,7 @@ def ml_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounded 6 dp. Scale: a single scan + 1-row aggregate — nothing
     keyed, nothing joined."""
     o = table(spark, sf_dir, "orders")
-    a, b = F.expr(_KAPPA_A), F.expr(_KAPPA_B)
+    a, b = F.expr(_YPOS), F.expr(_YPRICE)
     cm = o.select(a.alias("a"), b.alias("b")).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.col("a") * F.col("b")).alias("n11"),
@@ -1218,10 +1217,9 @@ def ml_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 #: gold label and the two classifiers under comparison, all on orders:
-#: gold = priority urgency; A predicts from price, B from order width
-#: (number of lineitems — the one join in the query).
-_MC_GOLD = "CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END"
-_MC_A = "CASE WHEN o_totalprice >= 150000.0 THEN 1 ELSE 0 END"
+#: gold = priority urgency (``_YPOS``); A predicts from price
+#: (``_YPRICE``), B from order width (number of lineitems — the one
+#: join in the query).
 _MC_NLINE = 4
 
 
@@ -1233,7 +1231,7 @@ _MC_NLINE = 4
       FROM lineitem GROUP BY l_orderkey
     ),
     lab AS (
-      SELECT {_MC_GOLD} AS g, {_MC_A} AS a,
+      SELECT {_YPOS} AS g, {_YPRICE} AS a,
              CASE WHEN w.n_lines >= {_MC_NLINE} THEN 1 ELSE 0 END AS b
       FROM orders o JOIN width w ON w.ok = o.o_orderkey
     ),
@@ -1275,8 +1273,8 @@ def ml_mcnemar_paired(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_lines")
     )
     lab = o.join(width, o.o_orderkey == width.ok).select(
-        F.expr(_MC_GOLD).alias("g"),
-        F.expr(_MC_A).alias("a"),
+        F.expr(_YPOS).alias("g"),
+        F.expr(_YPRICE).alias("a"),
         F.when(F.col("n_lines") >= _MC_NLINE, 1).otherwise(0).alias("b"),
     )
     cm = lab.agg(

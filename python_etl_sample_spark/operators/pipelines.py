@@ -30,7 +30,7 @@ from python_etl_sample_spark.functions.determinism import dsum, dsum_sql
 from python_etl_sample_spark.functions.xengine import _X_CTES
 from python_etl_sample_spark.operators.dedup import _xengine_truth
 from python_etl_sample_spark.registry import query
-from python_etl_sample_spark.scratch import stage_once
+from python_etl_sample_spark.scratch import stage_once, written_schema
 from python_etl_sample_spark.sources import table
 
 
@@ -91,7 +91,8 @@ def pipeline_daily_etl(spark: SparkSession, sf_dir: str) -> DataFrame:
         .partitionBy("o_orderstatus")
         .parquet(p),
     )
-    loaded = spark.read.parquet(path).withColumn(
+    schema = written_schema(transformed, "o_orderstatus")
+    loaded = spark.read.schema(schema).parquet(path).withColumn(
         "o_orderstatus", F.col("o_orderstatus").cast("string")
     )
     return loaded.groupBy("o_orderstatus", "c_mktsegment").agg(

@@ -213,9 +213,9 @@ def scan_metadata_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rollup is one partial-aggregated shuffle keyed by file, i.e.
     by input split. At 100 TB this is the audit query that verifies a
     backfill touched every file exactly once."""
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
     return (
-        o.select(
+        table(spark, sf_dir, "orders")
+        .select(
             F.col("_metadata.file_name").alias("file_name"),
             F.col("_metadata.row_index").alias("row_index"),
             "o_orderkey",

@@ -24,6 +24,9 @@ import os
 import shutil
 from collections.abc import Callable
 
+from pyspark.sql import DataFrame
+from pyspark.sql.types import DataType, StructField, StructType
+
 #: ``.scratch/`` beside the package, so each checkout stages into its own
 #: tree (perfbench repoints it at a private directory)
 _ROOT = os.path.join(
@@ -48,6 +51,24 @@ def stage_once(name: str, sf_dir: str, write_fn: Callable[[str], None]) -> str:
         write_fn(path)
         _staged.add(path)
     return path
+
+
+def _nullable(dtype: DataType) -> DataType:
+    if isinstance(dtype, StructType):
+        return StructType([StructField(f.name, _nullable(f.dataType)) for f in dtype])
+    return dtype
+
+
+def written_schema(df: DataFrame, *partition_by: str) -> StructType:
+    """The schema ``spark.read.parquet`` infers for ``df`` written as
+    parquet partitioned by ``partition_by``, derived by analysis, so a
+    read that passes it runs no footer-inference job: every field
+    nullable (struct fields too), partition columns last. A partition
+    column keeps its type in ``df``, which is what Spark infers from the
+    directory names of a string column only while no value parses as a
+    number or a date."""
+    fields = sorted(df.schema, key=lambda f: f.name in partition_by)
+    return _nullable(StructType(fields))
 
 
 def _sweep_dead_pids() -> None:

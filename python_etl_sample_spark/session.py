@@ -17,6 +17,8 @@ from __future__ import annotations
 
 import os
 import re
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -147,3 +149,21 @@ def ensure_session_configs(spark: SparkSession) -> None:
 
 
 _MARKER_CONF = "spark.python_etl_sample_spark.sessionConfigured"
+
+
+@contextmanager
+def scoped_confs(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
+    """Set ``confs`` on ``spark`` for the ``with`` block; on exit, also
+    by exception, restore each key's prior value, or unset a key that
+    was unset before."""
+    old = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

@@ -22,11 +22,12 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from python_etl_sample_spark.functions.determinism import _VCENTS
 from python_etl_sample_spark.registry import query
-from python_etl_sample_spark.scratch import scratch_path, stage_once
-from python_etl_sample_spark.session import ensure_session_configs
+from python_etl_sample_spark.scratch import scratch_path, stage_once, written_schema
+from python_etl_sample_spark.session import ensure_session_configs, scoped_confs
 from python_etl_sample_spark.sources import events_ts, raw_schema
 
 
@@ -49,55 +50,23 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stream.withColumn("ts", events_ts(schema, "timestamp"))
 
 
-#: default state-store partition pin for the demos (see _run_to_memory);
-#: a module constant so tools/probes/probe_stream_overhead_r14.py can
-#: sweep it in one session without editing source
-_DEMO_SHUFFLE_PARTITIONS = 8
-
-#: r14 PER-DEMO pins (optimization round 1). The r14-build sweep found
-#: no uniform winner — applyInPandasWithState parallelizes its per-key
-#: Python work across state partitions (p=1 measured 3.6x SLOWER for
-#: the stateful demo), while the pure window/dedup/join demos carry a
-#: handful of state rows and every extra partition is per-micro-batch
-#: task overhead. The full-family sweep (/tmp probe, table recorded in
-#: OPTIMIZATION_r14.md) picked per-demo knees; partition count is
-#: PHYSICAL config only — every drained snapshot is partition-invariant
-#: by the demos' determinism design, and the keep-vs-revert decision
-#: was re-measured with an interleaved old-vs-new A/B. At 100 TB these
-#: pins scale with state volume (≈ cluster cores for data-sized state);
-#: locally the state is tiny so the knee sits at 1-8.
-_DEMO_PARTS: dict[str, int] = {
-    "tumbling": 1,
-    "sliding": 1,
-    "session": 4,
-    "watermark_late": 1,
-    "dedup": 1,
-    "static_join": 1,
-    "stream_join": 1,
-    "stateful": 8,
-    "foreachbatch_merge": 1,
-    "rate_source": 1,
-}
-
-
-def _demo_parts(key: str) -> int:
-    return _DEMO_PARTS.get(key, _DEMO_SHUFFLE_PARTITIONS)
-
-
-def _run_to_memory(result: DataFrame, mode: str, parts: int | None = None) -> DataFrame:
-    """Drain an AvailableNow stream into a memory sink; return the table."""
+# Each demo pins its state-store partition count (``parts``) as a
+# literal, chosen per demo by an interleaved sweep of all ten over
+# 8/4/2/1 (OPTIMIZATION_r14.md batch 7). applyInPandasWithState
+# parallelizes its per-key Python work across state partitions (p=1
+# measured 3.6x slower for the stateful demo, so it keeps 8; the
+# session demo's knee is 4), while the window/dedup/join demos carry a
+# handful of state rows and every extra partition is per-micro-batch
+# task overhead (p=1). The count is physical only: every drained
+# snapshot is partition-invariant by the demos' determinism design. At
+# 100 TB the pins scale with state volume (about the cluster's cores).
+def _run_to_memory(result: DataFrame, mode: str, parts: int) -> DataFrame:
+    """Drain an AvailableNow stream into a memory sink; return the table.
+    The state-store partition count is fixed at query start from the
+    session conf, so ``parts`` is pinned for the start only."""
     name = f"demo_{uuid.uuid4().hex[:12]}"
     spark = result.sparkSession
-    # demo state is a handful of (window/key) rows, so 32 state-store
-    # partitions per micro-batch is pure task overhead (same measured
-    # ~40% saving as the rate demo). The count is fixed at query start
-    # from the session conf; pin it low for the start and restore.
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(parts if parts is not None else _DEMO_SHUFFLE_PARTITIONS),
-    )
-    try:
+    with scoped_confs(spark, {"spark.sql.shuffle.partitions": str(parts)}):
         q = (
             result.writeStream.format("memory")
             .queryName(name)
@@ -105,20 +74,20 @@ def _run_to_memory(result: DataFrame, mode: str, parts: int | None = None) -> Da
             .trigger(availableNow=True)
             .start()
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
     q.awaitTermination()
     return spark.table(name)
 
 
-def _tumbling_agg(ev: DataFrame) -> DataFrame:
-    """The watermarked 1-hour tumbling count — ONE definition shared by
-    the file-replay demo, the rate-source demo, and (shape-wise) the
-    graded batch twin, so "the query is source-agnostic" is a fact
-    about the code, not a claim."""
+def _window_counts(ev: DataFrame, *duration: str) -> DataFrame:
+    """Watermarked event counts per (``F.window("ts", *duration)``,
+    event_type) as (wstart, wend, event_type, n_events) — ONE
+    definition shared by the tumbling, sliding, late-data and
+    rate-source demos (and, shape-wise, the graded batch twins), so
+    "the query is source-agnostic" is a fact about the code, not a
+    claim."""
     return (
         ev.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+        .groupBy(F.window("ts", *duration).alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             F.col("w.start").alias("wstart"),
@@ -127,104 +96,6 @@ def _tumbling_agg(ev: DataFrame) -> DataFrame:
             "n_events",
         )
     )
-
-
-def demo_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """#52 under readStream: watermarked 1-hour tumbling counts."""
-    return _run_to_memory(
-        _tumbling_agg(_events_stream(spark, sf_dir)),
-        "complete",
-        parts=_demo_parts("tumbling"),
-    )
-
-
-def demo_session(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """#54 under readStream: native session_window with a 30-min gap."""
-    ev = _events_stream(spark, sf_dir)
-    agg = (
-        ev.withWatermark("ts", "10 minutes")
-        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "user_id",
-            "n_events",
-        )
-    )
-    return _run_to_memory(agg, "complete", parts=_demo_parts("session"))
-
-
-def demo_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """#56 under readStream: dropDuplicatesWithinWatermark on the key.
-
-    SINGLE-BATCH PRECONDITION (r13 ADVICE): the emitted key SET is a
-    pure function of the input only because ``_events_stream`` replays
-    ONE staged file with no maxFilesPerTrigger, i.e. one micro-batch —
-    a multi-batch replay could re-emit a key whose state the 10-minute
-    watermark already evicted between batches. Pinned below by
-    asserting the staged source really is a single file, so a future
-    trigger/staging change fails loudly instead of going
-    nondeterministic."""
-    ev = _events_stream(spark, sf_dir)
-    src_dir = scratch_path("stream_src", sf_dir)
-    staged = [f for f in os.listdir(src_dir) if f.endswith(".parquet")]
-    assert len(staged) == 1, (
-        f"dedup demo requires a single-file (single micro-batch) "
-        f"replay; staged: {staged}"
-    )
-    dedup = ev.withWatermark("ts", "10 minutes").dropDuplicatesWithinWatermark(
-        ["user_id", "event_type"]
-    )
-    return _run_to_memory(
-        dedup.select("user_id", "event_type"),
-        "append",
-        parts=_demo_parts("dedup"),
-    )
-
-
-def demo_stateful_running(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """#57 under readStream with a CUSTOM stateful operator:
-    ``applyInPandasWithState`` keeps (n_events, value_sum) per user in
-    the state store and emits each user's totals when the replay drains.
-
-    This is the arbitrary-state API a production pipeline uses when the
-    built-in aggregations can't express the per-key logic (counters
-    here, but the same shape carries sessionizers, CDC mergers, model
-    feature accumulators). State is bounded by #users; at 100 TB the
-    watermark evicts idle keys. Equality with the batch answer
-    (``stream_stateful_counts`` collapsed to final per-user totals) is
-    asserted in tests."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    ev = _events_stream(spark, sf_dir)
-
-    def update_user(key, pdfs, state: GroupState):
-        # accumulate EXACT integer cents (value is a 2-dp money-like
-        # double): int state makes the emitted total independent of
-        # pandas' float summation order, so the demo is hash-checkable
-        n, cents = state.get if state.exists else (0, 0)
-        for pdf in pdfs:
-            n += len(pdf)
-            cents += int((pdf["value"] * 100).round().astype("int64").sum())
-        state.update((n, cents))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "events_total": [n],
-                "value_total": [round(cents / 100.0, 6)],
-            }
-        )
-
-    out = ev.groupBy("user_id").applyInPandasWithState(
-        update_user,
-        outputStructType="user_id bigint, events_total bigint, value_total double",
-        stateStructType="n bigint, cents bigint",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    return _run_to_memory(out, "update", parts=_demo_parts("stateful"))
 
 
 @query(
@@ -243,7 +114,9 @@ def stream_demo_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     mode retains every window; the watermark only gates eviction in
     update/append), so the DuckDB oracle is the plain batch rollup. A
     lost micro-batch or a watermark mis-eviction breaks the hash."""
-    return demo_tumbling(spark, sf_dir)
+    return _run_to_memory(
+        _window_counts(_events_stream(spark, sf_dir), "1 hour"), "complete", parts=1
+    )
 
 
 @query(
@@ -285,7 +158,7 @@ def stream_demo_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         dsum("value").alias("value_total"),
     )
-    return _run_to_memory(agg, "complete", parts=_demo_parts("static_join"))
+    return _run_to_memory(agg, "complete", parts=1)
 
 
 @query(
@@ -328,7 +201,19 @@ def stream_demo_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     type whose extent is DATA-dependent; the state store merges windows
     as late rows arrive, exactly what the islands pass does in one
     shot."""
-    return demo_session(spark, sf_dir)
+    agg = (
+        _events_stream(spark, sf_dir)
+        .withWatermark("ts", "10 minutes")
+        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
+        .agg(F.count(F.lit(1)).alias("n_events"))
+        .select(
+            F.col("w.start").alias("session_start"),
+            F.col("w.end").alias("session_end"),
+            "user_id",
+            "n_events",
+        )
+    )
+    return _run_to_memory(agg, "complete", parts=4)
 
 
 #: rate-source demo shape: 3 deterministic micro-batches × 3500 rows
@@ -376,74 +261,6 @@ def rate_source_batch_twin(spark: SparkSession) -> DataFrame:
     )
 
 
-def demo_rate_source(spark: SparkSession) -> DataFrame:
-    """The tumbling demo against a ``rate-micro-batch`` source — no
-    files at all. Proves the windowed aggregation is source-agnostic:
-    ``_tumbling_agg`` is the same function object the file-replay demo
-    runs. The rate-micro-batch source emits exactly ``rowsPerBatch``
-    rows per trigger with a deterministic ``value`` sequence, so the
-    complete-mode aggregate captured at batch ``_RATE_BATCHES - 1`` is
-    exactly the aggregate of the first ``_RATE_BATCHES × rowsPerBatch``
-    synthesized events — reproducible run-to-run (the stability test
-    reruns it) and equal to the batch twin (the parity test).
-
-    The foreachBatch sink snapshots that batch and signals the driver,
-    which stops the (otherwise unbounded) stream — the bounded-capture
-    idiom for demoing an unbounded source. At 100 TB swap the source
-    line for Kafka; nothing downstream changes."""
-    ensure_session_configs(spark)
-    import threading
-
-    stream = (
-        spark.readStream.format("rate-micro-batch")
-        .option("rowsPerBatch", _RATE_ROWS_PER_BATCH)
-        .option("numPartitions", 4)
-        .option("startTimestamp", _RATE_EPOCH_MS)
-        .option("advanceMillisPerBatch", 60000)
-        .load()
-    )
-    agg = _tumbling_agg(synth_events(stream))
-
-    done = threading.Event()
-    snap: dict[str, list] = {}
-
-    def capture(bdf: DataFrame, batch_id: int) -> None:
-        if batch_id >= _RATE_BATCHES - 1 and not done.is_set():
-            snap["rows"] = bdf.collect()
-            done.set()
-        else:
-            # Spark 4 validates that foreachBatch processed EVERY
-            # partition (state-store commit tracking) — a no-op batch
-            # fails the query, so drain uncaptured batches with a count
-            bdf.count()
-
-    # the stateful agg keys on (window, event_type) — a handful of
-    # state rows — so 32 state-store partitions per micro-batch is pure
-    # task overhead (measured ~40% of the demo's wall time). The state
-    # partition count is fixed at query start from the session conf;
-    # pin it low for this query and restore right after start.
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(_demo_parts("rate_source")))
-    try:
-        q = (
-            agg.writeStream.foreachBatch(capture)
-            .outputMode("complete")
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    try:
-        if not done.wait(timeout=180):
-            exc = q.exception()
-            raise RuntimeError(f"rate-source demo never reached batch "
-                               f"{_RATE_BATCHES - 1}: {exc}")
-    finally:
-        q.stop()
-        q.awaitTermination()
-    return spark.createDataFrame(snap["rows"], schema=agg.schema)
-
-
 @query(
     "stream_demo_rate_source",
     oracle=f"""
@@ -476,9 +293,59 @@ def stream_demo_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     or watermark mis-eviction under complete mode breaks the hash.
     (Complete mode retains all windows — the watermark only bounds
     state eviction in update/append modes.) ``sf_dir`` is unused — the
-    source is synthesized, which is the point."""
+    source is synthesized, which is the point.
+
+    No files at all: the windowed aggregation is ``_window_counts``, the
+    same function object the file-replay demo runs. The foreachBatch
+    sink snapshots the final captured batch and signals the driver,
+    which stops the (otherwise unbounded) stream — the bounded-capture
+    idiom for demoing an unbounded source. The stability test reruns it
+    and the parity test compares it with ``rate_source_batch_twin``. At
+    100 TB swap the source line for Kafka; nothing downstream
+    changes."""
     del sf_dir
-    return demo_rate_source(spark)
+    ensure_session_configs(spark)
+    import threading
+
+    stream = (
+        spark.readStream.format("rate-micro-batch")
+        .option("rowsPerBatch", _RATE_ROWS_PER_BATCH)
+        .option("numPartitions", 4)
+        .option("startTimestamp", _RATE_EPOCH_MS)
+        .option("advanceMillisPerBatch", 60000)
+        .load()
+    )
+    agg = _window_counts(synth_events(stream), "1 hour")
+
+    done = threading.Event()
+    snap: dict[str, list] = {}
+
+    def capture(bdf: DataFrame, batch_id: int) -> None:
+        if batch_id >= _RATE_BATCHES - 1 and not done.is_set():
+            snap["rows"] = bdf.collect()
+            done.set()
+        else:
+            # Spark 4 validates that foreachBatch processed EVERY
+            # partition (state-store commit tracking) — a no-op batch
+            # fails the query, so drain uncaptured batches with a count
+            bdf.count()
+
+    with scoped_confs(spark, {"spark.sql.shuffle.partitions": "1"}):
+        q = (
+            agg.writeStream.foreachBatch(capture)
+            .outputMode("complete")
+            .trigger(processingTime="0 seconds")
+            .start()
+        )
+    try:
+        if not done.wait(timeout=180):
+            exc = q.exception()
+            raise RuntimeError(f"rate-source demo never reached batch "
+                               f"{_RATE_BATCHES - 1}: {exc}")
+    finally:
+        q.stop()
+        q.awaitTermination()
+    return spark.createDataFrame(snap["rows"], schema=agg.schema)
 
 
 @query(
@@ -544,7 +411,7 @@ def stream_demo_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_user").alias("user_id"),
         (F.unix_micros("p_ts") - F.unix_micros("c_ts")).alias("gap_micros"),
     )
-    return _run_to_memory(joined, "append", parts=_demo_parts("stream_join"))
+    return _run_to_memory(joined, "append", parts=1)
 
 
 @query(
@@ -566,16 +433,43 @@ def stream_demo_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded replay — is a pure function of the input with zero float
     association sensitivity, and the DuckDB oracle is the plain
     per-user rollup in the same cents arithmetic. A state-loss,
-    double-count, or emit-per-wrong-key bug breaks the hash."""
-    return demo_stateful_running(spark, sf_dir)
+    double-count, or emit-per-wrong-key bug breaks the hash.
 
+    ``applyInPandasWithState`` is the arbitrary-state API a production
+    pipeline uses when the built-in aggregations can't express the
+    per-key logic (counters here, but the same shape carries
+    sessionizers, CDC mergers, model feature accumulators). State is
+    bounded by #users; at 100 TB the watermark evicts idle keys.
+    Equality with the batch answer (``stream_stateful_counts``
+    collapsed to final per-user totals) is asserted in tests."""
+    import pandas as pd
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-__all__ = [
-    "demo_tumbling",
-    "demo_session",
-    "demo_dedup_watermark",
-    "demo_stateful_running",
-]
+    def update_user(key, pdfs, state: GroupState):
+        # accumulate EXACT integer cents (value is a 2-dp money-like
+        # double): int state makes the emitted total independent of
+        # pandas' float summation order, so the demo is hash-checkable
+        n, cents = state.get if state.exists else (0, 0)
+        for pdf in pdfs:
+            n += len(pdf)
+            cents += int((pdf["value"] * 100).round().astype("int64").sum())
+        state.update((n, cents))
+        yield pd.DataFrame(
+            {
+                "user_id": [key[0]],
+                "events_total": [n],
+                "value_total": [round(cents / 100.0, 6)],
+            }
+        )
+
+    out = _events_stream(spark, sf_dir).groupBy("user_id").applyInPandasWithState(
+        update_user,
+        outputStructType="user_id bigint, events_total bigint, value_total double",
+        stateStructType="n bigint, cents bigint",
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+    return _run_to_memory(out, "update", parts=8)
 
 
 @query(
@@ -641,13 +535,18 @@ def stream_demo_foreachbatch_merge(spark: SparkSession, sf_dir: str) -> DataFram
     state_base = scratch_path(f"fb_state_{uuid.uuid4().hex[:12]}", sf_dir)
     latest: list[str] = []
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        partial = batch_df.groupBy("user_id").agg(
+    def fold(df: DataFrame) -> DataFrame:
+        return df.groupBy("user_id").agg(
             F.count(F.lit(1)).alias("n_events"),
             F.max(F.struct("ts", "event_id", "event_type")).alias("m"),
         )
+
+    state_schema = written_schema(fold(stream))
+
+    def merge(batch_df: DataFrame, batch_id: int) -> None:
+        partial = fold(batch_df)
         if latest:
-            prev = spark.read.parquet(latest[-1])
+            prev = spark.read.schema(state_schema).parquet(latest[-1])
             partial = prev.unionByName(partial).groupBy("user_id").agg(
                 F.sum("n_events").alias("n_events"),
                 F.max("m").alias("m"),
@@ -656,22 +555,18 @@ def stream_demo_foreachbatch_merge(spark: SparkSession, sf_dir: str) -> DataFram
         partial.write.mode("overwrite").parquet(path)
         latest.append(path)
 
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(_demo_parts("foreachbatch_merge")))
-    try:
+    # micro-batches plan asynchronously after start(); keep the pinned
+    # partition count until every batch has planned
+    with scoped_confs(spark, {"spark.sql.shuffle.partitions": "1"}):
         q = (
             stream.writeStream.foreachBatch(merge)
             .option("checkpointLocation", f"{state_base}/_ckpt")
             .trigger(availableNow=True)
             .start()
         )
-        # micro-batches plan asynchronously after start(); keep the
-        # pinned partition count until every batch has planned
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
     assert latest, "stream produced no batches"
-    return spark.read.parquet(latest[-1]).select(
+    return spark.read.schema(state_schema).parquet(latest[-1]).select(
         "user_id",
         F.col("n_events").cast("bigint").alias("n_events"),
         F.col("m.ts").alias("last_ts"),
@@ -702,21 +597,8 @@ def stream_demo_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     event updates slide/step = 4 window states, so at 100 TB the same
     query holds 4× the tumbling demo's state rows and the watermark is
     what bounds them in update/append deployments."""
-    ev = _events_stream(spark, sf_dir)
-    agg = (
-        ev.withWatermark("ts", "10 minutes")
-        .groupBy(
-            F.window("ts", "1 hour", "15 minutes").alias("w"), "event_type"
-        )
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col("w.start").alias("wstart"),
-            F.col("w.end").alias("wend"),
-            "event_type",
-            "n_events",
-        )
-    )
-    return _run_to_memory(agg, "complete", parts=_demo_parts("sliding"))
+    agg = _window_counts(_events_stream(spark, sf_dir), "1 hour", "15 minutes")
+    return _run_to_memory(agg, "complete", parts=1)
 
 
 #: the "late" slice of the watermark demo: every event on this day is
@@ -725,7 +607,7 @@ def stream_demo_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LATE_DAY = "2024-01-05"
 
 
-def _late_replay_src(spark: SparkSession, sf_dir: str) -> str:
+def _late_replay_src(spark: SparkSession, sf_dir: str) -> tuple[str, StructType]:
     """Stage events as THREE parquet files with pinned modification
     times: file 0 = every event except _LATE_DAY's (the on-time
     stream), file 1 = an EMPTY heartbeat file, file 2 = _LATE_DAY's
@@ -739,17 +621,17 @@ def _late_replay_src(spark: SparkSession, sf_dir: str) -> str:
     = 0`; one batch later it is dropped), so the empty batch is what
     lets file 0's watermark become filter-active before the late rows
     arrive — exactly the role a quiet heartbeat micro-batch plays in a
-    production stream."""
+    production stream. Returns the staged directory and its schema."""
     import glob as _glob
-    import os
 
     from python_etl_sample_spark.sources import table as load_table
 
+    ev = load_table(spark, sf_dir, "events").withColumn(
+        "ts", F.col("ts").cast("timestamp")
+    )
+
     def _stage(p: str) -> None:
         os.makedirs(p, exist_ok=True)
-        ev = load_table(spark, sf_dir, "events").withColumn(
-            "ts", F.col("ts").cast("timestamp")
-        )
         slices = (
             ("ontime", ev.filter(F.to_date("ts") != F.lit(_LATE_DAY))),
             ("heartbeat", ev.filter(F.lit(False))),
@@ -764,7 +646,7 @@ def _late_replay_src(spark: SparkSession, sf_dir: str) -> str:
             shutil.rmtree(tmp)
             os.utime(dst, (1_700_000_000 + i * 100,) * 2)
 
-    return stage_once("stream_src_late3", sf_dir, _stage)
+    return stage_once("stream_src_late3", sf_dir, _stage), written_schema(ev)
 
 
 @query(
@@ -807,25 +689,13 @@ def stream_demo_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     event-time pipeline: the 10-minute delay bounds BOTH the state the
     store retains and the lateness the results tolerate."""
     ensure_session_configs(spark)
-    src = _late_replay_src(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
+    src, schema = _late_replay_src(spark, sf_dir)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    agg = (
-        stream.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col("w.start").alias("wstart"),
-            F.col("w.end").alias("wend"),
-            "event_type",
-            "n_events",
-        )
-    )
-    return _run_to_memory(agg, "append", parts=_demo_parts("watermark_late"))
+    return _run_to_memory(_window_counts(stream, "1 hour"), "append", parts=1)
 
 
 @query(
@@ -850,8 +720,22 @@ def stream_demo_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain dropDuplicates), which is the production reason the
     WithinWatermark variant exists.
 
-    Purity precondition: key-set determinism additionally requires the
-    replay to be a SINGLE micro-batch (multi-batch replays could
-    re-emit a key after watermark eviction); ``demo_dedup_watermark``
-    asserts the staged source is one file — see its docstring."""
-    return demo_dedup_watermark(spark, sf_dir)
+    SINGLE-BATCH PRECONDITION (r13 ADVICE): the emitted key SET is a
+    pure function of the input only because ``_events_stream`` replays
+    ONE staged file with no maxFilesPerTrigger, i.e. one micro-batch —
+    a multi-batch replay could re-emit a key whose state the 10-minute
+    watermark already evicted between batches. Pinned below by
+    asserting the staged source really is a single file, so a future
+    trigger/staging change fails loudly instead of going
+    nondeterministic."""
+    ev = _events_stream(spark, sf_dir)
+    src_dir = scratch_path("stream_src", sf_dir)
+    staged = [f for f in os.listdir(src_dir) if f.endswith(".parquet")]
+    assert len(staged) == 1, (
+        f"dedup demo requires a single-file (single micro-batch) "
+        f"replay; staged: {staged}"
+    )
+    dedup = ev.withWatermark("ts", "10 minutes").dropDuplicatesWithinWatermark(
+        ["user_id", "event_type"]
+    )
+    return _run_to_memory(dedup.select("user_id", "event_type"), "append", parts=1)

@@ -242,3 +242,20 @@ def test_no_module_binds_a_top_level_name_twice():
         if dup:
             twice[str(p.relative_to(REPO))] = dup
     assert not twice, f"top-level names bound more than once: {twice}"
+
+
+def test_only_the_session_module_sets_confs():
+    """A temporary Spark conf is scoped with ``session.scoped_confs``,
+    which restores (or unsets) every key it set; ``spark.conf.set(`` is
+    written only there, in ``ensure_session_configs``, and in
+    ``operators/cbo.py``'s deliberate session-wide CBO switch."""
+    pkg = REPO / "python_etl_sample_spark"
+    allowed = {pkg / "session.py", pkg / "operators" / "cbo.py"}
+    found = [
+        f"{p.relative_to(REPO)}:{i}"
+        for p in sorted(pkg.rglob("*.py"))
+        if p not in allowed
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if "spark.conf.set(" in line
+    ]
+    assert not found, f"spark.conf.set( outside session.py and cbo.py: {found}"

@@ -69,6 +69,73 @@ def test_warm_load_launches_no_spark_job(spark):
     assert dict(stream.dtypes)["ts"] == "timestamp"
 
 
+def test_warm_staged_rebuild_launches_no_spark_job(spark):
+    """Once their scratch parquet is staged, the two timed staged
+    queries rebuild without a Spark job: each reads what it wrote with
+    the schema derived from the written frame, not by footer inference."""
+    from python_etl_sample_spark.operators.etl_quality import (
+        etl_incremental_rollup_merge,
+    )
+    from python_etl_sample_spark.operators.pipelines import pipeline_daily_etl
+
+    builds = (pipeline_daily_etl, etl_incremental_rollup_merge)
+    first = [build(spark, SF_DIR).dtypes for build in builds]
+    sc = spark.sparkContext
+    group = "test-warm-staged-rebuild"
+    sc.setJobGroup(group, "warm staged rebuilds")
+    try:
+        again = [build(spark, SF_DIR).dtypes for build in builds]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert again == first
+
+
+def test_written_schema_equals_the_inferred_schema(spark, tmp_path):
+    """``written_schema`` gives exactly the schema ``spark.read.parquet``
+    infers for the written frame — nullability (nested too) and the
+    partition column's move to the end included — for the shapes the
+    staged reads write: a partitioned projection, a decimal/date
+    rollup, a struct-valued state fold and the events with a
+    timestamp."""
+    from pyspark.sql import functions as F
+
+    from python_etl_sample_spark.scratch import written_schema
+    from python_etl_sample_spark.sources import table
+
+    ev = table(spark, SF_DIR, "events")
+    ev_ts = ev.withColumn("ts", F.col("ts").cast("timestamp"))
+    cases = {
+        "partitioned": (
+            table(spark, SF_DIR, "orders").select(
+                "o_orderkey",
+                "o_orderstatus",
+                (F.col("o_totalprice") * 2).alias("revenue"),
+            ),
+            ("o_orderstatus",),
+        ),
+        "rollup": (
+            ev.groupBy("event_type", F.to_date("ts").alias("day")).agg(
+                F.count(F.lit(1)).alias("n_partial"),
+                F.sum(F.col("value").cast("decimal(28,6)")).alias("s_partial"),
+            ),
+            (),
+        ),
+        "fold": (
+            ev_ts.groupBy("user_id").agg(
+                F.count(F.lit(1)).alias("n_events"),
+                F.max(F.struct("ts", F.lit(1).alias("one"))).alias("m"),
+            ),
+            (),
+        ),
+        "events": (ev_ts, ()),
+    }
+    for name, (df, parts) in cases.items():
+        path = str(tmp_path / name)
+        df.write.partitionBy(*parts).parquet(path)
+        assert written_schema(df, *parts) == spark.read.parquet(path).schema, name
+
+
 def test_ns_vintage_events_load_as_micros(spark, tmp_path):
     """The timestamp[ns] fixture vintage (read as bigint nanos under
     ``nanosAsLong``) comes out as ``timestamp_ntz`` at ``ts div 1000``
@@ -115,7 +182,7 @@ def test_ns_vintage_events_load_as_micros(spark, tmp_path):
     stream = _events_stream(spark, str(tmp_path))
     assert dict(stream.dtypes)["ts"] == "timestamp"
     drained = _run_to_memory(
-        stream.select("event_id", F.unix_micros("ts").alias("us")), "append"
+        stream.select("event_id", F.unix_micros("ts").alias("us")), "append", parts=8
     )
     assert [r["us"] for r in drained.orderBy("event_id").collect()] == micros
     merged = stream_demo_foreachbatch_merge(spark, str(tmp_path))

@@ -127,3 +127,25 @@ def test_plain_session_reads_the_get_spark_confs(spark):
     assert out.returncode == 0, out.stderr[-3000:]
     plain = json.loads(out.stdout.splitlines()[-1])
     assert plain == {k: spark.conf.get(k) for k in _SESSION_CONFS}
+
+
+def test_scoped_confs_restores_the_session(spark):
+    """``scoped_confs`` sets its confs inside the block and, on exit,
+    restores a prior value and unsets a key that was unset, also when
+    the block raises."""
+    from python_etl_sample_spark.session import scoped_confs
+
+    shuffle = "spark.sql.shuffle.partitions"
+    unset = "spark.python_etl_sample_spark.test.scopedConf"
+    before = spark.conf.get(shuffle)
+    assert spark.conf.get(unset, None) is None
+    with scoped_confs(spark, {shuffle: "3", unset: "on"}):
+        assert spark.conf.get(shuffle) == "3"
+        assert spark.conf.get(unset) == "on"
+    assert spark.conf.get(shuffle) == before
+    assert spark.conf.get(unset, None) is None
+    with pytest.raises(RuntimeError, match="inside"):
+        with scoped_confs(spark, {shuffle: "5", unset: "on"}):
+            raise RuntimeError("inside")
+    assert spark.conf.get(shuffle) == before
+    assert spark.conf.get(unset, None) is None

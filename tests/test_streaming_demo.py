@@ -1,6 +1,8 @@
 """Structured Streaming demo equivalence checks (SURVEY.md §2.9): the
 readStream path must produce the same answers as the graded batch path
-over a bounded replay."""
+over a bounded replay. Each demo pins its state-store partition count
+only while its stream starts, so the session's
+``spark.sql.shuffle.partitions`` is unchanged after every demo."""
 
 from __future__ import annotations
 
@@ -16,8 +18,17 @@ def _sorted_rows(df, cols):
     return sorted(tuple(r) for r in df.select(*cols).collect())
 
 
+def _run_demo(spark, fn):
+    """``fn(spark, SF_DIR)``, checking it leaves the session's shuffle
+    partition count as it found it."""
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    out = fn(spark, SF_DIR)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    return out
+
+
 def test_streaming_tumbling_equals_batch(spark):
-    stream_out = demo.demo_tumbling(spark, SF_DIR)
+    stream_out = _run_demo(spark, demo.stream_demo_tumbling)
     batch_out = REGISTRY["stream_tumbling"].fn(spark, SF_DIR)
     cols = ["wstart", "wend", "event_type", "n_events"]
     assert _sorted_rows(stream_out, cols) == _sorted_rows(batch_out, cols)
@@ -27,7 +38,7 @@ def test_streaming_session_equals_batch(spark):
     """Native session_window vs lag/cumsum sessionization: same session
     count and same per-user event totals (session_window's end is
     start+gap-padded, so compare counts, not end timestamps)."""
-    stream_out = demo.demo_session(spark, SF_DIR)
+    stream_out = _run_demo(spark, demo.stream_demo_session)
     batch_out = REGISTRY["stream_session"].fn(spark, SF_DIR)
     s = _sorted_rows(stream_out, ["user_id", "session_start", "n_events"])
     b = _sorted_rows(batch_out, ["user_id", "session_start", "n_events"])
@@ -35,7 +46,7 @@ def test_streaming_session_equals_batch(spark):
 
 
 def test_streaming_dedup_matches_batch_keys(spark):
-    stream_out = demo.demo_dedup_watermark(spark, SF_DIR)
+    stream_out = _run_demo(spark, demo.stream_demo_dedup)
     batch_out = REGISTRY["stream_dedup_keyed"].fn(spark, SF_DIR)
     assert _sorted_rows(stream_out, ["user_id", "event_type"]) == _sorted_rows(
         batch_out, ["user_id", "event_type"]
@@ -49,7 +60,7 @@ def test_streaming_stateful_totals_equal_batch(spark):
     decimal-exact sum)."""
     from pyspark.sql import functions as F
 
-    stream_out = demo.demo_stateful_running(spark, SF_DIR)
+    stream_out = _run_demo(spark, demo.stream_demo_stateful)
     batch = REGISTRY["stream_stateful_counts"].fn(spark, SF_DIR)
     batch_totals = batch.groupBy("user_id").agg(
         F.max("events_so_far").alias("events_total"),
@@ -71,8 +82,8 @@ def test_rate_source_equals_batch_twin(spark):
     aggregate over the same deterministic value range — the streaming
     engine, the bounded-capture idiom, and the synth mapping all
     cancel out. This is the source-agnosticism proof VERDICT r4 asked
-    for: _tumbling_agg is the same function object the file demo runs."""
-    stream_out = demo.demo_rate_source(spark)
+    for: _window_counts is the same function object the file demo runs."""
+    stream_out = _run_demo(spark, demo.stream_demo_rate_source)
     batch_out = demo.rate_source_batch_twin(spark)
     cols = ["wstart", "wend", "event_type", "n_events"]
     assert _sorted_rows(stream_out, cols) == _sorted_rows(batch_out, cols)
@@ -86,7 +97,6 @@ def test_stream_stream_join_equals_batch_join(spark):
     store and watermark eviction horizon end-to-end."""
     from pyspark.sql import functions as F
 
-    from python_etl_sample_spark.registry import REGISTRY
     from python_etl_sample_spark.sources import table
 
     # the batch loader yields timestamp_ntz; unix_micros needs TIMESTAMP
@@ -118,7 +128,7 @@ def test_stream_stream_join_equals_batch_join(spark):
             (F.unix_micros("p_ts") - F.unix_micros("c_ts")).alias("gap_micros"),
         )
     )
-    stream_out = REGISTRY["stream_demo_stream_join"].fn(spark, SF_DIR)
+    stream_out = _run_demo(spark, demo.stream_demo_stream_join)
     cols = ["click_id", "purchase_id", "user_id", "gap_micros"]
     assert _sorted_rows(stream_out, cols) == _sorted_rows(batch, cols)
     assert stream_out.count() > 0
@@ -131,7 +141,7 @@ def test_streaming_sliding_equals_batch(spark):
     from pyspark.sql import functions as F
 
     stream_out = (
-        REGISTRY["stream_demo_sliding"].fn(spark, SF_DIR)
+        _run_demo(spark, demo.stream_demo_sliding)
         .groupBy("wstart", "wend")
         .agg(F.sum("n_events").alias("n_events"))
     )
@@ -151,7 +161,7 @@ def test_streaming_watermark_late_drops_and_emits(spark):
 
     from python_etl_sample_spark.sources import table
 
-    out = REGISTRY["stream_demo_watermark_late"].fn(spark, SF_DIR)
+    out = _run_demo(spark, demo.stream_demo_watermark_late)
     rows = out.collect()
     assert rows, "late-replay demo emitted nothing"
     late_day = datetime.date(2024, 1, 5)
