@@ -258,6 +258,23 @@ def _unpack(cell):
     return ids, mat, norms
 
 
+def _topk_pairs(vals, va, vb, k: int):
+    """The first ``k`` pairs ``(vals, va, vb)`` under (-sim, vec_a, vec_b).
+
+    Only pairs at or above the k-th largest value can place (ties at
+    that value included), so only those are sorted; with ≤ k pairs or
+    any NaN (which ``np.partition`` orders differently) all are.
+    """
+    import numpy as np
+
+    if len(vals) > k and not np.isnan(vals).any():
+        kth = np.partition(vals, len(vals) - k)[len(vals) - k]
+        keep = vals >= kth
+        vals, va, vb = vals[keep], va[keep], vb[keep]
+    order = np.lexsort((vb, va, -vals))[:k]
+    return vals[order], va[order], vb[order]
+
+
 @query(
     "sim_cosine_topk",
     oracle=f"""
@@ -308,11 +325,8 @@ def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 qi, cj = np.nonzero(q_ids[:, None] < c_ids[None, :])
                 if len(qi) == 0:
                     continue
-                vals, va, vb = sims[qi, cj], q_ids[qi], c_ids[cj]
-                order = np.lexsort((vb, va, -vals))[:k]
-                yield pd.DataFrame(
-                    {"vec_a": va[order], "vec_b": vb[order], "sim": vals[order]}
-                )
+                vals, va, vb = _topk_pairs(sims[qi, cj], q_ids[qi], c_ids[cj], k)
+                yield pd.DataFrame({"vec_a": va, "vec_b": vb, "sim": vals})
 
     local = grid.mapInPandas(pair_topk, "vec_a bigint, vec_b bigint, sim double")
     return local.orderBy(F.desc("sim"), F.asc("vec_a"), F.asc("vec_b")).limit(k)

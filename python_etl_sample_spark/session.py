@@ -8,6 +8,12 @@ Required configs (FIXTURES.md "Load configs"):
 - UTC session timezone — keeps TimestampType ↔ timestamp_ntz ↔ DuckDB
   naive TIMESTAMP value-aligned.
 
+Python workers: ``get_spark`` sessions start them from
+``worker_daemon`` (the stock daemon, minus the per-task re-read of
+every zip archive the worker imported from), with the checkout on
+their ``PYTHONPATH`` so they import the package from any working
+directory. A session built elsewhere keeps the stock daemon.
+
 Scale posture: AQE on (skew-join split, partition coalescing),
 shuffle.partitions sized for local runs but overridable; on a real
 cluster this would be set ≈ 2-3× total cores or left to AQE.
@@ -113,6 +119,12 @@ _SESSION_CONFS = {
 }
 
 
+#: The directory holding the package: the Python workers, started by the
+#: JVM outside this interpreter, need it on their path to import the
+#: package (its worker daemon and any UDF defined in it).
+_CHECKOUT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def get_spark(app_name: str = "python-etl-sample-spark") -> SparkSession:
     """Build (or get) a SparkSession configured for this engine."""
     cpus = env_setting("SPARK_GRAFT_CPUS")
@@ -124,6 +136,8 @@ def get_spark(app_name: str = "python-etl-sample-spark") -> SparkSession:
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.driver.memory", driver_mem)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.daemon.module", "python_etl_sample_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _CHECKOUT)
     )
     return builder.getOrCreate()
 

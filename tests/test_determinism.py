@@ -48,3 +48,27 @@ def test_gemm_topk_invariant_to_partitioning(spark):
     finally:
         spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
     pd.testing.assert_frame_equal(a, b, check_exact=True)
+
+
+def test_gemm_cell_topk_selects_as_the_full_sort():
+    """A grid cell's partial top-k keeps exactly the pairs, in the order,
+    of a full sort under (-sim, vec_a, vec_b), boundary ties, signed
+    zeros and NaN included."""
+    import numpy as np
+
+    from python_etl_sample_spark.operators.similarity import _topk_pairs
+
+    rng = np.random.default_rng(7)
+    for trial in range(2000):
+        n = int(rng.integers(1, 90))
+        vals = rng.integers(-3, 4, n) / 4  # few distinct values: many ties
+        if trial % 5 == 0:
+            vals[rng.integers(0, n)] = np.nan
+        if trial % 9 == 0:
+            vals[: n // 2] = -0.0
+        va, vb = rng.integers(0, 12, n), rng.integers(0, 12, n)
+        k = int(rng.integers(1, 25))
+        order = np.lexsort((vb, va, -vals))[:k]
+        got = _topk_pairs(vals, va, vb, k)
+        for full, part in zip((vals[order], va[order], vb[order]), got):
+            np.testing.assert_array_equal(full, part)

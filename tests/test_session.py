@@ -18,6 +18,7 @@ import subprocess
 import sys
 from pathlib import Path
 
+import pandas as pd
 import pytest
 
 from python_etl_sample_spark.session import env_setting, get_spark
@@ -149,3 +150,58 @@ def test_scoped_confs_restores_the_session(spark):
             raise RuntimeError("inside")
     assert spark.conf.get(shuffle) == before
     assert spark.conf.get(unset, None) is None
+
+
+def test_get_spark_workers_run_the_package_zip_invalidation(spark):
+    """A pandas UDF's worker, forked from ``worker_daemon``, invalidates
+    zip-import caches through the package's function."""
+    from pyspark.sql import functions as F
+
+    def invalidation(v: pd.Series) -> pd.Series:
+        import zipimport
+
+        f = zipimport.zipimporter.invalidate_caches
+        return pd.Series([f"{f.__module__}.{f.__qualname__}"] * len(v))
+
+    udf = F.pandas_udf(invalidation, "string")
+    (row,) = spark.range(1).select(udf("id").alias("f")).collect()
+    assert row.f == "python_etl_sample_spark.worker_daemon.invalidate_caches"
+
+
+def test_zip_invalidation_rereads_only_a_changed_archive(tmp_path, monkeypatch):
+    """Once an archive's directory is stamped, invalidating caches reads
+    no zip directory while the archive is unchanged; a rewritten archive
+    is re-read, so a module added to it imports."""
+    import importlib
+    import zipfile
+    import zipimport
+
+    from python_etl_sample_spark import worker_daemon
+
+    archive = tmp_path / "modules.zip"
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("zipped_first.py", "X = 1\n")
+    monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches", worker_daemon.invalidate_caches)
+    monkeypatch.syspath_prepend(str(archive))
+    reads = []
+    read_directory = zipimport._read_directory
+    monkeypatch.setattr(
+        zipimport, "_read_directory", lambda path: reads.append(path) or read_directory(path)
+    )
+    try:
+        assert importlib.import_module("zipped_first").X == 1
+        importlib.invalidate_caches()  # stamps the archive
+        reads.clear()
+        for _ in range(3):
+            importlib.invalidate_caches()
+        assert reads == []
+        with zipfile.ZipFile(archive, "w") as z:
+            z.writestr("zipped_first.py", "X = 1\n")
+            z.writestr("zipped_second.py", "Y = 2\n")
+        importlib.invalidate_caches()
+        assert reads == [str(archive)]
+        assert importlib.import_module("zipped_second").Y == 2
+    finally:
+        for name in ("zipped_first", "zipped_second"):
+            sys.modules.pop(name, None)
+        sys.path_importer_cache.pop(str(archive), None)
